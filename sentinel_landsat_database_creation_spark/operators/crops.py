@@ -3,16 +3,22 @@
 
 The reference's ``little_pair`` walks a centerline mask sequentially,
 slicing aligned HR/LR crops and filtering them by data-quality
-percentages (data_pair/fct_data_extraction.py:29-157). Here the same
-semantics decompose into set-based DataFrame stages, each embarrassingly
-parallel at 100 TB:
+percentages (data_pair/fct_data_extraction.py:29-157). Stage 4 has no
+cross-pair dependency, so it runs as ONE per-pair Arrow kernel
+(``crop_pairs``): the mask's candidate centers are collected once on
+the driver, and each pair row crosses into NumPy once to be sliced,
+quality-gated, overlap-suppressed and emitted as survivor rows.
 
   mask -> candidate centers (posexplode + bounds filter)     [op 35+13]
-       x scene pairs -> per-band HR/LR slices (native exprs) [ops 43/44/20]
-       -> quality predicate (higher-order array counts)      [ops 14/26]
-       -> overlap suppression: compat greedy walk (per-group
-          applyInPandas over centers only — never pixels) or
-          native grid-bucket dedup                           [ops 33/34]
+       x pair row -> per-band HR/LR windows (one gather)     [ops 43/44/20]
+       -> quality gate (integer-exact counts)                [ops 14/26]
+       -> overlap suppression: compat greedy walk or native
+          grid-cell minimum                                  [ops 33/34]
+       -> survivor payload rows (CROP_PAIR_SCHEMA)
+
+The JVM-side building blocks (``slice_crop_pairs``, ``quality_flag``,
+``suppress_overlap_grid``) express the same semantics as Spark
+expressions for the registry's small crop entries.
 
 Compat quirks reproduced exactly (flagged, never silently):
 - bounds filter upper limits come from the COUNT of centerline points,
@@ -30,12 +36,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    IntegerType,
-    LongType,
-    StructField,
-    StructType,
-)
 
 from ..functions.arrays import (
     count_equal,
@@ -95,6 +95,21 @@ def candidate_centers(
             & (F.col("c") < F.col("width") - half)
         )
     return bounded.drop("height", "width")
+
+
+def collected_centers(
+    mask: DataFrame, batch_size: int, compat_bounds: bool = True
+) -> dict:
+    """``candidate_centers`` collected to the driver as {mask_id: [(ord,
+    r, c), ...] in np.where order} — the input of the per-pair Arrow
+    kernels. Bounded by the masks' centerlines BY DESIGN (~4k rows at a
+    256x256 dense mask), never by corpus size."""
+    out: dict = {}
+    rows = candidate_centers(mask, batch_size, compat_bounds)
+    rows = rows.select("mask_id", "ord", "r", "c").orderBy("mask_id", "ord")
+    for m, o, r, c in rows.collect():
+        out.setdefault(m, []).append((int(o), int(r), int(c)))
+    return out
 
 
 def slice_crop_pairs(
@@ -250,31 +265,43 @@ def slice_crop_pairs(
     )
 
 
-def quality_flag(
-    batch_size: int, scale: int, n_bands: int = 4, compat: bool = True
-) -> Column:
-    """Op 14: the acceptance predicate over (hr_crop, lr_crop) columns.
-
+def quality_gate(
+    nz_hr, inf_hr, nz_lr, nine_lr, batch_size: int, scale: int,
+    n_bands: int = 4, compat: bool = True,
+):
+    """Op 14's acceptance predicate over per-crop cell counts (Spark
+    Columns or NumPy arrays alike — the one definition both engines
+    use). Denominators are fixed at b*b*n (HR) and (b/s)^2*n (LR);
     compat=True reproduces the as-built inf denominator (LR height x HR
-    width x n, fct_data_extraction.py:133); False uses the HR pixel
-    count. Percentage comparisons are restated as exact integer-count
-    comparisons (count*100 >= 99*denom), so no float drift.
-    """
+    width x n, fct_data_extraction.py:133), False uses the HR pixel
+    count. Percentages are restated as exact integer-count comparisons
+    (count*100 >= 99*denom), so no float drift."""
     b, s = batch_size, scale
     hr_px = b * b * n_bands
     lr_px = (b // s) * (b // s) * n_bands
     inf_denom = (b // s) * b * n_bands if compat else hr_px
-
-    nz_hr = sum_over_bands(F.col("hr_crop"), count_nonzero)
-    nz_lr = sum_over_bands(F.col("lr_crop"), count_nonzero)
-    nine_lr = sum_over_bands(F.col("lr_crop"), lambda a: count_equal(a, NODATA))
-    inf_hr = sum_over_bands(F.col("hr_crop"), count_inf)
-
     return (
         (nz_hr * 100 >= 99 * hr_px)
         & (nz_lr * 100 >= 99 * lr_px)
-        & (nine_lr * 100 <= 1 * lr_px)
-        & (inf_hr * 100 <= 1 * inf_denom)
+        & (nine_lr * 100 <= lr_px)
+        & (inf_hr * 100 <= inf_denom)
+    )
+
+
+def quality_flag(
+    batch_size: int, scale: int, n_bands: int = 4, compat: bool = True
+) -> Column:
+    """Op 14 over (hr_crop, lr_crop) array columns: ``quality_gate`` on
+    the JVM-side per-band counts."""
+    return quality_gate(
+        sum_over_bands(F.col("hr_crop"), count_nonzero),
+        sum_over_bands(F.col("hr_crop"), count_inf),
+        sum_over_bands(F.col("lr_crop"), count_nonzero),
+        sum_over_bands(F.col("lr_crop"), lambda a: count_equal(a, NODATA)),
+        batch_size,
+        scale,
+        n_bands,
+        compat,
     )
 
 
@@ -312,52 +339,31 @@ def _greedy_walk(rows, batch_size: int, pct: float, overlap: bool):
     return kept
 
 
-def suppress_overlap_greedy(
-    flagged: DataFrame,
-    batch_size: int,
-    pct: float,
-    overlap: bool = True,
-    shuffle_seed: int | None = None,
-) -> DataFrame:
-    """Op 33 (and 34): per scene-pair sequential greedy suppression via
-    applyInPandas — parallel ACROSS pairs, faithful WITHIN a pair.
+def _grid_keep(r, c, ok, stride: int):
+    """suppress_overlap_grid within one pair: the minimum (r, c) of the
+    quality-passing candidates per stride cell, in row-major cell order
+    (adjacent crops compress ~2% better in Parquet than (r, c) order)."""
+    import numpy as np
 
-    Input needs (pair_id, r, c, ord, ok). Candidates walk in np.where
-    order (``ord``), or in a seeded shuffled order when ``shuffle_seed``
-    is set (the fct_data_extraction_shuffle.py variant, made
-    reproducible). Returns kept (pair_id, r, c).
-    """
-    import pandas as pd
+    sel = np.flatnonzero(ok)
+    sel = sel[np.lexsort((c[sel], r[sel]))]
+    cell = (r[sel] // stride) << 32 | c[sel] // stride
+    _, first = np.unique(cell, return_index=True)
+    return sel[first]
 
-    schema = StructType(
-        [
-            StructField("pair_id", LongType(), False),
-            StructField("r", IntegerType(), False),
-            StructField("c", IntegerType(), False),
-        ]
-    )
 
-    def walk(key, pdf):
-        if shuffle_seed is not None:
-            pdf = pdf.sample(frac=1.0, random_state=shuffle_seed + key[0])
-        else:
-            pdf = pdf.sort_values("ord")
-        kept = _greedy_walk(
-            list(zip(pdf["r"], pdf["c"], pdf["ok"])), batch_size, pct, overlap
-        )
-        return pd.DataFrame(
-            {
-                "pair_id": [key[0]] * len(kept),
-                "r": [k[0] for k in kept],
-                "c": [k[1] for k in kept],
-            }
-        )
+def _walk_keep(r, c, ok, seed, batch_size: int, pct: float, overlap: bool):
+    """_greedy_walk within one pair over the ord-sorted candidates, or
+    over RandomState(seed)'s permutation of them; the kept candidates'
+    indices, in walk order."""
+    import numpy as np
 
-    return (
-        flagged.select("pair_id", "r", "c", "ord", "ok")
-        .groupBy("pair_id")
-        .applyInPandas(walk, schema)
-    )
+    n = len(r)
+    order = np.arange(n) if seed is None else np.random.RandomState(seed).permutation(n)
+    rows = zip(r[order].tolist(), c[order].tolist(), ok[order].tolist())
+    at = {rc: k for k, rc in enumerate(zip(r.tolist(), c.tolist()))}
+    kept = _greedy_walk(list(rows), batch_size, pct, overlap)
+    return np.array([at[rc] for rc in kept], dtype=np.int64)
 
 
 def suppress_overlap_grid(
@@ -393,3 +399,181 @@ def suppress_overlap_grid(
         .agg(F.min(F.struct("r", "c")).alias("rc"))
         .select("pair_id", F.col("rc.r").alias("r"), F.col("rc.c").alias("c"))
     )
+
+
+# ---------------------------------------------------------------------------
+# the per-pair Arrow kernel (NumPy; runs inside mapInArrow)
+
+
+def window_index(r0, c0, size: int, width: int, n_px: int):
+    """K windows of ``slice2d`` at once: flat gather indices (K, size,
+    size) clipped into one band, and the mask of the cells slice2d
+    keeps — columns past the right edge and cells past the end of the
+    flattened band drop out, so a truncated window counts (and emits)
+    only its present cells, row-major, exactly as slice2d does."""
+    import numpy as np
+
+    d = np.arange(size, dtype=np.int64)
+    cols = c0[:, None] + d
+    flat = (r0[:, None] + d)[:, :, None] * width + cols[:, None, :]
+    valid = (cols < width)[:, None, :] & (flat < n_px)
+    return np.clip(flat, 0, n_px - 1), valid
+
+
+def window_counts(bands, idx, valid):
+    """Per window: (nonzero, == NODATA, isinf) cell counts summed over
+    the (n_bands, n_px) ``bands``, valid cells only — the NumPy twin of
+    quality_flag's count_nonzero/count_equal/count_inf."""
+    import numpy as np
+
+    nz, nine, inf = (np.zeros(len(idx), dtype=np.int64) for _ in range(3))
+    for band in bands:
+        v = band[idx]
+        nz += ((v != 0.0) & valid).sum(axis=(1, 2))
+        nine += ((v == NODATA) & valid).sum(axis=(1, 2))
+        inf += (np.isinf(v) & valid).sum(axis=(1, 2))
+    return nz, nine, inf
+
+
+def gate_windows(hr, lr, hrw, lrw, r0, c0, batch_size, scale, compat, cache, key):
+    """One pair's candidates (HR window corners r0, c0) through the
+    quality gate -> (ok, HR nonzero counts, (HR, LR) windows); every
+    pair of one mask ``key`` and raster shape reuses ``cache``'s index."""
+    wins = []
+    for side, bands, width, rr, cc, size in (
+        ("hr", hr, hrw, r0, c0, batch_size),
+        ("lr", lr, lrw, r0 // scale, c0 // scale, batch_size // scale),
+    ):
+        k = (key, side, width, bands.shape[1])
+        if k not in cache:
+            cache[k] = window_index(rr, cc, size, width, bands.shape[1])
+        wins.append(cache[k])
+    nz_hr, _, inf_hr = window_counts(hr, *wins[0])
+    nz_lr, nine_lr, _ = window_counts(lr, *wins[1])
+    ok = quality_gate(nz_hr, inf_hr, nz_lr, nine_lr, batch_size, scale, compat=compat)
+    return ok, nz_hr, wins
+
+
+def band_rows(col):
+    """Per row of a list<list<float>> Arrow column, its bands as one
+    (n_bands, n_px) NumPy array (None for a row without cells)."""
+    outer = col.offsets.to_numpy()
+    bands = col.flatten()
+    inner = bands.offsets.to_numpy()
+    vals = bands.flatten().to_numpy(zero_copy_only=False)
+    lo = inner[outer - outer[0]] - inner[0]
+    return [
+        vals[a:b].reshape(n, -1) if b > a else None
+        for a, b, n in zip(lo[:-1], lo[1:], outer[1:] - outer[:-1])
+    ]
+
+
+def _payload(bands, idx, valid, keep, typ):
+    """The kept windows' valid cells as a list<list<float>> Arrow array
+    — one row per survivor, one slice2d-ordered crop per band."""
+    import numpy as np
+    import pyarrow as pa
+
+    def offsets(lens):
+        return pa.array(np.concatenate([[0], np.cumsum(lens)]), pa.int32())
+
+    g = np.moveaxis(bands[:, idx[keep]], 0, 1)  # (survivors, bands, h, w)
+    m = np.broadcast_to(valid[keep][:, None], g.shape)
+    inner = pa.ListArray.from_arrays(
+        offsets(m.sum(axis=(2, 3)).ravel()),
+        pa.array(g[m].astype(np.float32)),
+        type=typ.value_type,
+    )
+    return pa.ListArray.from_arrays(
+        offsets(np.full(len(keep), len(bands))), inner, type=typ
+    )
+
+
+def crop_pairs(
+    pair_tensors: DataFrame,
+    centers: dict,
+    batch_size: int,
+    scale: int,
+    pct: float,
+    compat: bool = True,
+    overlap: bool = True,
+    shuffle_seed: int | None = None,
+) -> DataFrame:
+    """All of stage 4 as one mapInArrow over the pair tensors: each pair
+    row crosses into NumPy ONCE and only its survivors' pixels come
+    back, as CROP_PAIR_SCHEMA rows.
+
+    ``pair_tensors`` carries (pair_id, hr_bands, hr_width, lr_bands,
+    lr_width), bands as arrays of flattened row-major rasters; rows
+    with int(hr_width / lr_width) != scale are dropped (the reference's
+    assert at :91 as a validation filter). ``centers`` is
+    ``collected_centers``' output. A ``mask_id`` column on the pairs
+    keys each pair to its own mask's centers; without one every pair
+    meets the distinct union of all masks' centers (the reference's
+    single fixed mask, fct_data_extraction.py:50,61).
+
+    Suppression: compat=True runs ``_greedy_walk`` over the candidates
+    in ``ord`` order or, with ``shuffle_seed``, over the permutation
+    ``RandomState((shuffle_seed + pair_id) % 2**32)`` draws of that
+    ord-sorted list (fct_data_extraction_shuffle.py, made reproducible
+    and independent of how rows arrive); compat=False keeps the minimum
+    (r, c) per stride cell, as ``suppress_overlap_grid``.
+
+    Arrow batch budget: one in-flight input batch (<= arrow.
+    maxRecordsPerBatch rows of one partition) per concurrent task — size
+    tensor partitions to a few pair payloads (crop_volume: <= 4 rows)."""
+    from ..schemas import CROP_PAIR_SCHEMA
+
+    half, stride = batch_size // 2, max(int(batch_size * pct), 1)
+    keyed = "mask_id" in pair_tensors.columns
+    if not keyed:
+        centers = {None: sorted({x for v in centers.values() for x in v})}
+
+    def run(batches):
+        import numpy as np
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        schema = to_arrow_schema(CROP_PAIR_SCHEMA)
+        cand = {  # mask -> (r, c) arrays in ord order
+            m: np.array(v, dtype=np.int64).reshape(-1, 3).T[1:]
+            for m, v in centers.items()
+        }
+        cache: dict = {}
+        for batch in batches:
+            col = batch.column
+            ids = [col(f).to_pylist() for f in ("pair_id", "hr_width", "lr_width")]
+            keys = col("mask_id").to_pylist() if keyed else [None] * batch.num_rows
+            bands = [band_rows(col(f)) for f in ("hr_bands", "lr_bands")]
+            for pid, hrw, lrw, key, hr, lr in zip(*ids, keys, *bands):
+                if key not in cand or hr is None or lr is None or not (
+                    hrw and lrw and int(hrw / lrw) == scale
+                ):
+                    continue
+                r, c = cand[key]
+                ok, _, (hw, lw) = gate_windows(hr, lr, hrw, lrw, r - half, c - half,
+                                               batch_size, scale, compat, cache, key)
+                if compat:
+                    seed = None if shuffle_seed is None else (shuffle_seed + pid) % 2**32
+                    keep = _walk_keep(r, c, ok, seed, batch_size, pct, overlap)
+                else:
+                    keep = _grid_keep(r, c, ok, stride)
+                n = len(keep)
+                if n == 0:
+                    continue
+                yield pa.RecordBatch.from_arrays(
+                    [
+                        pa.array(np.full(n, pid, dtype=np.int64)),
+                        pa.array(r[keep].astype(np.int32)),
+                        pa.array(c[keep].astype(np.int32)),
+                        _payload(hr, *hw, keep, schema.field("hr_pixels").type),
+                        _payload(lr, *lw, keep, schema.field("lr_pixels").type),
+                        pa.array(np.full(n, batch_size, dtype=np.int32)),
+                        pa.array(np.full(n, batch_size // scale, dtype=np.int32)),
+                    ],
+                    schema=schema,
+                )
+
+    cols = ["pair_id", "hr_bands", "hr_width", "lr_bands", "lr_width"]
+    keyed_cols = ["mask_id"] if keyed else []
+    return pair_tensors.select(*cols, *keyed_cols).mapInArrow(run, CROP_PAIR_SCHEMA)

@@ -17,13 +17,15 @@ planted at ~1/600 cell rates, which puts every quality-gate branch on
 both sides of its threshold across the corpus.
 
 Scale shape: tensors are n_pairs rows (each carrying its flattened
-band arrays — the E3 handoff shape), centers broadcast, slicing and
-quality run as codegen'd higher-order functions, and suppression is
-either the native grid dedup (exact DuckDB oracle) or the faithful
-per-pair greedy walk (`applyInPandas` over centers ONLY — pixels never
-enter Python; tests/test_plans.py pins that from the executed plan).
-At 100 TB the same plan holds: pairs partition freely, per-pair state
-is bounded by one mask's center list.
+band arrays — the E3 handoff shape) and the centers are collected once
+on the driver. The native entry runs build_crop_dataset's per-pair
+Arrow kernel (slice, quality gate, grid suppression and survivor
+payload in one mapInArrow; exact DuckDB oracle); the greedy entry runs
+the same NumPy gather/count helpers in a metadata-out Arrow stage
+followed by the faithful per-pair walk over metadata rows only.
+tests/test_plans.py pins both Python boundaries from the executed
+plan. At 100 TB the same plan holds: pairs partition freely, per-pair
+state is bounded by one mask's center list.
 """
 
 from __future__ import annotations
@@ -32,7 +34,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.arrays import count_nonzero, sum_over_bands
-from ..operators.crops import candidate_centers
+from ..operators.crops import collected_centers
 from .satellite import CropConfig, build_crop_dataset
 
 BATCH = 12
@@ -117,7 +119,7 @@ def volume_mask(spark: SparkSession, width: int) -> DataFrame:
 
 
 # Concurrent-task cap for the tensor stages: each pair task's working
-# set is ~10-20 MB (band generation + one chunk's crops), and the bench
+# set is ~10-20 MB (band generation + one pair's windows), and the bench
 # session runs a deliberate 1 GB heap that may already hold hundreds of
 # MB of memoized checkpoint blocks from earlier registry queries.
 # 28-32 concurrent pair tasks OOMed the WARM session (measured, r4);
@@ -143,9 +145,8 @@ def volume_tensors(
     every downstream narrow stage (generation, slicing, quality) runs
     at most that many concurrent heavy tasks — no shuffle involved.
     ``slices`` overrides the split count when the consumer's unit of
-    work is the PARTITION rather than the row (the r14 Arrow metadata
-    path bounds its input batch bytes this way; default unchanged so
-    every pinned consumer plan is byte-identical)."""
+    work is the PARTITION rather than the row (the Arrow kernels bound
+    their input batch bytes this way)."""
     pid = F.col("id")
     if slices is None:
         slices = min(TENSOR_SLOTS, n_pairs)
@@ -158,31 +159,34 @@ def volume_tensors(
     )
 
 
+def _fixture_tensors(spark: SparkSession, p: dict) -> DataFrame:
+    """The fixture's pair tensors, materialized once per session and
+    shared by both volume entries (~230 MB of evictable MEMORY_AND_DISK
+    blocks at sf0.1). The scale tier regenerates them instead (see
+    params_for), in <= 4-row slices so each Arrow input batch of the
+    per-pair kernels stays a few payloads (~9 MB)."""
+    from ..operators.dedup import _memo_checkpoint
+
+    n, hrw, lrw = p["n_pairs"], p["hrw"], p["lrw"]
+    if not p.get("memo", True):
+        return volume_tensors(spark, n, hrw, lrw, slices=-(-n // 4))
+    return _memo_checkpoint(
+        spark.range(1),
+        ("crop_volume_tensors", n, hrw, lrw),
+        lambda: volume_tensors(spark, n, hrw, lrw),
+    )
+
+
 def crop_volume_dataset(
     spark: SparkSession, sf_dir: str, compat: bool
 ) -> DataFrame:
-    from ..operators.dedup import _memo_checkpoint
-
     p = params_for(sf_dir)
-    mask = volume_mask(spark, p["hrw"])
-    # The tensor generation expressions re-run per consuming phase (two
-    # phases x two registry queries = four generations of the same 28
-    # rows). Materialize once per session: ~230 MB of MEMORY_AND_DISK
-    # blocks at sf0.1 — storage is evictable under pressure (unlike the
-    # execution spikes that motivated TENSOR_SLOTS), and the blocks are
-    # shared by both the native and greedy volume queries.
-    if p.get("memo", True):
-        tensors = _memo_checkpoint(
-            spark.range(1),
-            ("crop_volume_tensors", p["n_pairs"], p["hrw"], p["lrw"]),
-            lambda: volume_tensors(spark, p["n_pairs"], p["hrw"], p["lrw"]),
-        )
-    else:  # scale tier: see params_for — regenerate instead of caching
-        tensors = volume_tensors(spark, p["n_pairs"], p["hrw"], p["lrw"])
     cfg = CropConfig(
         batch_size=BATCH, scale=SCALE, pct_overlap=PCT, compat=compat
     )
-    return build_crop_dataset(tensors, mask, cfg)
+    return build_crop_dataset(
+        _fixture_tensors(spark, p), volume_mask(spark, p["hrw"]), cfg
+    )
 
 
 def _summarize(crops: DataFrame) -> DataFrame:
@@ -190,23 +194,13 @@ def _summarize(crops: DataFrame) -> DataFrame:
     the total HR nonzero-cell count over survivors (ties the PIXEL
     payloads into the hash, not just which centers survived)."""
     nz = sum_over_bands(F.col("hr_pixels"), count_nonzero)
-    return (
-        crops.select("pair_id", "center_r", "center_c", nz.alias("nz"))
-        .groupBy("pair_id")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_crops"),
-            F.sum("center_r").cast("long").alias("sum_r"),
-            F.sum("center_c").cast("long").alias("sum_c"),
-            F.sum("nz").cast("long").alias("nz_hr_total"),
+    return _summarize_meta(
+        crops.select(
+            "pair_id",
+            F.col("center_r").alias("r"),
+            F.col("center_c").alias("c"),
+            nz.alias("nz_hr"),
         )
-        .select(
-            F.col("pair_id").cast("long").alias("pair_id"),
-            "n_crops",
-            "sum_r",
-            "sum_c",
-            "nz_hr_total",
-        )
-        .orderBy("pair_id")
     )
 
 
@@ -217,51 +211,21 @@ def q_crop_volume(spark: SparkSession, sf: str) -> DataFrame:
     return _summarize(crop_volume_dataset(spark, sf, compat=False))
 
 
-def _collected_centers(mask: DataFrame, batch_size: int) -> list:
-    """Compat-bounds candidate centers collected to the driver as
-    (ord, r, c) rows in np.where order — the SAME metadata-bounded
-    list the HOF plan materialized into its broadcast ``ctrs`` array
-    (slice_crop_pairs packs per-mask collect_list structs); here it
-    feeds the Arrow stage's closure instead. Bounded by one mask's
-    centerline BY DESIGN (~4k rows at the volume raster), never by
-    corpus size."""
-    rows = (
-        candidate_centers(mask, batch_size, compat_bounds=True)
-        .select("ord", "r", "c")
-        .orderBy("ord")
-        .collect()
-    )
-    return [(int(x["ord"]), int(x["r"]), int(x["c"])) for x in rows]
-
-
 def _greedy_candidate_meta_arrow(
     tensors: DataFrame, centers: list, batch_size: int, scale: int
 ) -> DataFrame:
     """Phase 1 of the compat volume pipeline as ONE NumPy mapInArrow
-    stage (r14, guide §4.2/§4.5; r13 VERDICT item 1): per candidate
-    crop, the quality counts and the HR nonzero count, emitted as
-    METADATA rows (pair_id, ord, r, c, ok, nz_hr) — ~30 B/row.
-
-    What it replaces, measured (r13 ledger + plans/r14 dumps): the
-    codegen'd higher-order-function slicing materialized BOTH crop
-    arrays per candidate (~5 KB x 103k candidates at sf0.1) and ran
-    four count filters over them, then a SECOND slice pass re-cut the
-    survivors so _summarize could count nz_hr — per-pair-codegen
-    throughput was the measured bottleneck (r4, re-confirmed r13).
-    Here the band payload crosses ONCE per pair row into NumPy (the
-    §8 discipline: heavy bytes move once, decisions flow as metadata),
-    all candidates of a pair are sliced as one fancy-indexed gather,
-    and no second pass exists — nz_hr rides the metadata into the walk.
-
-    Exact-equivalence notes (oracle + A/B pinned):
-    - slice2d's NumPy edge semantics (rows past the bottom vanish,
-      per-row width clamps at the right edge) are reproduced with an
-      explicit validity mask over clipped gather indices; quality
-      counts only ever count VALID cells, and the fixed denominators
-      (576/64/192 at batch 12) stay as quality_flag defines them.
-    - values arrive bit-identical (the same generated doubles,
-      Arrow-transported), comparisons are exact (!=0, ==-9999, isinf),
-      counts are integers — no float drift anywhere.
+    stage (r14): per candidate crop, the quality flag and the HR nonzero
+    count, emitted as METADATA rows (pair_id, ord, r, c, ok, nz_hr) —
+    ~30 B/row. The band payload crosses ONCE per pair row into NumPy and
+    all candidates of a pair are gated by build_crop_dataset's gather
+    and count (operators/crops.py:gate_windows — slice2d's edge
+    truncation, valid cells only, quality_gate's fixed denominators;
+    exact integer counts over the bit-identical Arrow-transported
+    values). No second slicing pass: nz_hr rides the metadata into the
+    walk. It replaced the higher-order-function slicing that
+    materialized both crop arrays per candidate (4.17 -> 1.32 s warm at
+    sf0.1, OPTIMIZATION_r14.md).
 
     Arrow direct-memory budget (the r13 VERDICT's explicit condition;
     same arena math as plans/scene_volume.py): one in-flight input
@@ -270,119 +234,38 @@ def _greedy_candidate_meta_arrow(
     ~2.3 MB/row ≈ 9 MB/batch -> ≤ 8 x ~9 MB in flight plus the
     per-task netty arena (32 MB chunks), well inside the 1 GB default
     direct cap. The no-memo scale tier generates ceil(n_pairs/4)
-    slices for the same ≤4-row bound (q_crop_volume_greedy)."""
+    slices for the same ≤4-row bound (_fixture_tensors)."""
+    from ..operators.crops import band_rows, gate_windows
+
     half = batch_size // 2
-    lr_size = batch_size // scale
-    n_bands = 4
-    hr_px = batch_size * batch_size * n_bands
-    lr_px = lr_size * lr_size * n_bands
-    inf_denom = lr_size * batch_size * n_bands  # compat denominator
 
     def run(batches):
         import numpy as np
         import pyarrow as pa
 
-        ord_a = np.array([x[0] for x in centers], dtype=np.int64)
-        r_a = np.array([x[1] for x in centers], dtype=np.int64)
-        c_a = np.array([x[2] for x in centers], dtype=np.int64)
-        templates: dict = {}  # (n_px, width, side) -> (idx, valid)
-
-        def template(n_px: int, width: int, r0, c0, size: int):
-            key = (n_px, width, size)
-            t = templates.get(key)
-            if t is None:
-                height = n_px // width
-                d = np.arange(size, dtype=np.int64)
-                rows = r0[:, None] + d  # (K, size)
-                cols = c0[:, None] + d
-                valid = (rows < height)[:, :, None] & (cols < width)[
-                    :, None, :
-                ]
-                idx = np.clip(
-                    rows[:, :, None] * width + cols[:, None, :], 0, n_px - 1
-                )
-                t = templates[key] = (idx, valid)
-            return t
-
-        def counts(flat_bands, n_px, width, r0, c0, size):
-            """Per-candidate (nonzero, eq-nodata, isinf) counts summed
-            over the 4 bands, valid cells only."""
-            idx, valid = template(n_px, width, r0, c0, size)
-            nz = np.zeros(len(r0), dtype=np.int64)
-            nine = np.zeros(len(r0), dtype=np.int64)
-            inf = np.zeros(len(r0), dtype=np.int64)
-            for b in range(flat_bands.shape[0]):
-                vals = flat_bands[b][idx]
-                nz += ((vals != 0.0) & valid).sum(axis=(1, 2))
-                nine += ((vals == -9999.0) & valid).sum(axis=(1, 2))
-                inf += (np.isinf(vals) & valid).sum(axis=(1, 2))
-            return nz, nine, inf
-
+        o, r, c = np.array(centers, dtype=np.int64).reshape(-1, 3).T
+        r0, c0, cache = r - half, c - half, {}
         for batch in batches:
             n = batch.num_rows
             if n == 0:
                 continue
-            pid = batch.column("pair_id").to_numpy()
-            hrw_col = batch.column("hr_width").to_numpy()
-            lrw_col = batch.column("lr_width").to_numpy()
-            hr_flat = (
-                batch.column("hr_bands")
-                .flatten()
-                .flatten()
-                .to_numpy(zero_copy_only=False)
-                .reshape(n, n_bands, -1)
-            )
-            lr_flat = (
-                batch.column("lr_bands")
-                .flatten()
-                .flatten()
-                .to_numpy(zero_copy_only=False)
-                .reshape(n, n_bands, -1)
-            )
-            r0 = r_a - half
-            c0 = c_a - half
-            lr_r0 = r0 // scale
-            lr_c0 = c0 // scale
-            out_pid, out_ok, out_nz = [], [], []
-            for i in range(n):
-                nz_hr, _, inf_hr = counts(
-                    hr_flat[i],
-                    hr_flat.shape[2],
-                    int(hrw_col[i]),
-                    r0,
-                    c0,
-                    batch_size,
-                )
-                nz_lr, nine_lr, _ = counts(
-                    lr_flat[i],
-                    lr_flat.shape[2],
-                    int(lrw_col[i]),
-                    lr_r0,
-                    lr_c0,
-                    lr_size,
-                )
-                ok = (
-                    (nz_hr * 100 >= 99 * hr_px)
-                    & (nz_lr * 100 >= 99 * lr_px)
-                    & (nine_lr * 100 <= lr_px)
-                    & (inf_hr * 100 <= inf_denom)
-                )
-                out_pid.append(np.full(len(r_a), pid[i], dtype=np.int64))
-                out_ok.append(ok)
-                out_nz.append(nz_hr)
-            k = len(out_pid)
+            pids = batch.column("pair_id").to_pylist()
+            hrw = batch.column("hr_width").to_pylist()
+            lrw = batch.column("lr_width").to_pylist()
+            hr, lr = (band_rows(batch.column(f)) for f in ("hr_bands", "lr_bands"))
+            ok, nz = zip(*(
+                gate_windows(hr[i], lr[i], hrw[i], lrw[i], r0, c0,
+                             batch_size, scale, True, cache, None)[:2]
+                for i in range(n)
+            ))
             yield pa.RecordBatch.from_arrays(
                 [
-                    pa.array(np.concatenate(out_pid), type=pa.int64()),
-                    pa.array(np.tile(ord_a, k), type=pa.int64()),
-                    pa.array(
-                        np.tile(r_a.astype(np.int32), k), type=pa.int32()
-                    ),
-                    pa.array(
-                        np.tile(c_a.astype(np.int32), k), type=pa.int32()
-                    ),
-                    pa.array(np.concatenate(out_ok), type=pa.bool_()),
-                    pa.array(np.concatenate(out_nz), type=pa.int64()),
+                    pa.array(np.repeat(np.array(pids, dtype=np.int64), len(r))),
+                    pa.array(np.tile(o, n), type=pa.int64()),
+                    pa.array(np.tile(r, n), type=pa.int32()),
+                    pa.array(np.tile(c, n), type=pa.int32()),
+                    pa.array(np.concatenate(ok), type=pa.bool_()),
+                    pa.array(np.concatenate(nz), type=pa.int64()),
                 ],
                 names=["pair_id", "ord", "r", "c", "ok", "nz_hr"],
             )
@@ -396,19 +279,14 @@ def _greedy_kept_meta(
     meta: DataFrame, batch_size: int, pct: float
 ) -> DataFrame:
     """The faithful per-pair greedy walk (operators/crops.py:
-    _greedy_walk — the same kernel suppress_overlap_greedy runs) over
+    _greedy_walk — the walk build_crop_dataset's kernel runs) over
     the Arrow stage's metadata rows, CARRYING nz_hr through, so no
     second slicing pass (and no join back to a re-evaluated subtree)
     is needed to summarize survivors. Python sees ~30 B/candidate —
     the boundary discipline test_plans pins."""
     import pandas as pd
 
-    from pyspark.sql.types import (
-        IntegerType,
-        LongType,
-        StructField,
-        StructType,
-    )
+    from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
     from ..operators.crops import _greedy_walk
 
@@ -443,9 +321,8 @@ def _greedy_kept_meta(
 
 
 def _summarize_meta(kept: DataFrame) -> DataFrame:
-    """_summarize's exact output shape computed from walked metadata
-    (the nz_hr already counted by the Arrow stage) — byte-identical
-    columns, types, and ordering."""
+    """Per-pair (n_crops, sum_r, sum_c, nz_hr_total) over (pair_id, r, c,
+    nz_hr) survivor rows — the summary both volume entries hash."""
     return (
         kept.groupBy("pair_id")
         .agg(
@@ -473,27 +350,12 @@ def greedy_volume_meta_dataset(
     per-pair greedy walk (metadata only) -> summary. Result identical
     to the retired HOF shape (oracle SQL_CROP_VOLUME_GREEDY unchanged;
     A/B exceptAll proven empty both ways at sf0.01 and sf0.1)."""
-    from ..operators.dedup import _memo_checkpoint
-
     p = params_for(sf_dir)
-    mask = volume_mask(spark, p["hrw"])
-    if p.get("memo", True):
-        tensors = _memo_checkpoint(
-            spark.range(1),
-            ("crop_volume_tensors", p["n_pairs"], p["hrw"], p["lrw"]),
-            lambda: volume_tensors(spark, p["n_pairs"], p["hrw"], p["lrw"]),
-        )
-    else:  # scale tier: regenerate, in ≤4-row slices so each Arrow
-        # input batch stays ~9 MB (the direct-memory budget in
-        # _greedy_candidate_meta_arrow's docstring)
-        tensors = volume_tensors(
-            spark,
-            p["n_pairs"],
-            p["hrw"],
-            p["lrw"],
-            slices=-(-p["n_pairs"] // 4),
-        )
-    centers = _collected_centers(mask, BATCH)
+    return _greedy_summary(_fixture_tensors(spark, p), volume_mask(spark, p["hrw"]))
+
+
+def _greedy_summary(tensors: DataFrame, mask: DataFrame) -> DataFrame:
+    (centers,) = collected_centers(mask, BATCH).values()
     meta = _greedy_candidate_meta_arrow(tensors, centers, BATCH, SCALE)
     return _summarize_meta(_greedy_kept_meta(meta, BATCH, PCT))
 
@@ -513,9 +375,8 @@ def q_crop_volume_greedy(spark: SparkSession, sf: str) -> DataFrame:
 
     r14 (optimization round 2, entry in the checked prefix): executes
     on the Arrow metadata path (greedy_volume_meta_dataset) — same
-    walk kernel, same oracle, results proven identical; the HOF
-    phase-1/phase-2 shape this replaces is retained by the tail-pinned
-    native twin `crop_volume` (crop_volume_dataset)."""
+    walk kernel, same oracle, results proven identical to the retired
+    higher-order-function slicing shape."""
     return greedy_volume_meta_dataset(spark, sf)
 
 
@@ -746,8 +607,5 @@ def greedy_scale_twin(spark: SparkSession, n_pairs: int = 60) -> DataFrame:
     r14: runs the Arrow metadata path — the twin must prove the code
     the registry entry actually executes, so it moved together with
     q_crop_volume_greedy (same walk kernel, same summary shape)."""
-    mask = volume_mask(spark, 64)
-    tensors = volume_tensors(spark, n_pairs, 64, 21, slices=-(-n_pairs // 4))
-    centers = _collected_centers(mask, BATCH)
-    meta = _greedy_candidate_meta_arrow(tensors, centers, BATCH, SCALE)
-    return _summarize_meta(_greedy_kept_meta(meta, BATCH, PCT))
+    p = {"n_pairs": n_pairs, "hrw": 64, "lrw": 21, "memo": False}
+    return _greedy_summary(_fixture_tensors(spark, p), volume_mask(spark, 64))

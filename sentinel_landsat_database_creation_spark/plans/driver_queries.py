@@ -1826,61 +1826,71 @@ _BASE_REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | 
 # ALLOWED_UNPINNED_TAIL with pinned batch twins; the in-repo replica
 # (tests/test_oracle_equivalence.py) still checks ALL entries.
 #
-# r15 math: the 50 below are last driver-checked in r13, so they may
-# sit out r14 and must rotate into the r15 prefix; the 50 r14-prefix
-# entries (driver-checked this round) become the r15 tail. Additions
-# need in-prefix merges as before.
+# r15 rotation (the swap the r14 comment committed to): the 50 r14
+# tail entries were last driver-checked in r13, so ALL of them rotate
+# into the r15 prefix — zero free slots, no additions. The tail below
+# is exactly the 50 r14-prefix entries (driver-checked in r14, all
+# green) in registry order. The r15 plan change (crop_volume: stage 4
+# as one per-pair Arrow kernel) is a PREFIX entry, per policy; every
+# tail entry keeps its plan pin (the two session-sensitive stream
+# drains, stream_sessions and stream_sessions_native, stay in
+# ALLOWED_UNPINNED_TAIL). crop_volume_greedy shares the NumPy gather
+# and quality helpers with the new kernel but its plan pin is unchanged.
+#
+# r16 math: the 50 below are last driver-checked in r14, so they must
+# rotate back into the r16 prefix; the 50 r15-prefix entries become the
+# r16 tail. Additions need in-prefix merges as before.
 _PROVEN_TAIL = [
-    "crop_pipeline",
-    "crop_slice_quality",
-    "catalog_week_class",
-    "compat_csv_roundtrip",
-    "event_funnel",
-    "retention_cohorts",
-    "weekly_click_signup_outer",
-    "distinct_users_by_type",
-    "doc_stats",
-    "embed_checks",
-    "stream_weekly_counts",
-    "stream_dedup_keys",
-    "stream_click_signup",
-    "media_frames",
-    "cosine_topk",
-    "sign_lsh_buckets",
-    "containment_dedup",
-    "token_fingerprint_checks",
-    "pq_topk",
-    "lang_guess",
-    "chunk_split",
-    "epoch_shuffle",
-    "vocab_coverage",
-    "bpe_token_checks",
-    "pack_sequences",
-    "bigram_nll",
-    "zorder_checks",
-    "semantic_dedup",
-    "bucketed_join_check",
-    "corpus_roundtrip",
-    "mixture_plan",
-    "stream_dedup_ttl",
-    "span_dedup",
-    "delta_dedup",
-    "ivf_probe2",
-    "ivf_train_centroids",
-    "quality_gate",
-    "salted_skew_checks",
-    "corpus_pruned_read",
-    "media_checks",
-    "lsh_delta_checks",
-    "crop_volume",
-    "scene_tensors_int16",
-    "train_centroids_distributed",
-    "stream_lsh_delta",
-    "curation_pipeline_write",
-    "ivfpq_topk_trained",
-    "ann_index_lifecycle",
-    "lsh_index_delete",
-    "approx_stats_checks",
+    "overlap_grid",
+    "catalog_event_labels",
+    "pair_counts",
+    "pairing_keys",
+    "pairing_compat",
+    "range_join_events",
+    "antijoin_checks",
+    "pivot_rollup_checks",
+    "user_value_moving_avg",
+    "doc_length_quantiles",
+    "pricing_summary",
+    "order_rank_checks",
+    "nation_revenue",
+    "promo_revenue",
+    "asof_last_click",
+    "shipping_lag",
+    "winnow_fingerprint",
+    "stream_sessions",
+    "stream_sessions_native",
+    "ann_topk",
+    "user_sessions",
+    "jaccard_neardup",
+    "minhash_lsh",
+    "neardup_pipeline",
+    "dedup_clusters",
+    "simhash_docs",
+    "embed_cosine_neardup",
+    "doc_repetition",
+    "decontaminate",
+    "tfidf_terms",
+    "unigram_nll",
+    "top_tokens_per_lang",
+    "ann_recall",
+    "minhash_estimate",
+    "ann_recall_trained",
+    "pii_scrub",
+    "corpus_dedup_write",
+    "domain_quota",
+    "corpus_compact",
+    "media_neardup",
+    "corpus_cube",
+    "exact_dedup_checks",
+    "scene_tensors_volume",
+    "crop_volume_greedy",
+    "scene_tensors_compressed",
+    "lsh_index_compact",
+    "jsonl_quarantine",
+    "corpus_append_compact",
+    "ivfpq_topk_residual",
+    "corpus_delete_compact",
 ]
 
 

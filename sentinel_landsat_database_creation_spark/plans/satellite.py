@@ -8,11 +8,13 @@ format.
     stage 4  crop engine            aligned crop pairs  (E4)
 
 At 100 TB each stage boundary is an ordinary shuffle (or a Parquet
-handoff if checkpointing is desired); nothing is collected to the
-driver. Scene tensors partition by scene; crops are rows, partitioned by
-pair — both embarrassingly parallel. Only the per-pair greedy dedup
-(compat mode) serializes within a single scene pair, which is bounded by
-one pair's candidate-center list (SURVEY.md §4).
+handoff if checkpointing is desired). Scene tensors partition by scene.
+Stage 4 is one per-pair Arrow kernel over the pair tensors: the only
+driver collect is the mask's candidate-center list (bounded by one
+centerline), each pair row crosses into Python once, and crops come
+back as rows partitioned like their pairs — no Exchange ever carries a
+band or crop column. Only the compat greedy walk serializes, within one
+scene pair, bounded by that pair's candidate list (SURVEY.md §4).
 """
 
 from __future__ import annotations
@@ -24,13 +26,7 @@ from pyspark.sql import functions as F
 
 from ..functions.dates import GOLDEN_GRID, WeekGrid, hls_date, s2_date
 from ..operators.catalog import build_catalog
-from ..operators.crops import (
-    candidate_centers,
-    quality_flag,
-    slice_crop_pairs,
-    suppress_overlap_greedy,
-    suppress_overlap_grid,
-)
+from ..operators.crops import collected_centers, crop_pairs
 from ..operators.pairing import pair_catalogs
 from ..operators.stacking import stack_bands
 
@@ -147,57 +143,18 @@ def build_crop_dataset(
     cfg: CropConfig = CropConfig(),
 ) -> DataFrame:
     """Stage 4: candidate centers x pair tensors -> quality-filtered,
-    overlap-suppressed crop pairs. Returns one row per accepted crop
-    with both pixel payloads (CROP_PAIR_SCHEMA shape).
+    overlap-suppressed crop pairs, one CROP_PAIR_SCHEMA row per accepted
+    crop with both pixel payloads.
 
-    Payload discipline (round 4, measured on the ~117k-crop volume
-    fixture): suppression decisions flow through METADATA-sized rows
-    only. Phase 1 slices every candidate and computes the quality flag,
-    but projects the pixel arrays away in the same stage — crops are
-    born and die inside one codegen'd task, so the suppression
-    shuffle/sort (grid) or Arrow transfer (greedy walk) moves ~24-byte
-    rows, not ~5 KB payloads. Phase 2 re-slices ONLY the survivors
-    (keyed per pair) to emit payload rows. The earlier one-pass shape
-    that carried payloads through the suppression exchange OOMed a 1 GB
-    heap at 1e5 crops; this one runs it with headroom, and at 100 TB it
-    means the wide ops on this path never see a pixel.
-
-    Negative result, measured (r5): a "stats-only" phase 1 that skips
-    materializing the crop arrays and instead counts each quality stat
-    directly over per-row window slices is ~1.5x SLOWER (5.96 s vs
-    3.93 s at the 103k-crop volume) — four independent count passes
-    re-slice every window row per stat, while the current shape slices
-    once into a flat array and runs four codegen'd filters over it.
-    Materialize-once-then-filter wins even when the materialized value
-    dies in the same task."""
-    centers = candidate_centers(mask, cfg.batch_size, compat_bounds=cfg.compat)
-    sliced = slice_crop_pairs(pair_tensors, centers, cfg.batch_size, cfg.scale)
-    meta = sliced.withColumn(
-        "ok", quality_flag(cfg.batch_size, cfg.scale, compat=cfg.compat)
-    ).select("pair_id", "mask_id", "ord", "r", "c", "ok")
-    if cfg.compat:
-        kept = suppress_overlap_greedy(
-            meta,
-            cfg.batch_size,
-            cfg.pct_overlap,
-            overlap=cfg.overlap,
-            shuffle_seed=cfg.shuffle_seed,
-        )
-    else:
-        kept = suppress_overlap_grid(
-            meta.filter(F.col("ok")), cfg.batch_size, cfg.pct_overlap
-        )
-    survivors = kept.select(
-        "pair_id", F.lit(0).alias("ord"), "r", "c"
-    )
-    return slice_crop_pairs(
-        pair_tensors, survivors, cfg.batch_size, cfg.scale
-    ).select(
-        "pair_id",
-        F.col("r").alias("center_r"),
-        F.col("c").alias("center_c"),
-        F.col("hr_crop").alias("hr_pixels"),
-        F.col("lr_crop").alias("lr_pixels"),
-        F.lit(cfg.batch_size).alias("hr_size"),
-        F.lit(cfg.batch_size // cfg.scale).alias("lr_size"),
+    The reference cuts crops one pair at a time (``little_pair``), so
+    the stage has no cross-pair state: the mask's candidate centers are
+    collected once on the driver (one small job), then
+    ``operators/crops.py:crop_pairs`` slices, quality-gates, suppresses
+    (compat greedy walk or native grid) and emits the survivors of each
+    pair row in one mapInArrow — one Python crossing per pair row, no
+    Exchange carrying a band or crop column."""
+    centers = collected_centers(mask, cfg.batch_size, compat_bounds=cfg.compat)
+    return crop_pairs(
+        pair_tensors, centers, cfg.batch_size, cfg.scale, cfg.pct_overlap,
+        compat=cfg.compat, overlap=cfg.overlap, shuffle_seed=cfg.shuffle_seed,
     )

@@ -5,9 +5,11 @@ The oracle below reimplements the studied behavior of the reference's
 the as-built quirks (count-based bounds, mixed inf denominator, row/col
 band purge, mutating-list cursor walk) — on FIXTURES.md-shaped synthetic
 rasters (batch=12, scale=3, pct=0.7, HR 60x60, LR 20x20, planted
-zero/-9999/inf contamination). The Spark pipeline must agree on
-candidate sets, per-candidate quality flags, greedy-kept centers, and
-exact crop pixel values.
+zero/-9999/inf contamination; a batch-100 case for near-border
+truncated windows). The JVM-side building blocks must agree on
+candidate sets, per-candidate quality flags and exact crop pixels;
+``build_crop_dataset``'s per-pair Arrow kernel must agree on kept
+centers (greedy walk, seeded shuffle, grid) and exact survivor pixels.
 """
 
 from __future__ import annotations
@@ -21,9 +23,13 @@ from sentinel_landsat_database_creation_spark.operators.crops import (
     candidate_centers,
     quality_flag,
     slice_crop_pairs,
-    suppress_overlap_greedy,
     suppress_overlap_grid,
 )
+from sentinel_landsat_database_creation_spark.plans.satellite import (
+    CropConfig,
+    build_crop_dataset,
+)
+from sentinel_landsat_database_creation_spark.schemas import CROP_PAIR_SCHEMA
 
 BATCH, SCALE, PCT = 12, 3, 0.7
 HR_N, LR_N = 60, 20
@@ -126,26 +132,36 @@ def oracle_walk(cands, ok_fn, overlap=True):
 # Spark pipeline fixtures
 
 
-@pytest.fixture(scope="module")
-def pipeline(spark):
-    hr, lr, mask = _hr(), _lr(), _mask()
-    mask_df = spark.createDataFrame(
-        [("m1", HR_N, HR_N, [int(v) for v in mask.ravel()])],
+def _mask_df(spark):
+    return spark.createDataFrame(
+        [("m1", HR_N, HR_N, [int(v) for v in _mask().ravel()])],
         "mask_id string, height int, width int, pixels array<int>",
     )
-    pairs_df = spark.createDataFrame(
+
+
+def _pairs_df(spark, pair_ids=(1,)):
+    hr, lr = _hr(), _lr()
+    return spark.createDataFrame(
         [
             (
-                1,
+                pid,
                 [hr[i].ravel().tolist() for i in range(N_BANDS)],
                 HR_N,
                 [lr[i].ravel().tolist() for i in range(N_BANDS)],
                 LR_N,
             )
+            for pid in pair_ids
         ],
         "pair_id long, hr_bands array<array<float>>, hr_width int, "
         "lr_bands array<array<float>>, lr_width int",
     )
+
+
+@pytest.fixture(scope="module")
+def pipeline(spark):
+    hr, lr, mask = _hr(), _lr(), _mask()
+    mask_df = _mask_df(spark)
+    pairs_df = _pairs_df(spark)
     centers = candidate_centers(mask_df, BATCH, compat_bounds=True)
     sliced = slice_crop_pairs(pairs_df, centers, BATCH, SCALE)
     flagged = sliced.withColumn(
@@ -194,31 +210,63 @@ def test_crop_pixels_exact(pipeline):
         assert np.array_equal(exp_lr, got_lr)
 
 
-def test_greedy_suppression_matches_oracle(pipeline):
-    hr, lr, mask, flagged = pipeline
-    kept = suppress_overlap_greedy(flagged, BATCH, PCT)
-    got = sorted((r["r"], r["c"]) for r in kept.collect())
-    expect = sorted(
-        oracle_walk(
-            oracle_candidates(mask), lambda r, c: oracle_quality(hr, lr, r, c)
-        )
+def _kernel_rows(spark, pairs=None, **cfg):
+    """build_crop_dataset's rows keyed by (pair_id, r, c)."""
+    df = build_crop_dataset(
+        pairs if pairs is not None else _pairs_df(spark),
+        _mask_df(spark),
+        CropConfig(batch_size=BATCH, scale=SCALE, pct_overlap=PCT, **cfg),
     )
-    assert got == expect
-    assert len(got) > 0
+    return {(r["pair_id"], r["center_r"], r["center_c"]): r for r in df.collect()}
 
 
-def test_greedy_no_overlap_keeps_all_passing(pipeline):
-    hr, lr, mask, flagged = pipeline
-    kept = suppress_overlap_greedy(flagged, BATCH, PCT, overlap=False)
-    got = sorted((r["r"], r["c"]) for r in kept.collect())
-    expect = sorted(
-        oracle_walk(
-            oracle_candidates(mask),
-            lambda r, c: oracle_quality(hr, lr, r, c),
-            overlap=False,
-        )
+def _assert_pixels_exact(rows):
+    """Every emitted crop equals the NumPy slice of the source rasters."""
+    hr, lr = _hr(), _lr()
+    half, s = BATCH // 2, BATCH // SCALE
+    for (_, rr, cc), row in rows.items():
+        r1, c1 = rr - half, cc - half
+        exp_hr = hr[:, r1 : r1 + BATCH, c1 : c1 + BATCH]
+        exp_lr = lr[:, r1 // SCALE : r1 // SCALE + s, c1 // SCALE : c1 // SCALE + s]
+        for b in range(N_BANDS):
+            assert np.array_equal(
+                np.array(row["hr_pixels"][b], dtype=np.float32), exp_hr[b].ravel()
+            )
+            assert np.array_equal(
+                np.array(row["lr_pixels"][b], dtype=np.float32), exp_lr[b].ravel()
+            )
+        assert row["hr_size"] == BATCH and row["lr_size"] == s
+
+
+def test_build_crop_dataset_schema_is_crop_pair_schema(spark):
+    df = build_crop_dataset(
+        _pairs_df(spark), _mask_df(spark), CropConfig(batch_size=BATCH, scale=SCALE)
     )
-    assert got == expect
+    assert df.schema == CROP_PAIR_SCHEMA
+
+
+def test_greedy_suppression_matches_oracle(spark):
+    hr, lr, mask = _hr(), _lr(), _mask()
+    rows = _kernel_rows(spark)
+    expect = oracle_walk(
+        oracle_candidates(mask), lambda r, c: oracle_quality(hr, lr, r, c)
+    )
+    assert sorted(rows) == sorted((1, r, c) for r, c in expect)
+    assert len(rows) > 0
+    _assert_pixels_exact(rows)
+
+
+def test_greedy_no_overlap_keeps_all_passing(spark):
+    hr, lr, mask = _hr(), _lr(), _mask()
+    rows = _kernel_rows(spark, overlap=False)
+    cands = oracle_candidates(mask)
+    expect = oracle_walk(
+        cands, lambda r, c: oracle_quality(hr, lr, r, c), overlap=False
+    )
+    assert sorted(rows) == sorted((1, r, c) for r, c in expect)
+    # no suppression: exactly the quality-passing candidates
+    assert len(expect) == sum(oracle_quality(hr, lr, r, c) for r, c in cands)
+    _assert_pixels_exact(rows)
 
 
 def test_grid_suppression_properties(pipeline):
@@ -233,21 +281,89 @@ def test_grid_suppression_properties(pipeline):
         assert oracle_quality(hr, lr, r, c)
 
 
-def test_shuffle_variant_deterministic(pipeline):
-    hr, lr, mask, flagged = pipeline
-    a = sorted(
-        (r["r"], r["c"])
-        for r in suppress_overlap_greedy(
-            flagged, BATCH, PCT, shuffle_seed=42
-        ).collect()
+def test_shuffle_variant_deterministic(spark):
+    """The seeded walk runs over RandomState((seed + pair_id) % 2**32)'s
+    permutation of the ord-sorted candidates — the same crops however
+    the pair rows are partitioned (negative xxhash64-style ids too)."""
+    hr, lr, mask = _hr(), _lr(), _mask()
+    pids = (1, 2, 3, -7)
+    cands = oracle_candidates(mask)
+    expect = set()
+    for pid in pids:
+        perm = np.random.RandomState((42 + pid) % 2**32).permutation(len(cands))
+        walked = oracle_walk(
+            [cands[k] for k in perm], lambda r, c: oracle_quality(hr, lr, r, c)
+        )
+        expect |= {(pid, r, c) for r, c in walked}
+    ordered = oracle_walk(cands, lambda r, c: oracle_quality(hr, lr, r, c))
+    assert {(r, c) for p, r, c in expect if p == 1} != set(ordered)
+    pairs = _pairs_df(spark, pids)
+    for parted in (pairs.coalesce(1), pairs.repartition(4)):
+        rows = _kernel_rows(spark, parted, shuffle_seed=42)
+        assert set(rows) == expect and len(rows) == len(expect)
+        _assert_pixels_exact(rows)
+
+
+def test_native_grid_matches_two_phase_building_blocks(spark):
+    """compat=False: geometric bounds, the HR-count inf denominator and
+    the minimum (r, c) per stride cell — the same crops the JVM-side
+    slice_crop_pairs + quality_flag + suppress_overlap_grid produce."""
+    pairs = _pairs_df(spark, (1, 5))
+    centers = candidate_centers(_mask_df(spark), BATCH, compat_bounds=False)
+    flagged = slice_crop_pairs(pairs, centers, BATCH, SCALE).withColumn(
+        "ok", quality_flag(BATCH, SCALE, N_BANDS, compat=False)
     )
-    b = sorted(
-        (r["r"], r["c"])
-        for r in suppress_overlap_greedy(
-            flagged, BATCH, PCT, shuffle_seed=42
-        ).collect()
+    expect = {
+        (r["pair_id"], r["r"], r["c"])
+        for r in suppress_overlap_grid(flagged, BATCH, PCT).collect()
+    }
+    rows = _kernel_rows(spark, pairs, compat=False)
+    assert set(rows) == expect and len(rows) > 0
+    assert flagged.filter(~F.col("ok")).count() > 0
+    _assert_pixels_exact(rows)
+
+
+def test_truncated_windows_match_slice2d(spark):
+    """Compat bounds let windows leave the frame; slice2d drops the rows
+    past the bottom and clamps the right edge. At batch 100 a window
+    missing one row or one column still passes the fixed-denominator
+    gate (99%), so the kernel must count AND emit exactly the present
+    cells, row-major — as the JVM-side slice + quality_flag do."""
+    b, n = 100, 104
+    rng = np.random.default_rng(7)
+    hr = rng.uniform(0.5, 1.5, (N_BANDS, n, n)).astype(np.float32)
+    m = np.zeros((n, n), dtype=int)
+    m[0:2, :] = 1  # 208 points: compat upper bound 157, all fail r > 50
+    for r, c in ((52, 52), (55, 52), (52, 55), (55, 55)):
+        m[r, c] = 1
+    mask = spark.createDataFrame(
+        [(1, n, n, [int(v) for v in m.ravel()])],
+        "mask_id int, height int, width int, pixels array<int>",
     )
-    assert a == b and len(a) > 0
+    bands = [hr[i].ravel().tolist() for i in range(N_BANDS)]
+    pairs = spark.createDataFrame(
+        [(9, bands, n, bands, n)],
+        "pair_id long, hr_bands array<array<float>>, hr_width int, "
+        "lr_bands array<array<float>>, lr_width int",
+    )
+    flagged = slice_crop_pairs(
+        pairs, candidate_centers(mask, b, compat_bounds=True), b, 1
+    ).withColumn("ok", quality_flag(b, 1, N_BANDS, compat=True))
+    expect = {
+        (r["r"], r["c"]): r["hr_crop"] for r in flagged.filter("ok").collect()
+    }
+    assert set(expect) == {(52, 52), (55, 52), (52, 55)}
+    got = build_crop_dataset(
+        pairs, mask, CropConfig(batch_size=b, scale=1, overlap=False)
+    ).collect()
+    assert {(r["center_r"], r["center_c"]) for r in got} == set(expect)
+    for r in got:
+        r1, c1 = r["center_r"] - b // 2, r["center_c"] - b // 2
+        for k in range(N_BANDS):
+            want = hr[k, r1 : r1 + b, c1 : c1 + b].ravel()
+            assert np.array_equal(np.array(r["hr_pixels"][k], np.float32), want)
+            assert r["hr_pixels"][k] == expect[(r["center_r"], r["center_c"])][k]
+            assert r["lr_pixels"][k] == r["hr_pixels"][k]
 
 
 def test_mask_keyed_pairs_do_not_leak_centers(spark):
@@ -315,3 +431,10 @@ def test_mask_keyed_pairs_do_not_leak_centers(spark):
     }
     assert got[1] == by_mask["mA"], "pair 1 must see only mask A centers"
     assert got[2] == by_mask["mB"], "pair 2 must see only mask B centers"
+    # build_crop_dataset's kernel keys centers the same way
+    crops = build_crop_dataset(
+        pairs, masks, CropConfig(batch_size=BATCH, scale=SCALE, compat=False)
+    ).collect()
+    for pid, mid in ((1, "mA"), (2, "mB")):
+        kept = {(r["center_r"], r["center_c"]) for r in crops if r["pair_id"] == pid}
+        assert kept and kept <= by_mask[mid], pid

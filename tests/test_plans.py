@@ -315,21 +315,52 @@ def test_greedy_walk_python_boundary_is_centers_only(spark):
             assert "hr_bands" not in line and "lr_bands" not in line
 
 
-def test_crop_volume_native_no_python_and_metadata_shuffle(spark):
-    """Native volume path: zero Python eval anywhere, and the
-    suppression exchange moves metadata-sized rows (no crop columns in
-    any Exchange's output), so pixel payloads never shuffle."""
+def _formatted_nodes(df) -> list[tuple[str, str]]:
+    """(operator name, its input column list) for every node of the
+    formatted physical plan."""
+    import re
+
+    text = df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
+    nodes = []
+    for block in re.split(r"\n(?=\(\d+\) )", text):
+        head = re.match(r"\(\d+\) (\w+)", block)
+        if head:
+            cols = re.search(r"^(?:Input|Output) \[\d+\]: (.*)$", block, re.M)
+            nodes.append((head.group(1), cols.group(1) if cols else ""))
+    return nodes
+
+
+def test_crop_stage_python_boundary_is_one_arrow_kernel(spark):
+    """Stage 4 (build_crop_dataset, run by crop_volume in grid and in
+    greedy mode) crosses into Python exactly ONCE: one MapInArrow over
+    the pair tensors, no other Python node, no Generate, and no
+    Exchange whose input carries a band or crop column — heavy bytes
+    move once, and only survivors' pixels come back."""
     from sentinel_landsat_database_creation_spark.plans.crop_volume import (
+        _summarize,
         crop_volume_dataset,
     )
 
-    df = crop_volume_dataset(spark, "/root/testdata/sf0.01", compat=False)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-    assert "FlatMapGroupsInPandas" not in plan
-    for line in plan.splitlines():
-        if "Exchange" in line:
-            assert "hr_crop" not in line and "lr_crop" not in line
+    payload = ("hr_bands#", "lr_bands#", "hr_pixels#", "lr_pixels#")
+    python_nodes = (
+        "BatchEvalPython",
+        "ArrowEvalPython",
+        "MapInPandas",
+        "FlatMapGroupsInPandas",
+        "FlatMapGroupsInArrow",
+    )
+    for compat in (False, True):
+        nodes = _formatted_nodes(
+            _summarize(crop_volume_dataset(spark, SF, compat=compat))
+        )
+        kernels = [cols for name, cols in nodes if name == "MapInArrow"]
+        assert len(kernels) == 1 and "hr_bands#" in kernels[0], compat
+        for name, cols in nodes:
+            assert name not in python_nodes and name != "Generate", (compat, name)
+            if name in ("Exchange", "BroadcastExchange"):
+                assert not any(p in cols for p in payload), (compat, cols)
 
 
 def test_blocked_pairs_keeps_full_reducer_width(spark):

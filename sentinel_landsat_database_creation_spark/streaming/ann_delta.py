@@ -16,10 +16,11 @@ ann_index_probe inside foreachBatch when ranked output is required.
 Plan shape — ZERO state, every stage before the index join row-local:
 
 - cell assignment: the K coarse sum-vectors ride the plan as a
-  LITERAL array of structs (they are collected from the index's tiny
-  ``coarse/`` dir — K·d ints, the same driver ceiling the trainers
-  enforce); each query row scores all K in an array HOF — using
-  dot_cast's per-step DOUBLE fold and a dot_cast-shaped norm, the
+  LITERAL array of structs (read on the driver from the index's tiny
+  ``coarse/`` dir by ann_index.load_quantizers — K·d ints, the same
+  driver ceiling the trainers enforce); each query row scores all K
+  in an array HOF — using dot_cast's per-step DOUBLE fold and a
+  dot_cast-shaped norm, the
   byte-identical _assign_trained arithmetic (an exact int64 dot would
   round DIFFERENTLY from the batch fold and overflow past 2^53 —
   code-review finding) — and takes its ``nprobe`` best by
@@ -49,7 +50,7 @@ index dir itself, so stream and index cannot disagree by
 construction; the QUERY side is guarded in-plan — a row whose vector
 dimension disagrees with the index raises at execution instead of
 NULL-padding through zip_with and silently emitting nothing (the
-batch probe's _check_ann_format refusal, row-local).
+batch probe's geometry refusal (ann_index._matrix), row-local).
 """
 
 from __future__ import annotations
@@ -78,28 +79,24 @@ def load_ann_index_static(
     """The static pieces a streaming probe plans against: (format,
     coarse rows [(cell, s)], codebook rows [(sub, cent_id, cv)],
     grouped codes frame (cell, cid, codes)). Coarse and codebook are
-    COLLECTED (K·d and m·k*·dsub values — the trainer ceiling bounds
-    both); codes stay distributed, grouped per (cell, cid) with the m
-    codes ordered by sub, and PERSISTED — a stream-static join
+    read on the driver with pyarrow through the index module's one
+    quantizer loader (operators/ann_index.py:load_quantizers — no Spark
+    job; K·d and m·k*·dsub values, the trainer ceiling bounds both);
+    codes stay distributed, grouped per (cell, cid) with the m codes
+    ordered by sub, and PERSISTED — a stream-static join
     re-executes its static side every micro-batch, so without the
     persist the corpus-sized codes scan + grouping shuffle would
     re-run per trigger (and a concurrent delete's sibling swap could
     be re-read half-done mid-batch; with the persist, the snapshot
     taken here is the probe's consistent view — restart the stream
     after maintenance windows, the lsh_delta operational rule)."""
-    from ..operators.ann_index import ann_index_format
+    from ..operators.ann_index import ann_index_format, load_quantizers
 
     fmt = ann_index_format(path)
-    coarse = [
-        (int(r["cell"]), [int(x) for x in r["s"]])
-        for r in spark.read.parquet(os.path.join(path, "coarse")).collect()
-    ]
-    coarse.sort()
+    coarse_t, books_t = load_quantizers(path)
+    coarse = sorted((r["cell"], r["s"]) for r in coarse_t.to_pylist())
     codebook = sorted(
-        (int(r["sub"]), int(r["cent_id"]), [int(x) for x in r["cv"]])
-        for r in spark.read.parquet(
-            os.path.join(path, "codebooks")
-        ).collect()
+        (r["sub"], r["cent_id"], r["cv"]) for r in books_t.to_pylist()
     )
     codes = (
         spark.read.parquet(os.path.join(path, "codes"))
@@ -169,7 +166,7 @@ def ann_radius_stream(
     # geometry guard, stream side: a query row whose vector dimension
     # disagrees with the index would NULL-pad through zip_with and be
     # SILENTLY dropped by the radius filter — raise instead, matching
-    # the batch probe's _check_ann_format refusal (when/otherwise
+    # the batch probe's geometry refusal (when/otherwise
     # coerces raise_error's NULL type into the array branch)
     vec = F.col(vec_col)
     qv = F.when(F.size(vec) == d, quantize_vec(vec)).otherwise(

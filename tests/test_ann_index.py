@@ -127,10 +127,24 @@ def test_geometry_mismatch_refused(spark, quantizers, tmp_path):
     short = e.select(
         "vec_id", F.slice("embedding", 1, 32).alias("embedding")
     )
+    n_codes = spark.read.parquet(f"{p}/codes").count()
     with pytest.raises(ValueError, match="geometr"):
         ann_index_append(short, p)
+    assert spark.read.parquet(f"{p}/codes").count() == n_codes
     with pytest.raises(ValueError, match="geometr"):
         ann_index_probe(spark, short.limit(2), p)
+    # write takes d from the quantizers: 32-d embeddings under 64-d
+    # quantizers, or a null vector, must raise instead of landing a
+    # d=32 sidecar over all-zero codes in cell 0 (zip_with null-pads)
+    with pytest.raises(ValueError, match="geometr"):
+        ann_index_write(short, str(tmp_path / "short"), coarse, cb, m=4)
+    one_null = e.select(
+        "vec_id",
+        F.when(F.col("vec_id") != 7, F.col("embedding")).alias("embedding"),
+    )
+    with pytest.raises(ValueError, match="geometr"):
+        ann_index_write(one_null, str(tmp_path / "null"), coarse, cb, m=4)
+    assert not (tmp_path / "short" / "_ann_format.json").exists()
     with pytest.raises(ValueError, match="_ann_format"):
         ann_index_delete(
             spark, str(tmp_path / "nonindex"), e.select("vec_id")
@@ -250,3 +264,215 @@ def test_exact_rerank_broadcasts_survivors(spark, quantizers, tmp_path):
     )
     assert "SortMergeJoin" not in plan, plan
     assert plan.count("BroadcastHashJoin") >= 2, plan
+
+
+def _spark_reference_codes(spark, vectors, coarse, cb, m):
+    """{cid: (cell, {sub: code})} by the Spark expressions the encode
+    kernel replaces (similarity.py): _assign_trained's struct-max cell,
+    pq_subvectors + _l2_quant with the min-(dist, cent_id) code."""
+    from sentinel_landsat_database_creation_spark.operators.similarity import (
+        _assign_trained,
+        _l2_quant,
+        _trained_centroid_frame,
+        pq_subvectors,
+    )
+
+    d = len(coarse[0][1])
+    cells = _assign_trained(
+        vectors, _trained_centroid_frame(spark, coarse), "vec_id", 1
+    ).collect()
+    books = spark.createDataFrame(cb, "sub int, cent_id long, cv array<long>")
+    best = F.min(F.struct(F.col("dist"), F.col("cent_id")))
+    codes = (
+        pq_subvectors(vectors, m, d // m, out_id="cid")
+        .join(books, "sub")
+        .withColumn("dist", _l2_quant(F.col("sq"), F.col("cv")))
+        .groupBy("cid", "sub")
+        .agg(best.alias("b"))
+        .select("cid", "sub", F.col("b.cent_id").alias("code"))
+        .collect()
+    )
+    out = {r["vec_id"]: (r["cell"], {}) for r in cells}
+    for r in codes:
+        out[r["cid"]][1][r["sub"]] = r["code"]
+    return out
+
+
+def test_kernel_ties_and_half_grid_match_spark_reference(spark, tmp_path):
+    """The encode kernel's (cell, code) per vector equals the Spark
+    reference on a crafted fixture built to hit every tie rule:
+    duplicate coarse centroids (score ties -> lowest cell), duplicate
+    and equidistant sub-centroids (distance ties -> lowest cent_id),
+    a zero vector (every score ties), and components on exact half-grid
+    points x·2^16 = ±(k + 0.5) (round half away from zero). The probe's
+    top-nprobe cells (score desc, cell asc) equal _assign_trained's
+    nprobe window on the same fixture."""
+    import numpy as np
+
+    from sentinel_landsat_database_creation_spark.operators.ann_index import (
+        _matrix,
+        _quantize,
+        _Quantizers,
+        load_quantizers,
+    )
+    from sentinel_landsat_database_creation_spark.operators.similarity import (
+        _assign_trained,
+        _trained_centroid_frame,
+        quantize_vec,
+    )
+
+    rng = np.random.default_rng(7)
+    ks = rng.integers(-60, 60, size=(64, 4))
+    half = rng.random((64, 4)) < 0.5
+    vecs = ((ks + np.where(half, 0.5, 0.0)) / 65536).astype(np.float32)
+    vecs[0] = 0.0
+    vecs[1] = [-0.0, 0.5 / 65536, -0.5 / 65536, 1.5 / 65536]
+    rows = [(i, [float(x) for x in v]) for i, v in enumerate(vecs)]
+    v = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    # listed out of cell order; 0/1 and 2/3 are duplicates, 4 is 2x cell 0
+    coarse = [
+        (4, [60, 20, -40, 100], 1),
+        (1, [30, 10, -20, 50], 1),
+        (3, [-40, 0, 10, 0], 1),
+        (0, [30, 10, -20, 50], 1),
+        (2, [-40, 0, 10, 0], 1),
+        (5, [0, 25, 25, 0], 1),
+    ]
+    cb = [
+        (0, 3, [10, 20]),
+        (0, 0, [10, 20]),
+        (0, 1, [50, 20]),
+        (0, 2, [30, -40]),
+        (1, 0, [0, 0]),
+        (1, 1, [0, 0]),
+        (1, 2, [40, 40]),
+        (1, 3, [-40, -40]),
+    ]
+    got_q = [
+        [int(x) for x in r["q"]]
+        for r in v.orderBy("vec_id").select(quantize_vec("embedding").alias("q"))
+        .collect()
+    ]
+    assert _quantize(vecs.astype(np.float64)).tolist() == got_q
+    assert [1, -1] in [r[1:3] for r in got_q]  # ±0.5 rounds away from zero
+
+    p = str(tmp_path / "ties")
+    ann_index_write(v, p, coarse, cb, m=2)
+    got = {}
+    for r in spark.read.parquet(f"{p}/codes").collect():
+        got.setdefault(r["cid"], (r["cell"], {}))[1][r["sub"]] = r["code"]
+    want = _spark_reference_codes(spark, v, coarse, cb, 2)
+    assert got == want
+    assert {c for c, _ in got.values()} <= {0, 2, 4, 5}  # duplicates lose
+    assert got[0][0] == 0 and got[0][1] == {0: 0, 1: 0}
+
+    quant = _Quantizers(*load_quantizers(p), 2)
+    qv = _quantize(_matrix(v.orderBy("vec_id").toArrow().column(1), 4, "vector"))
+    top = quant.top_cells(qv, 3)
+    ranked = _assign_trained(
+        v, _trained_centroid_frame(spark, coarse), "vec_id", 3
+    ).collect()
+    want_top = {}
+    for r in ranked:
+        want_top.setdefault(r["vec_id"], set()).add(r["cell"])
+    assert {i: set(row.tolist()) for i, row in enumerate(top)} == want_top
+
+    # off the grid the fold ORDER decides the low bits: the kernel's
+    # scores equal the Spark fold's bit for bit (np.dot/einsum differ)
+    import pyarrow as pa
+
+    from sentinel_landsat_database_creation_spark.operators.ann_index import (
+        _BOOKS,
+        _COARSE,
+    )
+    from sentinel_landsat_database_creation_spark.operators.similarity import (
+        dot_cast,
+    )
+
+    big = rng.normal(scale=40.0, size=(48, 8)).astype(np.float32)
+    sums = [
+        (c, [int(x) for x in rng.integers(-(2**40), 2**40, 8)], 1)
+        for c in range(6)
+    ]
+    vb = spark.createDataFrame(
+        [(i, [float(x) for x in row]) for i, row in enumerate(big)],
+        "vec_id long, embedding array<float>",
+    )
+    score = dot_cast(F.col("qv"), F.col("s")) / F.col("sn")
+    want_sc = {
+        (r["vec_id"], r["cell"]): r["score"]
+        for r in vb.select("vec_id", quantize_vec("embedding").alias("qv"))
+        .crossJoin(_trained_centroid_frame(spark, sums))
+        .select("vec_id", "cell", score.alias("score"))
+        .collect()
+    }
+    qb = _Quantizers(
+        pa.Table.from_pylist([{"cell": c, "s": s} for c, s, _n in sums], _COARSE),
+        pa.Table.from_pylist(
+            [{"sub": b, "cent_id": 0, "cv": [0] * 4} for b in range(2)], _BOOKS
+        ),
+        2,
+    )
+    got_sc = qb.scores(_quantize(big.astype(np.float64)))
+    assert {(i, c): got_sc[i, c] for i in range(48) for c in range(6)} == want_sc
+
+
+def test_zero_norm_centroid_raises_like_spark(spark, quantizers, tmp_path):
+    """ANSI parity: Spark's cell score divides by the centroid norm and
+    raises DIVIDE_BY_ZERO on a zero-norm centroid; the encode kernel
+    and the driver-side probe scoring raise it too, instead of
+    producing inf/NaN scores."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from sentinel_landsat_database_creation_spark.operators.ann_index import (
+        _COARSE,
+    )
+    from sentinel_landsat_database_creation_spark.operators.similarity import (
+        _assign_trained,
+        _trained_centroid_frame,
+    )
+
+    e, coarse, cb = quantizers
+    zero = [(c, [0] * len(s) if c == 1 else s, n) for c, s, n in coarse]
+    with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+        _assign_trained(
+            e, _trained_centroid_frame(spark, zero), "vec_id", 1
+        ).collect()
+    with pytest.raises(ZeroDivisionError, match="DIVIDE_BY_ZERO"):
+        ann_index_write(e, str(tmp_path / "w"), zero, cb, m=4)
+
+    p = str(tmp_path / "probe")
+    ann_index_write(e, p, coarse, cb, m=4)
+    # a zero-norm centroid in the persisted coarse/ (written as
+    # ann_index_write lands it)
+    shutil.rmtree(f"{p}/coarse")
+    (tmp_path / "probe" / "coarse").mkdir()
+    pq.write_table(
+        pa.Table.from_pylist([{"cell": c, "s": s} for c, s, _n in zero], _COARSE),
+        f"{p}/coarse/part-00000.parquet",
+    )
+    with pytest.raises(ZeroDivisionError, match="DIVIDE_BY_ZERO"):
+        ann_index_probe(spark, e.filter(F.col("vec_id") < 3), p)
+
+
+def test_distance_overflow_raises_like_spark(spark, quantizers, tmp_path):
+    """ANSI parity: an exact-BIGINT PQ distance past 2^63 raises
+    ARITHMETIC_OVERFLOW in Spark's _l2_quant fold; the kernel raises it
+    instead of wrapping into a small (winning) distance."""
+    from sentinel_landsat_database_creation_spark.operators.similarity import (
+        _l2_quant,
+        pq_subvectors,
+    )
+
+    e, coarse, cb = quantizers
+    huge = [(b, c, [2**62] * len(v) if c == 0 else v) for b, c, v in cb]
+    books = spark.createDataFrame(huge, "sub int, cent_id long, cv array<long>")
+    with pytest.raises(Exception, match="ARITHMETIC_OVERFLOW"):
+        pq_subvectors(e, 4, 16, out_id="cid").join(books, "sub").select(
+            _l2_quant(F.col("sq"), F.col("cv"))
+        ).collect()
+    with pytest.raises(ArithmeticError, match="ARITHMETIC_OVERFLOW"):
+        ann_index_write(e, str(tmp_path / "w"), coarse, huge, m=4)

@@ -48,12 +48,21 @@ _NORM_RULES = [
     ),
     (re.compile(r"/tmp/[^\s,)\]]*"), "/TMP"),  # scratch paths
     (re.compile(r"@[0-9a-f]{6,}"), "@ADDR"),  # object identity hashes
+    # host core count (defaultParallelism): the blocked-cosine
+    # repartition (similarity.py) and spark.range's default splits.
+    # Templates — only the session's OWN core count is scrubbed, so an
+    # explicit count elsewhere in a plan still pins
+    (r"\bRepartition {cores}, true\b", "Repartition CORES, true"),
+    (r"\bsplits=Some\({cores}\)", "splits=Some(CORES)"),
 ]
 
 
 def normalized_plan(df) -> str:
     s = df._jdf.queryExecution().analyzed().toString()
+    cores = df.sparkSession.sparkContext.defaultParallelism
     for pat, repl in _NORM_RULES:
+        if isinstance(pat, str):
+            pat = re.compile(pat.format(cores=cores))
         s = pat.sub(repl, s)
     return s
 

@@ -315,6 +315,16 @@ def test_greedy_walk_python_boundary_is_centers_only(spark):
             assert "hr_bands" not in line and "lr_bands" not in line
 
 
+# Python-evaluation operators other than MapInArrow
+_PYTHON_NODES = (
+    "BatchEvalPython",
+    "ArrowEvalPython",
+    "MapInPandas",
+    "FlatMapGroupsInPandas",
+    "FlatMapGroupsInArrow",
+)
+
+
 def _formatted_nodes(df) -> list[tuple[str, str]]:
     """(operator name, its input column list) for every node of the
     formatted physical plan."""
@@ -344,13 +354,6 @@ def test_crop_stage_python_boundary_is_one_arrow_kernel(spark):
     )
 
     payload = ("hr_bands#", "lr_bands#", "hr_pixels#", "lr_pixels#")
-    python_nodes = (
-        "BatchEvalPython",
-        "ArrowEvalPython",
-        "MapInPandas",
-        "FlatMapGroupsInPandas",
-        "FlatMapGroupsInArrow",
-    )
     for compat in (False, True):
         nodes = _formatted_nodes(
             _summarize(crop_volume_dataset(spark, SF, compat=compat))
@@ -358,9 +361,49 @@ def test_crop_stage_python_boundary_is_one_arrow_kernel(spark):
         kernels = [cols for name, cols in nodes if name == "MapInArrow"]
         assert len(kernels) == 1 and "hr_bands#" in kernels[0], compat
         for name, cols in nodes:
-            assert name not in python_nodes and name != "Generate", (compat, name)
+            assert name not in _PYTHON_NODES and name != "Generate", (compat, name)
             if name in ("Exchange", "BroadcastExchange"):
                 assert not any(p in cols for p in payload), (compat, cols)
+
+
+def test_ann_encode_is_one_arrow_kernel_and_one_exchange(spark):
+    """The persisted ANN index's encode (ann_index_write and
+    ann_index_append) crosses into Python exactly ONCE — one MapInArrow
+    that assigns cells and picks PQ codes — with no Generate, no
+    BroadcastExchange and no HashAggregate left of the retired
+    join/posexplode/groupBy chain, and exactly one Exchange: the cell
+    repartition, fed only the four code columns."""
+    import pyarrow as pa
+
+    from sentinel_landsat_database_creation_spark.operators.ann_index import (
+        _BOOKS,
+        _COARSE,
+        _code_rows,
+        _Quantizers,
+    )
+    from sentinel_landsat_database_creation_spark.sources.testdata import table
+
+    e = table(spark, SF, "embeddings")
+    d = len(e.first()["embedding"])
+    coarse = pa.Table.from_pylist(
+        [{"cell": c, "s": [c + 1] * d} for c in range(2)], _COARSE
+    )
+    books = pa.Table.from_pylist(
+        [{"sub": b, "cent_id": c, "cv": [c] * (d // 4)}
+         for b in range(4) for c in range(2)],
+        _BOOKS,
+    )
+    nodes = _formatted_nodes(
+        _code_rows(e, _Quantizers(coarse, books, 4), "vec_id", "embedding")
+    )
+    names = [name for name, _cols in nodes]
+    assert names.count("MapInArrow") == 1, names
+    for banned in _PYTHON_NODES + ("Generate", "BroadcastExchange", "HashAggregate"):
+        assert banned not in names, (banned, names)
+    exchanges = [cols for name, cols in nodes if name == "Exchange"]
+    assert len(exchanges) == 1, names
+    cols = [c.split("#")[0] for c in exchanges[0].strip("[]").split(", ")]
+    assert cols == ["cell", "cid", "sub", "code"], exchanges
 
 
 def test_blocked_pairs_keeps_full_reducer_width(spark):

@@ -280,9 +280,7 @@ def _adjudicate_regressions(regressions: dict, sf_dir: str) -> None:
     flagged = regressions.get("flagged") or {}
     if not flagged:
         return
-    from sentinel_landsat_database_creation_spark.operators.dedup import (
-        drain_memo_build_log,
-    )
+    from sentinel_landsat_database_creation_spark.memo import drain_build_log
     from sentinel_landsat_database_creation_spark.session import fresh_session
 
     try:
@@ -296,7 +294,7 @@ def _adjudicate_regressions(regressions: dict, sf_dir: str) -> None:
     spark.createDataFrame([(1,)], "x int").mapInPandas(
         lambda it: it, "x int"
     ).count()
-    drain_memo_build_log()
+    drain_build_log()
     for name, rec in flagged.items():
         fn = REGISTRY[name][0]
         try:
@@ -312,13 +310,13 @@ def _adjudicate_regressions(regressions: dict, sf_dir: str) -> None:
                 fn(spark, sf_dir).write.format("noop").mode(
                     "overwrite"
                 ).save()
-            drain_memo_build_log()
+            drain_build_log()
             samples = []
             for _ in range(3):
                 t0 = time.perf_counter()
                 fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
                 s = time.perf_counter() - t0
-                for _label, secs in drain_memo_build_log():
+                for _label, secs in drain_build_log():
                     s -= secs
                 samples.append(max(s, 0.0))
             iso = sorted(samples)[1]
@@ -387,16 +385,14 @@ def main() -> None:
     # README; default 1 rep keeps the driver's per-round run cheap.
     reps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "1")))
 
-    from sentinel_landsat_database_creation_spark.operators.dedup import (
-        drain_memo_build_log,
-    )
+    from sentinel_landsat_database_creation_spark.memo import drain_build_log
 
     timings: dict[str, float] = {}
     memo_timings: dict[str, float] = {}
     errors: dict[str, str] = {}
     failed_timings: dict[str, float] = {}
     restarts = 0
-    drain_memo_build_log()  # discard warm-up noise
+    drain_build_log()  # discard warm-up noise
 
     # The documented contract is WARM-state plan costs (per-query
     # numbers must not swing with registry order), but JIT/codegen
@@ -421,7 +417,7 @@ def main() -> None:
             _wfn(spark, sf_dir).write.format("noop").mode("overwrite").save()
         except Exception:  # noqa: BLE001 — the measured loop will surface it
             pass
-    for label, secs in drain_memo_build_log():
+    for label, secs in drain_build_log():
         memo_timings[label] = memo_timings.get(label, 0.0) + secs
     for name, (fn, _) in REGISTRY.items():
         # One query killing the JVM (e.g. an OOM under accumulated
@@ -464,7 +460,7 @@ def main() -> None:
                 # seconds from its own sample. Folded into memo_timings
                 # only — the failed sample is already excluded from the
                 # headline, so nothing is double-subtracted.
-                for label, secs in drain_memo_build_log():
+                for label, secs in drain_build_log():
                     memo_timings[label] = memo_timings.get(label, 0.0) + secs
                 break
             sample = time.perf_counter() - t0
@@ -475,7 +471,7 @@ def main() -> None:
             # so per-query numbers are warm-state plan costs that don't
             # swing with registry order. The headline total still
             # includes the memo lines — wall time is conserved.
-            for label, secs in drain_memo_build_log():
+            for label, secs in drain_build_log():
                 memo_timings[label] = memo_timings.get(label, 0.0) + secs
                 sample -= secs
             samples.append(max(sample, 0.0))

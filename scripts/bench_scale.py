@@ -407,16 +407,14 @@ def run_set(
     extra_conf: dict | None = None,
     master: str | None = None,
 ) -> tuple[dict, dict, object]:
-    from sentinel_landsat_database_creation_spark.operators.dedup import (
-        drain_memo_build_log,
-    )
+    from sentinel_landsat_database_creation_spark.memo import drain_build_log
     from sentinel_landsat_database_creation_spark.plans.driver_queries import (
         REGISTRY,
     )
 
     timings: dict[str, float] = {}
     memo: dict[str, float] = {}
-    drain_memo_build_log()
+    drain_build_log()
     for name in queries:
         # like bench.py: one query killing the JVM (OOM at scale IS a
         # finding worth recording) must not void every later query
@@ -450,7 +448,7 @@ def run_set(
                 pass
             spark = _fresh_session(session_name, extra_conf, master)
             print(f"  [{name} failed ({err}); retrying in fresh session]")
-            drain_memo_build_log()
+            drain_build_log()
             t0 = time.perf_counter()
             try:
                 fn(spark, sf_dir).write.format("noop").mode(
@@ -463,10 +461,10 @@ def run_set(
                     err = type(exc2).__name__
                 timings[name] = None
                 print(f"  {name}@{sf_dir}: FAILED {err}")
-                drain_memo_build_log()
+                drain_build_log()
                 continue
         sample = time.perf_counter() - t0
-        for label, secs in drain_memo_build_log():
+        for label, secs in drain_build_log():
             memo[label] = memo.get(label, 0.0) + secs
             sample -= secs
         timings[name] = round(max(sample, 0.0), 3)
@@ -490,7 +488,7 @@ def main() -> None:
     # Disk-backed memo blocks for BOTH scale factors (same conditions
     # on both sides of the exponent): the default on-heap
     # materialization of the 10x shingle table killed the 1 GB JVM —
-    # see operators/dedup.py:_memo_storage_level for the 100 TB rule
+    # see memo.py:_storage_level for the 100 TB rule
     # this expresses.
     import os as _os
 

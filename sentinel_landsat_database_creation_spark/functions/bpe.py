@@ -54,7 +54,7 @@ import hashlib
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-_BPE_MEMO: dict[tuple, list] = {}
+from ..memo import value_memo
 
 
 def bpe_train(
@@ -151,46 +151,25 @@ def train_bpe_from_docs(
     map-side-combined groupBy + a bounded top-k collect (the
     vocab-LIMIT precedent; constant in corpus size), then the
     driver-side Sennrich loop. Memoized per (session, corpus plan,
-    params) with the miss-path build charged to memo:train_bpe —
-    every session memo drains through the attribution stream
-    (the r10 rotation lesson)."""
-    spark = docs.sparkSession
-    try:
-        memo_key = (
-            spark.sparkContext.applicationId,
-            docs._jdf.queryExecution().analyzed().semanticHash(),
-            n_merges,
-            top_words,
-            text_col,
-        )
-    except Exception:
-        memo_key = None
-    if memo_key is not None and memo_key in _BPE_MEMO:
-        return list(_BPE_MEMO[memo_key])
-    import time as _time
+    params) with memo.value_memo, which charges the miss-path build to
+    memo:train_bpe."""
 
-    from ..operators.dedup import log_setup_time
-
-    _t0 = _time.perf_counter()
-    wf = (
-        docs.select(
-            F.explode(
-                F.split(F.coalesce(F.col(text_col), F.lit("")), " ")
-            ).alias("word")
+    def build():
+        wf = (
+            docs.select(
+                F.explode(
+                    F.split(F.coalesce(F.col(text_col), F.lit("")), " ")
+                ).alias("word")
+            )
+            .groupBy("word")
+            .agg(F.count(F.lit(1)).alias("n"))
+            .orderBy(F.desc("n"), F.asc("word"))
+            .limit(top_words)
+            .collect()
         )
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy(F.desc("n"), F.asc("word"))
-        .limit(top_words)
-        .collect()
-    )
-    merges = bpe_train([(r["word"], r["n"]) for r in wf], n_merges)
-    if memo_key is not None:
-        if len(_BPE_MEMO) > 16:
-            _BPE_MEMO.clear()
-        _BPE_MEMO[memo_key] = list(merges)
-    log_setup_time("memo:train_bpe", _time.perf_counter() - _t0)
-    return merges
+        return bpe_train([(r["word"], r["n"]) for r in wf], n_merges)
+
+    return value_memo(docs, ("train_bpe", n_merges, top_words, text_col), build)
 
 
 def bpe_word_lengths(

@@ -20,6 +20,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.text import hash60, hash120, shingles
+from ..memo import checkpoint_memo
+# perfbench/run.py imports the drain under this name
+from ..memo import drain_build_log as drain_memo_build_log  # noqa: F401
 from ..session import local_df
 
 
@@ -122,194 +125,9 @@ def shingle_rows_materialized(
     # width 60 keeps the historical memo key so warm-memo bench
     # attribution is unchanged; 120 gets its own keyspace
     key = ("shingles", n) if width == 60 else ("shingles", n, width)
-    return _memo_checkpoint(
+    return checkpoint_memo(
         docs, key, lambda: _shingle_rows(docs, n, width)
     )
-
-
-# key -> (DataFrame handle, checkpoint-RDD ids captured at creation).
-# RLock, not Lock: builders nest (the verified-pair-table memo's
-# builder calls shingle_rows_materialized, itself a memo) — a plain
-# Lock self-deadlocks on that re-entry.
-_MEMO_CACHE: dict[tuple, tuple[DataFrame, frozenset]] = {}
-_MEMO_LOCK = __import__("threading").RLock()
-
-# Measurement hook (round-5 VERDICT): every memo MISS-branch build
-# appends ("memo:<tag0>", seconds) here. Without this, per-query bench
-# numbers swing with registry order — whichever family member runs
-# first pays the shared build (r4: dedup_clusters 2.06 -> 4.92 s while
-# neardup_pipeline 5.38 -> 0.11 s). bench.py drains the log after each
-# timed query, charges the build seconds to separate "memo:*" bench
-# lines, and subtracts them from the query's own number, so each
-# query's cost is its warm-memo plan cost regardless of neighbor order.
-# Nested builds (RLock re-entry) time only their OWN span: the inner
-# memo's seconds are subtracted from the enclosing build's wall time
-# so the logged lines sum to the real elapsed total, double-counting
-# nothing.
-MEMO_BUILD_LOG: list[tuple[str, float]] = []
-
-
-def drain_memo_build_log() -> list[tuple[str, float]]:
-    """Pop and return all (label, seconds) build records accumulated
-    since the last drain. Thread-safe under the memo lock."""
-    with _MEMO_LOCK:
-        out = list(MEMO_BUILD_LOG)
-        MEMO_BUILD_LOG.clear()
-    return out
-
-
-def log_setup_time(label: str, seconds: float) -> None:
-    """Record a non-memo one-time setup cost (e.g. a fixture write)
-    under the same attribution stream bench.py drains."""
-    with _MEMO_LOCK:
-        MEMO_BUILD_LOG.append((label, seconds))
-
-
-_MEMO_TLS = __import__("threading").local()
-
-
-def _memo_storage_level():
-    """Storage level for memoized checkpoint blocks. Default (None) is
-    localCheckpoint's MEMORY_AND_DISK(deser) — right for the bench's
-    sf0.1 working sets. SPARK_GRAFT_MEMO_STORAGE=DISK_ONLY switches to
-    disk-backed blocks: at 10x data the eager on-heap materialization
-    of the shingle table alone killed a 1 GB JVM (measured,
-    scripts/bench_scale.py) — the local-mode expression of the 100 TB
-    rule that big shared intermediates land in storage you SIZED for
-    them (parquet staging / disk-backed cache), never in executor
-    heap."""
-    import os as _os
-
-    name = _os.environ.get("SPARK_GRAFT_MEMO_STORAGE")
-    if not name:
-        return None
-    from pyspark import StorageLevel
-
-    return getattr(StorageLevel, name)
-
-
-def _timed_build(tag: tuple, builder):
-    """Build + eagerly checkpoint a memo entry, logging the build's OWN
-    wall seconds (minus nested memo builds) to MEMO_BUILD_LOG."""
-    import time as _time
-
-    stack = getattr(_MEMO_TLS, "stack", None)
-    if stack is None:
-        stack = _MEMO_TLS.stack = []
-    stack.append(0.0)
-    t0 = _time.perf_counter()
-    try:
-        out = builder().localCheckpoint(
-            eager=True, storageLevel=_memo_storage_level()
-        )
-    except Exception:
-        # Credit the failed attempt's wall time to the enclosing build
-        # (round-5 ADVICE): an outer builder that catches this and
-        # continues would otherwise log an "own span" silently inflated
-        # by the failed inner attempt, breaking the sum-to-elapsed
-        # invariant the accounting tests pin.
-        elapsed = _time.perf_counter() - t0
-        stack.pop()
-        if stack:
-            stack[-1] += elapsed
-        raise
-    elapsed = _time.perf_counter() - t0
-    inner = stack.pop()
-    if stack:
-        stack[-1] += elapsed
-    log_setup_time(f"memo:{tag[0] if tag else 'anon'}", elapsed - inner)
-    return out
-
-
-def _persistent_ids(spark) -> set:
-    """Driver-side ids of currently-registered persistent RDDs (the
-    registry localCheckpoint blocks live in)."""
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    return set(jmap.keySet().toArray())
-
-
-def _release_checkpoint(spark, ids: frozenset) -> None:
-    """Best-effort free of a memo entry's checkpoint blocks. Verified
-    mechanism (probe, round 4): unpersisting the JVM handle from
-    getPersistentRDDs removes the rdd_N_* blocks — a later scan of the
-    handle fails with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND. For exactly
-    that reason the CACHE never calls this on eviction (a caller may
-    still hold the evicted handle inside an unexecuted lazy plan, and a
-    truncated-lineage handle whose blocks are gone can never
-    recompute); it exists for explicit cleanup by owners who KNOW no
-    live plan references the blocks, and for tests."""
-    try:
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        for i in ids:
-            if jmap.containsKey(i):
-                jmap.get(i).unpersist(False)
-    except Exception:
-        pass
-
-
-def _memo_checkpoint(src: DataFrame, tag: tuple, builder) -> DataFrame:
-    """Session-scoped memo of a localCheckpointed derived table, keyed
-    on (applicationId, semantic hash of the source plan, tag). Misses
-    fall back to building + checkpointing uncached; entries die with
-    the session (checkpoint blocks are session-scoped), and the cache
-    only ever holds DataFrame handles, never driver-side rows.
-
-    localCheckpoint is non-reliable: lineage is truncated, so a handle
-    whose blocks were unpersisted or lost with an executor can never
-    recompute. Guards (round-4 ADVICE): each hit is validated against
-    the driver's persistent-RDD registry (the checkpoint ids captured
-    at creation must still be registered — a dropped id means the
-    blocks are gone and the entry is rebuilt); and the cache is
-    lock-serialized so the id-diff capture can't interleave across
-    threads. Eviction deliberately drops dict REFERENCES only and does
-    NOT release blocks: a caller may still hold an evicted handle
-    inside an unexecuted lazy plan, and releasing would strand it
-    unrecoverably (lineage is truncated) — the bounded leak dies with
-    the session, which is the safe side of that trade. With nested
-    memos (RLock re-entry) the outer entry's id-diff also captures the
-    inner entry's checkpoint id — harmless, ids are only ever used for
-    the validity probe."""
-    spark = src.sparkSession
-    try:
-        key = (
-            spark.sparkContext.applicationId,
-            src._jdf.queryExecution().analyzed().semanticHash(),
-        ) + tag
-    except Exception:
-        return _timed_build(tag, builder)
-    with _MEMO_LOCK:
-        hit = _MEMO_CACHE.get(key)
-        if hit is not None:
-            df, ck_ids = hit
-            try:
-                alive = ck_ids <= _persistent_ids(spark)
-            except Exception:
-                alive = False
-            if alive:
-                return df
-            del _MEMO_CACHE[key]  # blocks gone — rebuild below
-        try:
-            before = _persistent_ids(spark)
-        except Exception:
-            before = None
-        out = _timed_build(tag, builder)
-        if before is None:
-            return out
-        try:
-            ck_ids = frozenset(_persistent_ids(spark) - before)
-        except Exception:
-            return out
-        if not ck_ids:
-            # An empty diff means the checkpoint blocks could not be
-            # attributed (e.g. a concurrent unpersist raced the probe):
-            # caching would make the liveness check (subset test) pass
-            # vacuously forever, handing out a handle whose blocks may
-            # be gone. Match the other fallback paths: return uncached.
-            return out
-        if len(_MEMO_CACHE) > 16:
-            _MEMO_CACHE.clear()  # references only — see docstring
-        _MEMO_CACHE[key] = (out, ck_ids)
-    return out
 
 
 def ngram_jaccard_pairs(
@@ -736,7 +554,7 @@ def minhash_estimate(
     # (both candidate-join sides + the a/b attach below) — inline, the
     # md5 family + min-groupBy shuffle ran per read (measured r5:
     # 4.3 s -> ~2.4 s warm at sf0.1 with the memo)
-    sig = _memo_checkpoint(
+    sig = checkpoint_memo(
         docs,
         ("minhash_sig", n, n_hashes),
         lambda: minhash_signatures(ex, n_hashes),
@@ -832,7 +650,7 @@ def neardup_pipeline(
             .select("doc_a", "doc_b", "jaccard")
         )
 
-    return _memo_checkpoint(
+    return checkpoint_memo(
         docs, ("neardup", n, n_hashes, bands, threshold), build
     )
 
@@ -917,7 +735,7 @@ def containment_pairs(
     # session the signature table is built once and shared (measured:
     # the inline-signature variant ran 4.4 s warm at sf0.1 vs ~2 s with
     # the shared memo — the same r5 lesson that memoized it there)
-    sig = _memo_checkpoint(
+    sig = checkpoint_memo(
         docs,
         ("minhash_sig", n, n_hashes),
         lambda: minhash_signatures(ex, n_hashes),
@@ -1117,8 +935,8 @@ def _span_occurrences(
                 "doc_id", "pos", w0.alias("s"), w1.alias("s2")
             )
 
-        return _memo_checkpoint(docs, ("spanpos120", span_tokens), build120)
-    return _memo_checkpoint(
+        return checkpoint_memo(docs, ("spanpos120", span_tokens), build120)
+    return checkpoint_memo(
         docs,
         ("spanpos60", span_tokens),
         lambda: exploded().select("doc_id", "pos", hash60("sraw").alias("s")),
@@ -1695,7 +1513,7 @@ def delta_neardup(
         if width == 60
         else ("delta_neardup_cand", n, n_hashes, bands, idx_key, width)
     )
-    cand = _memo_checkpoint(batch, memo_tag, _cand)
+    cand = checkpoint_memo(batch, memo_tag, _cand)
     # exact verification on candidates only: corpus side re-shingles
     # just the candidate partners (semi join prunes the scan)
     partners = cand.select(F.col("corpus_doc").alias("doc_id")).distinct()
@@ -2114,7 +1932,7 @@ def winnow_selected_materialized(
     every window re-ran the full shingle+md5 chain — measured 31 s for
     the explode path at sf0.1 vs 0.9 s reading the materialized table.
     """
-    return _memo_checkpoint(
+    return checkpoint_memo(
         docs, ("winnow", k, w), lambda: _winnow_select(docs, k, w)
     )
 

@@ -15,6 +15,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..memo import value_memo
 from ..session import local_df
 
 
@@ -314,9 +315,6 @@ def quantize_vec(vec_col: Column) -> Column:
     )
 
 
-# session-scoped memo of trained centroid lists (plain Python metadata)
-_TRAIN_MEMO: dict[tuple, list] = {}
-
 # Driver-recurrence ceiling for train_centroids: K·d values collected
 # per Lloyd iteration (see its docstring for the measured bytes/row and
 # the distributed-update design that lifts it).
@@ -372,112 +370,89 @@ def train_centroids(
 
     Returns [(cell, sum_vector, n_members)] sorted by cell — plan-time
     metadata, ready to broadcast into ivf_topk_trained. Memoized per
-    (session, corpus plan, K, iters): the result is a tiny Python list
-    (no checkpoint blocks to manage, unlike the dedup memo), and both
-    trained-IVF registry queries train on the same corpus — the second
-    caller skips the n_iters corpus scans."""
-    spark = embeddings.sparkSession
-    try:
-        memo_key = (
-            spark.sparkContext.applicationId,
-            embeddings._jdf.queryExecution().analyzed().semanticHash(),
-            n_centroids,
-            n_iters,
-            id_col,
-            vec_col,
-        )
-    except Exception:
-        memo_key = None
-    if memo_key is not None and memo_key in _TRAIN_MEMO:
-        # shallow copy: entries are (cell, sums, n) tuples, so copying
-        # the list isolates callers who sort/filter/append in place
-        return list(_TRAIN_MEMO[memo_key])
-    # miss-path cost goes to the shared memo-attribution stream
-    # (operators/dedup.py:MEMO_BUILD_LOG): the n_iters corpus scans are
-    # a SHARED build paid by whichever trained-IVF query runs first,
-    # and un-logged it swings that query's bench number with registry
-    # order (measured r10: the rotation moved the trainer entries
-    # behind ann_recall_trained and its solo number jumped 3.2 -> 7.5 s
-    # of someone else's training cost)
-    import time as _time
+    (session, corpus plan, K, iters) with memo.value_memo: the result
+    is a tiny Python list, and both trained-IVF registry queries train
+    on the same corpus — the second caller skips the n_iters corpus
+    scans."""
 
-    from .dedup import log_setup_time
-
-    _t0 = _time.perf_counter()
-    q = embeddings.select(
-        F.col(id_col), quantize_vec(F.col(vec_col)).alias("qv")
-    )
-    cents = [
-        (int(r[id_col]), [int(x) for x in r["qv"]], 1)
-        for r in q.filter(F.col(id_col) < n_centroids).collect()
-    ]
-    cents.sort(key=lambda t: t[0])
-    d = len(cents[0][1])
-    if n_centroids * d > TRAIN_KD_CEILING:
-        raise ValueError(
-            f"train_centroids collects K*d = {n_centroids}*{d} = "
-            f"{n_centroids * d} centroid sums to the driver per "
-            f"iteration, over the {TRAIN_KD_CEILING} ceiling (~0.75 GB "
-            "driver peak at the measured ~390 B/collected row). Past "
-            "this point keep centroid state distributed: use "
-            "train_centroids_distributed, which runs the identical "
-            "Lloyd recurrence with the state fed back through a "
-            "broadcast join instead of a collected literal, and feed "
-            "its DataFrame straight into ivf_topk_trained."
+    def build():
+        q = embeddings.select(
+            F.col(id_col), quantize_vec(F.col(vec_col)).alias("qv")
         )
-    for _ in range(n_iters):
-        cdf = local_df(
-            spark, [(c, s) for c, s, _n in cents], "cell long, s array<long>"
-        ).select(
-            # norm once per cell (K rows), not per joined row — same
-            # sqrt input bits, so identical scores, at half the fold
-            # work inside the N·K cross join (see the distributed
-            # twin's docstring for the measured allocation story)
-            "cell",
-            "s",
-            F.sqrt(dot_cast(F.col("s"), F.col("s"))).alias("sn"),
-        )
-        scored = q.join(F.broadcast(cdf)).withColumn(
-            "score", dot_cast(F.col("qv"), F.col("s")) / F.col("sn")
-        )
-        # qv rides the argmax struct as payload (the _residual_cells
-        # trick, applied here in the r13 optimization round): (score,
-        # -cell) is already a total order per vector — cell is unique —
-        # so qv never participates in a comparison, and the old
-        # assigned.join(q, id_col) back-attach (one extra exchange plus
-        # a SECOND evaluation of the q subtree per iteration) goes away.
-        # Same integers summed, bit-identical centroids.
-        best = F.max(
-            F.struct(F.col("score"), (-F.col("cell")).alias("nc"), F.col("qv"))
-        )
-        # element-wise BIGINT sums + member counts, one partial-agg
-        # shuffle of K·d rows; pos is 0-based here and in the oracle
-        sums = (
-            scored.groupBy(id_col)
-            .agg(best.alias("b"))
-            .select(
-                (-F.col("b.nc")).alias("cell"),
-                F.posexplode("b.qv").alias("pos", "x"),
-            )
-            .groupBy("cell", "pos")
-            .agg(F.sum("x").alias("s"), F.count(F.lit(1)).alias("n"))
-            .collect()
-        )
-        by_cell: dict[int, list[int]] = {}
-        n_cell: dict[int, int] = {}
-        for r in sums:
-            by_cell.setdefault(int(r["cell"]), [0] * d)[int(r["pos"])] = int(r["s"])
-            n_cell[int(r["cell"])] = int(r["n"])
         cents = [
-            (c, by_cell.get(c, s_old), n_cell.get(c, 0))
-            for c, s_old, _n in cents
+            (int(r[id_col]), [int(x) for x in r["qv"]], 1)
+            for r in q.filter(F.col(id_col) < n_centroids).collect()
         ]
-    if memo_key is not None:
-        if len(_TRAIN_MEMO) > 16:
-            _TRAIN_MEMO.clear()
-        _TRAIN_MEMO[memo_key] = list(cents)
-    log_setup_time("memo:train_centroids", _time.perf_counter() - _t0)
-    return cents
+        cents.sort(key=lambda t: t[0])
+        d = len(cents[0][1])
+        if n_centroids * d > TRAIN_KD_CEILING:
+            raise ValueError(
+                f"train_centroids collects K*d = {n_centroids}*{d} = "
+                f"{n_centroids * d} centroid sums to the driver per "
+                f"iteration, over the {TRAIN_KD_CEILING} ceiling (~0.75 GB "
+                "driver peak at the measured ~390 B/collected row). Past "
+                "this point keep centroid state distributed: use "
+                "train_centroids_distributed, which runs the identical "
+                "Lloyd recurrence with the state fed back through a "
+                "broadcast join instead of a collected literal, and feed "
+                "its DataFrame straight into ivf_topk_trained."
+            )
+        for _ in range(n_iters):
+            cdf = _trained_centroid_frame(embeddings.sparkSession, cents)
+            sums = _lloyd_sums(q, cdf, id_col).collect()
+            by_cell: dict[int, list[int]] = {}
+            n_cell: dict[int, int] = {}
+            for r in sums:
+                by_cell.setdefault(int(r["cell"]), [0] * d)[int(r["pos"])] = int(r["s"])
+                n_cell[int(r["cell"])] = int(r["n"])
+            cents = [
+                (c, by_cell.get(c, s_old), n_cell.get(c, 0))
+                for c, s_old, _n in cents
+            ]
+        return cents
+
+    # the n_iters corpus scans are a SHARED build paid by whichever
+    # trained-IVF query runs first: value_memo charges it to
+    # memo:train_centroids (measured r10: un-logged, the rotation moved
+    # the trainer entries behind ann_recall_trained and its solo number
+    # jumped 3.2 -> 7.5 s of someone else's training cost)
+    return value_memo(
+        embeddings,
+        ("train_centroids", n_centroids, n_iters, id_col, vec_col),
+        build,
+    )
+
+
+def _lloyd_sums(q: DataFrame, cdf: DataFrame, id_col: str) -> DataFrame:
+    """One coarse Lloyd step of both centroid trainers: assign each
+    quantized vector (id_col, qv) to its best (cell, s, sn) centroid
+    and return the per-(cell, pos) BIGINT sums + member counts, one
+    partial-agg shuffle of K·d rows (pos 0-based here and in the
+    oracle). The state (a collected literal or a distributed frame)
+    is the caller's."""
+    scored = q.join(F.broadcast(cdf)).withColumn(
+        "score", dot_cast(F.col("qv"), F.col("s")) / F.col("sn")
+    )
+    # qv rides the argmax struct as payload (the _residual_cells
+    # trick, applied here in the r13 optimization round): (score,
+    # -cell) is already a total order per vector — cell is unique — so
+    # qv never participates in a comparison, and the old
+    # assigned.join(q, id_col) back-attach (one extra exchange plus a
+    # SECOND evaluation of the q subtree per iteration) goes away.
+    # Same integers summed, bit-identical centroids.
+    best = F.max(
+        F.struct(F.col("score"), (-F.col("cell")).alias("nc"), F.col("qv"))
+    )
+    return (
+        scored.groupBy(id_col)
+        .agg(best.alias("b"))
+        .select(
+            (-F.col("b.nc")).alias("cell"),
+            F.posexplode("b.qv").alias("pos", "x"),
+        )
+        .groupBy("cell", "pos")
+        .agg(F.sum("x").alias("s"), F.count(F.lit(1)).alias("n"))
+    )
 
 
 def train_centroids_distributed(
@@ -531,40 +506,8 @@ def train_centroids_distributed(
         .localCheckpoint(eager=True)
     )
     for _ in range(n_iters):
-        # norm precomputed ONCE per cell (K rows) instead of per
-        # joined row: sqrt(dot(s,s)) over the same bits is the same
-        # double either way (equality with the driver path is pinned
-        # by the unit tests and the at-scale probe), but inside the
-        # N·K cross join the per-row recompute doubled both the flops
-        # and the zip_with array allocations — at the probe's
-        # 20k x 4096 x 512 shape that is ~340 GB of avoidable
-        # allocation churn in a 1 GB heap.
-        cdf = state.select(
-            "cell", "s", F.sqrt(dot_cast(F.col("s"), F.col("s"))).alias("sn")
-        )
-        scored = q.join(F.broadcast(cdf)).withColumn(
-            "score", dot_cast(F.col("qv"), F.col("s")) / F.col("sn")
-        )
-        # qv rides the argmax struct as payload — the same r13-opt
-        # rewrite as the driver-path twin (train_centroids above):
-        # (score, -cell) is a total order per vector, so qv never
-        # participates in a comparison, and the old
-        # assigned.join(q, id_col) back-attach (one extra exchange +
-        # a second scan/quantize of q per iteration) goes away. Same
-        # integers summed; the twins stay structurally identical.
-        best = F.max(
-            F.struct(F.col("score"), (-F.col("cell")).alias("nc"), F.col("qv"))
-        )
-        sums = (
-            scored.groupBy(id_col)
-            .agg(best.alias("b"))
-            .select(
-                (-F.col("b.nc")).alias("cell"),
-                F.posexplode("b.qv").alias("pos", "x"),
-            )
-            .groupBy("cell", "pos")
-            .agg(F.sum("x").alias("s"), F.count(F.lit(1)).alias("n"))
-        )
+        cdf = _trained_centroid_frame(q.sparkSession, state)
+        sums = _lloyd_sums(q, cdf, id_col)
         folded = sums.groupBy("cell").agg(
             F.transform(
                 F.array_sort(F.collect_list(F.struct("pos", "s"))),
@@ -592,8 +535,10 @@ def _trained_centroid_frame(
     collected list becomes a literal local relation (the registry/
     oracle form); a state DataFrame stays distributed. Norm computed
     once per cell (K rows), not per joined row: same sqrt input bits,
-    so identical scores, at half the fold work inside the N·K join
-    (the measured allocation story in train_centroids_distributed)."""
+    so identical scores, but inside the N·K cross join the per-row
+    recompute doubled both the flops and the zip_with array
+    allocations — at the 20k x 4096 x 512 probe shape that is ~340 GB
+    of avoidable allocation churn in a 1 GB heap."""
     if isinstance(centroids, DataFrame):
         cdf = centroids.select("cell", "s")
     else:
@@ -1120,50 +1065,33 @@ def train_pq_codebooks(
     Returns [(sub, cent_id, centroid)] sorted, centroid a dsub-long
     BIGINT list on the quantize_vec grid — ready to broadcast into
     ivfpq_topk_trained."""
-    spark = embeddings.sparkSession
-    d = embedding_dim(embeddings, vec_col)
-    if d % m != 0:
-        raise ValueError(f"embedding dim {d} not divisible by m={m}")
-    dsub = d // m
-    if m * n_sub_centroids * dsub > TRAIN_KD_CEILING:
-        raise ValueError(
-            f"train_pq_codebooks collects m*k*ated = {m}*{n_sub_centroids}*"
-            f"{dsub} codebook values per iteration, over the "
-            f"{TRAIN_KD_CEILING} driver ceiling — a PQ codebook this "
-            "size is off the published IVFADC design space (k*≤256, "
-            "dsub≤64 at any real deployment); shrink the codebook"
-        )
-    try:
-        memo_key = (
-            spark.sparkContext.applicationId,
-            embeddings._jdf.queryExecution().analyzed().semanticHash(),
-            m,
-            n_sub_centroids,
-            n_iters,
-            id_col,
-            vec_col,
-        )
-    except Exception:
-        memo_key = None
-    if memo_key is not None and memo_key in _TRAIN_MEMO:
-        return list(_TRAIN_MEMO[memo_key])
-    import time as _time
 
-    from .dedup import log_setup_time
+    def build():
+        d = embedding_dim(embeddings, vec_col)
+        if d % m != 0:
+            raise ValueError(f"embedding dim {d} not divisible by m={m}")
+        dsub = d // m
+        if m * n_sub_centroids * dsub > TRAIN_KD_CEILING:
+            raise ValueError(
+                f"train_pq_codebooks collects m*n_sub_centroids*dsub = {m}*"
+                f"{n_sub_centroids}*{dsub} codebook values per iteration, "
+                f"over the {TRAIN_KD_CEILING} driver ceiling — a PQ "
+                "codebook this size is off the published IVFADC design "
+                "space (k*≤256, dsub≤64 at any real deployment); shrink "
+                "the codebook"
+            )
+        subs = pq_subvectors(embeddings, m, dsub, id_col, vec_col, out_id="vid")
+        seed = sorted(
+            (int(r["sub"]), int(r["vid"]), [int(x) for x in r["sq"]])
+            for r in subs.filter(F.col("vid") < n_sub_centroids).collect()
+        )
+        return _lloyd_pq(embeddings.sparkSession, subs, dsub, n_iters, seed)
 
-    _t0 = _time.perf_counter()
-    subs = pq_subvectors(embeddings, m, dsub, id_col, vec_col, out_id="vid")
-    cb = sorted(
-        (int(r["sub"]), int(r["vid"]), [int(x) for x in r["sq"]])
-        for r in subs.filter(F.col("vid") < n_sub_centroids).collect()
+    return value_memo(
+        embeddings,
+        ("train_pq_codebooks", m, n_sub_centroids, n_iters, id_col, vec_col),
+        build,
     )
-    cb = _lloyd_pq(spark, subs, dsub, n_iters, cb)
-    if memo_key is not None:
-        if len(_TRAIN_MEMO) > 16:
-            _TRAIN_MEMO.clear()
-        _TRAIN_MEMO[memo_key] = list(cb)
-    log_setup_time("memo:train_pq_codebooks", _time.perf_counter() - _t0)
-    return cb
 
 
 def ivfpq_topk_trained(
@@ -1406,67 +1334,54 @@ def train_pq_codebooks_residual(
     coarse values, params); the miss-path build drains through
     memo:train_pq_codebooks_residual (every session-scoped memo build
     must be itemized — rotations reorder who pays first)."""
-    spark = embeddings.sparkSession
-    d = embedding_dim(embeddings, vec_col)
-    if d % m != 0:
-        raise ValueError(f"embedding dim {d} not divisible by m={m}")
-    dsub = d // m
-    if m * n_sub_centroids * dsub > TRAIN_KD_CEILING:
-        raise ValueError(
-            f"train_pq_codebooks_residual collects m*k*ated = {m}*"
-            f"{n_sub_centroids}*{dsub} codebook values per iteration, "
-            f"over the {TRAIN_KD_CEILING} driver ceiling; shrink the "
-            "codebook (see train_pq_codebooks' guard)"
+
+    def build():
+        spark = embeddings.sparkSession
+        d = embedding_dim(embeddings, vec_col)
+        if d % m != 0:
+            raise ValueError(f"embedding dim {d} not divisible by m={m}")
+        dsub = d // m
+        if m * n_sub_centroids * dsub > TRAIN_KD_CEILING:
+            raise ValueError(
+                f"train_pq_codebooks_residual collects m*n_sub_centroids*dsub"
+                f" = {m}*{n_sub_centroids}*{dsub} codebook values per "
+                f"iteration, over the {TRAIN_KD_CEILING} driver ceiling; "
+                "shrink the codebook (see train_pq_codebooks' guard)"
+            )
+        cdf = _trained_centroid_frame(spark, coarse)
+        gdf = local_df(
+            spark, coarse_grid_centroids(coarse), "cell long, gv array<long>"
         )
+        res = _residual_cells(
+            embeddings.select(F.col(id_col), F.col(vec_col).alias("embedding")),
+            cdf,
+            gdf,
+            id_col,
+            1,
+        )
+        subs = _residual_sub_rows(res, m, dsub, id_col, "vid").select(
+            "vid", "sub", "sq"
+        )
+        seed = sorted(
+            (int(r["sub"]), int(r["vid"]), [int(x) for x in r["sq"]])
+            for r in subs.filter(F.col("vid") < n_sub_centroids).collect()
+        )
+        return _lloyd_pq(spark, subs, dsub, n_iters, seed)
+
     coarse_sig = tuple((int(c), tuple(int(x) for x in s), int(n)) for c, s, n in coarse)
-    try:
-        memo_key = (
-            spark.sparkContext.applicationId,
-            embeddings._jdf.queryExecution().analyzed().semanticHash(),
-            "residual",
+    return value_memo(
+        embeddings,
+        (
+            "train_pq_codebooks_residual",
             coarse_sig,
             m,
             n_sub_centroids,
             n_iters,
             id_col,
             vec_col,
-        )
-    except Exception:
-        memo_key = None
-    if memo_key is not None and memo_key in _TRAIN_MEMO:
-        return list(_TRAIN_MEMO[memo_key])
-    import time as _time
-
-    from .dedup import log_setup_time
-
-    _t0 = _time.perf_counter()
-    cdf = _trained_centroid_frame(spark, coarse)
-    gdf = local_df(
-        spark, coarse_grid_centroids(coarse), "cell long, gv array<long>"
+        ),
+        build,
     )
-    res = _residual_cells(
-        embeddings.select(F.col(id_col), F.col(vec_col).alias("embedding")),
-        cdf,
-        gdf,
-        id_col,
-        1,
-    )
-    subs = _residual_sub_rows(res, m, dsub, id_col, "vid").select(
-        "vid", "sub", "sq"
-    )
-    seed = sorted(
-        (int(r["sub"]), int(r["vid"]), [int(x) for x in r["sq"]])
-        for r in subs.filter(F.col("vid") < n_sub_centroids).collect()
-    )
-    cb = _lloyd_pq(spark, subs, dsub, n_iters, seed)
-    if memo_key is not None:
-        if len(_TRAIN_MEMO) > 16:
-            _TRAIN_MEMO.clear()
-        _TRAIN_MEMO[memo_key] = list(cb)
-    log_setup_time(
-        "memo:train_pq_codebooks_residual", _time.perf_counter() - _t0
-    )
-    return cb
 
 
 def ivfpq_topk_residual(

@@ -165,12 +165,12 @@ def _fixture_tensors(spark: SparkSession, p: dict) -> DataFrame:
     blocks at sf0.1). The scale tier regenerates them instead (see
     params_for), in <= 4-row slices so each Arrow input batch of the
     per-pair kernels stays a few payloads (~9 MB)."""
-    from ..operators.dedup import _memo_checkpoint
+    from ..memo import checkpoint_memo
 
     n, hrw, lrw = p["n_pairs"], p["hrw"], p["lrw"]
     if not p.get("memo", True):
         return volume_tensors(spark, n, hrw, lrw, slices=-(-n // 4))
-    return _memo_checkpoint(
+    return checkpoint_memo(
         spark.range(1),
         ("crop_volume_tensors", n, hrw, lrw),
         lambda: volume_tensors(spark, n, hrw, lrw),

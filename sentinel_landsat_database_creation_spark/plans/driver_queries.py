@@ -375,10 +375,9 @@ def q_compat_csv_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     compat/golden.py module docstring); everything upstream is the
     distributed pairing plan shared with q_pairing_compat."""
     import os
-    import time
 
     from ..compat.golden import write_pair_csv
-    from ..operators.dedup import log_setup_time
+    from ..memo import timed
     from ..session import session_tmp_path
 
     tag = sf.strip("/").replace("/", "_").replace(".", "_")
@@ -389,9 +388,8 @@ def q_compat_csv_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
         # once per session (applicationId-keyed path), charged to a
         # setup: bench line like the other fixture/index landings —
         # the measured query is the read-back line audit
-        t0 = time.perf_counter()
-        write_pair_csv(_pairing_compat_pairs(spark, sf).orderBy("data_1"), out)
-        log_setup_time("setup:compat_csv_write", time.perf_counter() - t0)
+        with timed("setup:compat_csv_write"):
+            write_pair_csv(_pairing_compat_pairs(spark, sf).orderBy("data_1"), out)
     whole = spark.read.text(out, wholetext=True)
     return (
         whole.select(
@@ -1767,7 +1765,7 @@ _BASE_REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | 
 # tail holds only queries that (a) are green at their most recent
 # driver check and (b) whose code path is either untouched since that
 # check or touched only by behavior-preserving hardening (e.g. the
-# _memo_checkpoint validity guard) — any query whose SEMANTICS or plan
+# checkpoint_memo validity guard) — any query whose SEMANTICS or plan
 # shape moved goes back into the prefix the same round. Since round 5
 # the "untouched" claims are pinned MECHANICALLY:
 # tests/test_plan_snapshot.py compares every tail entry's normalized

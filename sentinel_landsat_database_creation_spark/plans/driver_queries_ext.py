@@ -1183,16 +1183,14 @@ def q_delta_neardup(spark: SparkSession, sf: str) -> DataFrame:
     tag = sf.strip("/").replace("/", "_").replace(".", "_")
     path = session_tmp_path(spark, f"lsh_index_{tag}")
     import os as _os
-    import time as _time
 
-    from ..operators.dedup import log_setup_time
+    from ..memo import timed
 
     # one-time index landing per session (app-keyed path); charged to a
     # setup: bench line so the probe's own number stays comparable
     if not _os.path.exists(_os.path.join(path, "_SUCCESS")):
-        t0 = _time.perf_counter()
-        lsh_index_write(corpus, path)
-        log_setup_time("setup:lsh_index", _time.perf_counter() - t0)
+        with timed("setup:lsh_index"):
+            lsh_index_write(corpus, path)
     index = spark.read.parquet(path)
     return delta_neardup(corpus, batch, index).orderBy(
         "batch_doc", "corpus_doc"
@@ -1268,14 +1266,11 @@ def q_lsh_append_probe(spark: SparkSession, sf: str) -> DataFrame:
     # delta_neardup's candidate memo keys on that file listing. The
     # one-time landing is charged to a setup: bench line.
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        import time as _time
+        from ..memo import timed
 
-        from ..operators.dedup import log_setup_time
-
-        t0 = _time.perf_counter()
-        lsh_index_write(gen1, path)
-        lsh_index_append(gen2, path)
-        log_setup_time("setup:lsh_index_grown", _time.perf_counter() - t0)
+        with timed("setup:lsh_index_grown"):
+            lsh_index_write(gen1, path)
+            lsh_index_append(gen2, path)
     index = spark.read.parquet(path)
     return delta_neardup(corpus, batch, index).orderBy(
         "batch_doc", "corpus_doc"
@@ -1358,14 +1353,10 @@ def q_stream_lsh_delta(spark: SparkSession, sf: str) -> DataFrame:
     the entry shares SQL_DELTA_NEARDUP —
     the streaming plan is held to the same hash as the batch one."""
     import os as _os
-    import time as _time
     import uuid
 
-    from ..operators.dedup import (
-        log_setup_time,
-        lsh_index_write,
-        shingle_rows_materialized,
-    )
+    from ..memo import timed
+    from ..operators.dedup import lsh_index_write, shingle_rows_materialized
     from ..session import session_tmp_path
     from ..streaming.lsh_delta import lsh_delta_stream
 
@@ -1376,9 +1367,8 @@ def q_stream_lsh_delta(spark: SparkSession, sf: str) -> DataFrame:
     # same one-time session landing (and same path) as q_delta_neardup:
     # whichever entry runs first pays it, charged to a setup: bench line
     if not _os.path.exists(_os.path.join(path, "_SUCCESS")):
-        t0 = _time.perf_counter()
-        lsh_index_write(corpus, path)
-        log_setup_time("setup:lsh_index", _time.perf_counter() - t0)
+        with timed("setup:lsh_index"):
+            lsh_index_write(corpus, path)
     index = spark.read.parquet(path)
     corpus_sh = (
         shingle_rows_materialized(corpus, 2)
@@ -1430,10 +1420,9 @@ def q_lsh_index_compact(spark: SparkSession, sf: str) -> DataFrame:
     groupBy over (doc x bands) short strings — nothing leaves the
     engine but 4 rows of longs."""
     import os as _os
-    import time as _time
 
+    from ..memo import timed
     from ..operators.dedup import (
-        log_setup_time,
         lsh_index_append,
         lsh_index_compact,
         lsh_index_write,
@@ -1449,13 +1438,12 @@ def q_lsh_index_compact(spark: SparkSession, sf: str) -> DataFrame:
     # marker lives BESIDE it (also applicationId-keyed via the parent)
     done = path.rstrip("/") + "__done"
     if not _os.path.exists(done):
-        t0 = _time.perf_counter()
-        lsh_index_write(gen1, path)
-        lsh_index_append(gen2, path)
-        lsh_index_compact(spark, path)
-        with open(done, "w") as f:
-            f.write("ok")
-        log_setup_time("setup:lsh_index_cmp", _time.perf_counter() - t0)
+        with timed("setup:lsh_index_cmp"):
+            lsh_index_write(gen1, path)
+            lsh_index_append(gen2, path)
+            lsh_index_compact(spark, path)
+            with open(done, "w") as f:
+                f.write("ok")
     idx = spark.read.parquet(path)
     digest = F.conv(
         F.substring(
@@ -3059,15 +3047,14 @@ def q_ann_index_lifecycle(spark: SparkSession, sf: str) -> DataFrame:
     evaluation-shape story). Fills the ONE free r13 prefix slot
     (rotation policy, driver_queries.py)."""
     import os as _os
-    import time as _time
 
+    from ..memo import timed
     from ..operators.ann_index import (
         ann_index_append,
         ann_index_delete,
         ann_index_probe,
         ann_index_write,
     )
-    from ..operators.dedup import log_setup_time
     from ..operators.similarity import train_centroids, train_pq_codebooks
     from ..session import session_tmp_path
 
@@ -3081,21 +3068,16 @@ def q_ann_index_lifecycle(spark: SparkSession, sf: str) -> DataFrame:
     # marker lives BESIDE the index root (the lsh_index_cmp pattern)
     done = path.rstrip("/") + "__done"
     if not _os.path.exists(done):
-        # trainers BEFORE the setup timer: they drain their own
-        # memo:train_* lines on a miss, and timing them inside this
-        # block too would double-subtract the build from whichever
-        # entry runs first (the r10 "rotations reorder who pays"
-        # attribution lesson — only disjoint logged spans keep
-        # per-query numbers order-independent)
-        coarse = train_centroids(e, n_centroids=16, n_iters=2)
-        cb = train_pq_codebooks(e, m=4, n_sub_centroids=16, n_iters=2)
-        t0 = _time.perf_counter()
-        ann_index_write(gen1, path, coarse, cb, m=4)
-        ann_index_append(gen2, path)
-        ann_index_delete(spark, path, tomb)
-        with open(done, "w") as f:
-            f.write("ok")
-        log_setup_time("setup:ann_index", _time.perf_counter() - t0)
+        with timed("setup:ann_index"):
+            # q_ivfpq_trained shares these trainings: their miss-path
+            # builds log as memo:train_* lines, not as this setup
+            coarse = train_centroids(e, n_centroids=16, n_iters=2)
+            cb = train_pq_codebooks(e, m=4, n_sub_centroids=16, n_iters=2)
+            ann_index_write(gen1, path, coarse, cb, m=4)
+            ann_index_append(gen2, path)
+            ann_index_delete(spark, path, tomb)
+            with open(done, "w") as f:
+                f.write("ok")
     codes = spark.read.parquet(_os.path.join(path, "codes"))
     digest = F.conv(
         F.substring(
@@ -4812,9 +4794,8 @@ def q_corpus_delete_compact(spark: SparkSession, sf: str) -> DataFrame:
     partitions, nothing driver-side beyond the bounded affected-value
     list."""
     import os as _os
-    import time as _time
 
-    from ..operators.dedup import log_setup_time
+    from ..memo import timed
     from ..session import session_tmp_path
     from ..sources.corpus import delete_from_corpus, write_corpus
 
@@ -4830,30 +4811,29 @@ def q_corpus_delete_compact(spark: SparkSession, sf: str) -> DataFrame:
     # lives beside it (the lsh_index_cmp discipline)
     done = src.rstrip("/") + "__done"
     if not _os.path.exists(done):
-        t0 = _time.perf_counter()
-        write_corpus(
-            docs, src, partition_by=("plang",), max_records_per_file=1000
-        )
-        cohort = docs.filter(F.col("doc_id") % 7 == 2)
-        tomb = cohort.select("doc_id")
-        # honest hints: the cohort's actual partition values (a real
-        # takedown batch carries these on the request); bounded by
-        # partition cardinality
-        hints = [
-            (r["plang"],)
-            for r in cohort.select("plang").distinct().collect()
-        ]
-        delete_from_corpus(
-            spark,
-            src,
-            tomb,
-            partition_by=("plang",),
-            max_records_per_file=1000,
-            tombstone_partitions=hints,
-        )
-        with open(done, "w") as f:
-            f.write("ok")
-        log_setup_time("setup:corpus_delete", _time.perf_counter() - t0)
+        with timed("setup:corpus_delete"):
+            write_corpus(
+                docs, src, partition_by=("plang",), max_records_per_file=1000
+            )
+            cohort = docs.filter(F.col("doc_id") % 7 == 2)
+            tomb = cohort.select("doc_id")
+            # honest hints: the cohort's actual partition values (a real
+            # takedown batch carries these on the request); bounded by
+            # partition cardinality
+            hints = [
+                (r["plang"],)
+                for r in cohort.select("plang").distinct().collect()
+            ]
+            delete_from_corpus(
+                spark,
+                src,
+                tomb,
+                partition_by=("plang",),
+                max_records_per_file=1000,
+                tombstone_partitions=hints,
+            )
+            with open(done, "w") as f:
+                f.write("ok")
     back = spark.read.parquet(src)
     return (
         back.withColumn("_f", F.input_file_name())
@@ -4918,13 +4898,9 @@ def q_lsh_index_delete(spark: SparkSession, sf: str) -> DataFrame:
     cost class as the compaction the maintenance window already pays);
     the summary adds one map-side-combined groupBy."""
     import os as _os
-    import time as _time
 
-    from ..operators.dedup import (
-        log_setup_time,
-        lsh_index_delete,
-        lsh_index_write,
-    )
+    from ..memo import timed
+    from ..operators.dedup import lsh_index_delete, lsh_index_write
     from ..session import session_tmp_path
 
     d = table(spark, sf, "documents")
@@ -4932,13 +4908,12 @@ def q_lsh_index_delete(spark: SparkSession, sf: str) -> DataFrame:
     path = session_tmp_path(spark, f"lsh_index_del_{tag}")
     done = path.rstrip("/") + "__done"
     if not _os.path.exists(done):
-        t0 = _time.perf_counter()
-        lsh_index_write(d, path)
-        tomb = d.filter(F.col("doc_id") % 5 == 1).select("doc_id")
-        lsh_index_delete(spark, path, tomb)
-        with open(done, "w") as f:
-            f.write("ok")
-        log_setup_time("setup:lsh_index_del", _time.perf_counter() - t0)
+        with timed("setup:lsh_index_del"):
+            lsh_index_write(d, path)
+            tomb = d.filter(F.col("doc_id") % 5 == 1).select("doc_id")
+            lsh_index_delete(spark, path, tomb)
+            with open(done, "w") as f:
+                f.write("ok")
     idx = spark.read.parquet(path)
     digest = F.conv(
         F.substring(
@@ -5005,7 +4980,7 @@ def q_media_neardup(spark: SparkSession, sf: str) -> DataFrame:
     float (the cosine threshold test) is sqrt/division of exact
     integers, identical IEEE ops in both engines."""
     from ..multimodal.media import fake_features
-    from ..operators.dedup import _memo_checkpoint
+    from ..memo import checkpoint_memo
     from ..operators.similarity import blocked_self_pairs
 
     docs = table(spark, sf, "documents")
@@ -5029,7 +5004,7 @@ def q_media_neardup(spark: SparkSession, sf: str) -> DataFrame:
     # feature stage runs once; the session memo (vs a bare
     # localCheckpoint) also stops repeated invocations from leaking a
     # fresh block set per call
-    v = _memo_checkpoint(docs, ("media_neardup_feats", 4), _features)
+    v = checkpoint_memo(docs, ("media_neardup_feats", 4), _features)
     p = blocked_self_pairs(v, "media_id", n_blocks=16)
     dot = F.aggregate(
         F.zip_with("a_k", "b_k", lambda x, y: x * y), zero, lambda a, x: a + x
@@ -5164,9 +5139,8 @@ def q_jsonl_quarantine(spark: SparkSession, sf: str) -> DataFrame:
     Oracle: the corruption rule is closed-form (doc_id % 7), so DuckDB
     re-derives both cohorts straight from the documents view."""
     import os as _os
-    import time as _time
 
-    from ..operators.dedup import log_setup_time
+    from ..memo import timed
     from ..session import session_tmp_path
     from ..sources.corpus import (
         CORRUPT_COL,
@@ -5178,34 +5152,33 @@ def q_jsonl_quarantine(spark: SparkSession, sf: str) -> DataFrame:
     tag = sf.strip("/").replace("/", "_").replace(".", "_")
     path = session_tmp_path(spark, f"jsonl_quarantine_{tag}")
     if not _os.path.exists(_os.path.join(path, "_SUCCESS")):
-        t0 = _time.perf_counter()
-        # r11 ADVICE: the triage regex below assumes every corrupt-
-        # cohort row renders a non-negative decimal doc_id and n_chars
-        # (to_json OMITS null fields and \d+ rejects '-'); a violating
-        # row would yield NULL q_doc/q_chars and silently skew the
-        # quarantine min/max/sum while n_docs still matched. Holds by
-        # construction on the driver testdata, but assert it at fixture
-        # write time so a future data change fails loudly here instead.
-        n_bad = d.filter(
-            (F.col("doc_id") % 7 == 3)
-            & (F.col("n_chars").isNull() | (F.col("n_chars") < 0))
-        ).count()
-        if n_bad:
-            raise ValueError(
-                f"jsonl_quarantine fixture precondition violated: {n_bad} "
-                "corrupt-cohort rows (doc_id % 7 == 3) have NULL or "
-                "negative n_chars — the raw-line triage regex cannot "
-                "recover them and the quarantine aggregates would "
-                "silently diverge from the oracle"
+        with timed("setup:jsonl_quarantine"):
+            # r11 ADVICE: the triage regex below assumes every corrupt-
+            # cohort row renders a non-negative decimal doc_id and n_chars
+            # (to_json OMITS null fields and \d+ rejects '-'); a violating
+            # row would yield NULL q_doc/q_chars and silently skew the
+            # quarantine min/max/sum while n_docs still matched. Holds by
+            # construction on the driver testdata, but assert it at fixture
+            # write time so a future data change fails loudly here instead.
+            n_bad = d.filter(
+                (F.col("doc_id") % 7 == 3)
+                & (F.col("n_chars").isNull() | (F.col("n_chars") < 0))
+            ).count()
+            if n_bad:
+                raise ValueError(
+                    f"jsonl_quarantine fixture precondition violated: {n_bad} "
+                    "corrupt-cohort rows (doc_id % 7 == 3) have NULL or "
+                    "negative n_chars — the raw-line triage regex cannot "
+                    "recover them and the quarantine aggregates would "
+                    "silently diverge from the oracle"
+                )
+            payload = F.to_json(
+                F.struct("doc_id", "n_chars", "lang", "source", "text")
             )
-        payload = F.to_json(
-            F.struct("doc_id", "n_chars", "lang", "source", "text")
-        )
-        line = F.when(
-            F.col("doc_id") % 7 == 3, F.concat(F.lit("{CORRUPT "), payload)
-        ).otherwise(payload)
-        d.select(line.alias("value")).write.mode("overwrite").text(path)
-        log_setup_time("setup:jsonl_quarantine", _time.perf_counter() - t0)
+            line = F.when(
+                F.col("doc_id") % 7 == 3, F.concat(F.lit("{CORRUPT "), payload)
+            ).otherwise(payload)
+            d.select(line.alias("value")).write.mode("overwrite").text(path)
     clean, bad = corrupt_split(read_documents_jsonl(spark, path))
     clean_agg = clean.groupBy("lang").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),

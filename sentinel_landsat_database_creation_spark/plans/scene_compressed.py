@@ -33,7 +33,6 @@ rasterio and take the same plan with C decoders end to end.
 from __future__ import annotations
 
 import os
-import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -81,7 +80,7 @@ def ensure_fixture(spark: SparkSession, sf_dir: str) -> str:
     """Write the compressed GeoTIFF fixture once per session
     (applicationId-keyed path) and charge the one-time write to a
     `setup:` bench line (bench.py drains the memo log)."""
-    from ..operators.dedup import log_setup_time
+    from ..memo import timed
     from ..session import session_tmp_path
 
     p = params_for(sf_dir)
@@ -90,22 +89,21 @@ def ensure_fixture(spark: SparkSession, sf_dir: str) -> str:
     marker = os.path.join(root, "_DONE")
     if os.path.exists(marker):
         return root
-    t0 = time.perf_counter()
-    hr = _rows(spark, p["n_pairs"], HR_PREFIX, p["hrw"], 0, SENTINEL_BANDS)
-    lr = _rows(spark, p["n_pairs"], LR_PREFIX, p["lrw"], 4, LANDSAT_BANDS)
-    hr = hr.unionByName(_decoy_rows(spark, p["n_pairs"], HR_PREFIX))
-    lr = lr.unionByName(_decoy_rows(spark, p["n_pairs"], LR_PREFIX))
-    # two sink configs -> two writes: Deflate+tiled+float-predictor COGs
-    # for the HR side, LZW strips for the LR side
-    encode_rasters(
-        hr, root, compression="deflate", tile=(16, 16), predictor=3
-    ).write.format("noop").mode("overwrite").save()
-    encode_rasters(lr, root, compression="lzw").write.format("noop").mode(
-        "overwrite"
-    ).save()
-    with open(marker, "w") as f:
-        f.write("ok")
-    log_setup_time("setup:scene_cg_write", time.perf_counter() - t0)
+    with timed("setup:scene_cg_write"):
+        hr = _rows(spark, p["n_pairs"], HR_PREFIX, p["hrw"], 0, SENTINEL_BANDS)
+        lr = _rows(spark, p["n_pairs"], LR_PREFIX, p["lrw"], 4, LANDSAT_BANDS)
+        hr = hr.unionByName(_decoy_rows(spark, p["n_pairs"], HR_PREFIX))
+        lr = lr.unionByName(_decoy_rows(spark, p["n_pairs"], LR_PREFIX))
+        # two sink configs -> two writes: Deflate+tiled+float-predictor COGs
+        # for the HR side, LZW strips for the LR side
+        encode_rasters(
+            hr, root, compression="deflate", tile=(16, 16), predictor=3
+        ).write.format("noop").mode("overwrite").save()
+        encode_rasters(lr, root, compression="lzw").write.format("noop").mode(
+            "overwrite"
+        ).save()
+        with open(marker, "w") as f:
+            f.write("ok")
     return root
 
 

@@ -46,7 +46,6 @@ decoder changes).
 from __future__ import annotations
 
 import os
-import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -114,7 +113,7 @@ def _dn_rows(spark: SparkSession, n_pairs: int, width: int) -> DataFrame:
 def ensure_fixture(spark: SparkSession, sf_dir: str) -> str:
     """Write the int16 fixture once per session (applicationId-keyed
     path; one-time cost charged to a `setup:` bench line)."""
-    from ..operators.dedup import log_setup_time
+    from ..memo import timed
     from ..session import session_tmp_path
 
     p = params_for(sf_dir)
@@ -123,25 +122,24 @@ def ensure_fixture(spark: SparkSession, sf_dir: str) -> str:
     marker = os.path.join(root, "_DONE")
     if os.path.exists(marker):
         return root
-    t0 = time.perf_counter()
-    rows = _dn_rows(spark, p["n_pairs"], p["w"]).unionByName(
-        _decoy_rows(spark, p["n_pairs"], PREFIX)
-    )
-    # LZW + horizontal predictor: the classic integer distribution
-    # layout, and the layout whose encoder the round-7 EOI-width fix
-    # touched — keeping it under the driver's hash gate.
-    encode_rasters(
-        rows,
-        root,
-        compression="lzw",
-        predictor=2,
-        dtype="int16",
-        scale=SCALE,
-        offset=OFFSET,
-    ).write.format("noop").mode("overwrite").save()
-    with open(marker, "w") as f:
-        f.write("ok")
-    log_setup_time("setup:scene_i16_write", time.perf_counter() - t0)
+    with timed("setup:scene_i16_write"):
+        rows = _dn_rows(spark, p["n_pairs"], p["w"]).unionByName(
+            _decoy_rows(spark, p["n_pairs"], PREFIX)
+        )
+        # LZW + horizontal predictor: the classic integer distribution
+        # layout, and the layout whose encoder the round-7 EOI-width fix
+        # touched — keeping it under the driver's hash gate.
+        encode_rasters(
+            rows,
+            root,
+            compression="lzw",
+            predictor=2,
+            dtype="int16",
+            scale=SCALE,
+            offset=OFFSET,
+        ).write.format("noop").mode("overwrite").save()
+        with open(marker, "w") as f:
+            f.write("ok")
     return root
 
 

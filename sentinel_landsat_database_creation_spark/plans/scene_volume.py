@@ -47,7 +47,6 @@ letting per-element Python touch a volume path.
 from __future__ import annotations
 
 import os
-import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -162,8 +161,8 @@ def ensure_fixture(spark: SparkSession, sf_dir: str) -> str:
     """Write the GeoTIFF fixture once per session (applicationId-keyed
     path, so existence implies this session built it) and charge the
     one-time write to a `setup:` bench line instead of whichever query
-    triggered it (bench.py drains operators.dedup.MEMO_BUILD_LOG)."""
-    from ..operators.dedup import log_setup_time
+    triggered it (bench.py drains memo.drain_build_log)."""
+    from ..memo import timed
     from ..session import session_tmp_path
 
     p = params_for(sf_dir)
@@ -172,24 +171,23 @@ def ensure_fixture(spark: SparkSession, sf_dir: str) -> str:
     marker = os.path.join(root, "_DONE")
     if os.path.exists(marker):
         return root
-    t0 = time.perf_counter()
-    slots = p.get("slots", 32)
-    rows = (
-        _band_rows(
-            spark, p["n_pairs"], HR_PREFIX, p["hrw"], 0, SENTINEL_BANDS, slots
-        )
-        .unionByName(
+    with timed("setup:scene_volume_write"):
+        slots = p.get("slots", 32)
+        rows = (
             _band_rows(
-                spark, p["n_pairs"], LR_PREFIX, p["lrw"], 4, LANDSAT_BANDS, slots
+                spark, p["n_pairs"], HR_PREFIX, p["hrw"], 0, SENTINEL_BANDS, slots
             )
+            .unionByName(
+                _band_rows(
+                    spark, p["n_pairs"], LR_PREFIX, p["lrw"], 4, LANDSAT_BANDS, slots
+                )
+            )
+            .unionByName(_decoy_rows(spark, p["n_pairs"], HR_PREFIX))
+            .unionByName(_decoy_rows(spark, p["n_pairs"], LR_PREFIX))
         )
-        .unionByName(_decoy_rows(spark, p["n_pairs"], HR_PREFIX))
-        .unionByName(_decoy_rows(spark, p["n_pairs"], LR_PREFIX))
-    )
-    encode_rasters(rows, root).write.format("noop").mode("overwrite").save()
-    with open(marker, "w") as f:
-        f.write("ok")
-    log_setup_time("setup:scene_volume_write", time.perf_counter() - t0)
+        encode_rasters(rows, root).write.format("noop").mode("overwrite").save()
+        with open(marker, "w") as f:
+            f.write("ok")
     return root
 
 

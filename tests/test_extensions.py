@@ -2181,6 +2181,48 @@ def test_train_pq_codebooks_empty_cell_carries(spark):
         assert got[(s, 0)] != init_map[(s, 0)]
 
 
+def test_trainer_memo_hit_launches_no_spark_job(spark):
+    """A second trainer call on the same frame with the same params is
+    a pure driver-side memo hit: the dimension probe and its guards run
+    inside the memoized build, so the hit launches zero Spark jobs
+    (counted by job group). q_ivfpq_trained and the ann_index setup
+    both call train_pq_codebooks(e, 4, 16, 2) on one corpus."""
+    import uuid
+
+    from sentinel_landsat_database_creation_spark.operators.similarity import (
+        train_centroids,
+        train_pq_codebooks,
+        train_pq_codebooks_residual,
+    )
+
+    sc = spark.sparkContext
+    # a plan no other test trains on, so the first call is a miss
+    e = table(spark, SF, "embeddings").filter(F.col("vec_id") != -7)
+
+    def jobs(call):
+        group = f"memo-hit-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "trainer memo probe")
+        try:
+            out = call()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    coarse, n_cold = jobs(lambda: train_centroids(e, n_centroids=16, n_iters=2))
+    assert n_cold > 0, "the job-group counter must see the cold build"
+    for call in (
+        lambda: train_centroids(e, n_centroids=16, n_iters=2),
+        lambda: train_pq_codebooks(e, m=4, n_sub_centroids=16, n_iters=2),
+        lambda: train_pq_codebooks_residual(
+            e, coarse, m=4, n_sub_centroids=16, n_iters=1
+        ),
+    ):
+        cold, _ = jobs(call)
+        hot, n_hot = jobs(call)
+        assert hot == cold
+        assert n_hot == 0, f"memo hit launched {n_hot} Spark job(s)"
+
+
 def test_ivfpq_trained_recall_beats_standin(spark):
     """The r10 VERDICT's acceptance test for trained quantizers:
     recall of the fully-trained IVFADC stack must be >= the first-K

@@ -129,15 +129,15 @@ def test_salted_join_matches_plain(spark, events):
 
 
 def test_memo_checkpoint_rebuilds_after_block_loss(spark, events):
-    """The dedup memo must not hand out a handle whose localCheckpoint
+    """The checkpoint memo must not hand out a handle whose localCheckpoint
     blocks are gone (lineage is truncated — such a handle can never
     recompute). Simulate block loss by unpersisting the checkpoint RDD
     out from under the cache, then assert the next call detects it via
     the persistent-RDD registry probe and rebuilds instead of failing."""
-    from sentinel_landsat_database_creation_spark.operators.dedup import (
-        _MEMO_CACHE,
-        _memo_checkpoint,
+    from sentinel_landsat_database_creation_spark.memo import (
+        _CHECKPOINTS,
         _release_checkpoint,
+        checkpoint_memo,
     )
 
     src = events.select("user_id").distinct()
@@ -147,23 +147,23 @@ def test_memo_checkpoint_rebuilds_after_block_loss(spark, events):
         builds.append(1)
         return src
 
-    first = _memo_checkpoint(src, ("memo-guard-test",), builder)
+    first = checkpoint_memo(src, ("memo-guard-test",), builder)
     n0 = first.count()
     assert n0 > 0 and builds == [1]
     # hit: same key returns the cached handle, no rebuild
-    again = _memo_checkpoint(src, ("memo-guard-test",), builder)
+    again = checkpoint_memo(src, ("memo-guard-test",), builder)
     assert builds == [1] and again.count() == n0
 
     # kill the blocks the way an executor loss / eviction would
-    key = next(k for k in _MEMO_CACHE if k[-1] == "memo-guard-test")
-    _, ck_ids = _MEMO_CACHE[key]
+    key = next(k for k in _CHECKPOINTS if k[-1] == "memo-guard-test")
+    _, ck_ids = _CHECKPOINTS[key]
     assert ck_ids, "creation must capture the checkpoint RDD ids"
     _release_checkpoint(spark, ck_ids)
 
-    rebuilt = _memo_checkpoint(src, ("memo-guard-test",), builder)
+    rebuilt = checkpoint_memo(src, ("memo-guard-test",), builder)
     assert builds == [1, 1], "stale entry must trigger a rebuild"
     assert rebuilt.count() == n0
-    del _MEMO_CACHE[next(k for k in _MEMO_CACHE if k[-1] == "memo-guard-test")]
+    del _CHECKPOINTS[next(k for k in _CHECKPOINTS if k[-1] == "memo-guard-test")]
 
 
 def test_verify_scale_harness_names_resolve_at_module_level():

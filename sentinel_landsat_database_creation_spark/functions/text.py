@@ -62,10 +62,6 @@ def shingles(toks: Column, n: int = 3) -> Column:
     )
 
 
-def stopword_count(toks: Column, stopwords: tuple[str, ...] = STOPWORDS) -> Column:
-    return F.size(F.filter(toks, lambda t: t.isin(*stopwords)))
-
-
 def fingerprint(text: Column) -> Column:
     """Whole-document fingerprint: md5 over the normalized token stream."""
     return F.md5(F.array_join(tokens(F.lower(text)), " "))
@@ -142,24 +138,3 @@ def minhash_signature(shingle_col: Column, n_hashes: int) -> Column:
             for i in range(n_hashes)
         ]
     )
-
-
-def simhash16(toks: Column) -> Column:
-    """16-bit SimHash over token md5s: bit j is set when the majority of
-    tokens have hex nibble j >= 8 (each nibble's top bit votes +1/-1)."""
-    hashed = F.transform(toks, lambda t: F.md5(t))
-    bit_votes = [
-        F.aggregate(
-            hashed,
-            F.lit(0),
-            lambda acc, h: acc
-            + F.when(
-                F.conv(F.substring(h, j + 1, 1), 16, 10).cast("int") >= 8, 1
-            ).otherwise(-1),
-        )
-        for j in range(16)
-    ]
-    out = F.lit(0)
-    for j, vote in enumerate(bit_votes):
-        out = out + F.when(vote >= 0, F.lit(1 << j)).otherwise(F.lit(0))
-    return out.cast("int")

@@ -26,6 +26,11 @@ the fixed calendar grid at main_function_beta.py:29 could produce
 leading empties with mid-year data); "no row" is this engine's
 documented spec choice, and tests/test_properties.py pins all three
 run positions.
+
+The pipeline's stages 1-2 (``plans/satellite.py:build_scene_pairs``)
+need only which bins pair, not labels or placeholder rows: they start
+from the same ``binned_scenes`` projection and pair bins by rank with
+``paired_bins``.
 """
 
 from __future__ import annotations
@@ -62,6 +67,35 @@ def label_weeks(df: DataFrame, date_expr: Column) -> DataFrame:
     )
 
 
+def binned_scenes(listing: DataFrame, date_expr: Column, grid: WeekGrid) -> DataFrame:
+    """The in-range scenes of ``listing`` (column ``data``) with their
+    parsed ``date`` and 0-based grid ``bin`` (ops 36/37', 15, 21) — the
+    projection both ``build_catalog`` and the pipeline's pairing path
+    (``plans/satellite.py:build_scene_pairs``) start from."""
+    return (
+        listing.select(F.col("data"))
+        .withColumn("date", date_expr)
+        .filter(grid.in_range(F.col("date")))
+        .withColumn("bin", grid.bin_of(F.col("date")))
+    )
+
+
+def paired_bins(left_bins, right_bins) -> list[tuple[int, int]]:
+    """Week-class pairing on bin indexes: the k-th non-empty left bin
+    pairs with the k-th non-empty right bin, in week order.
+
+    This is exactly what equal class labels mean in
+    ``pair_catalogs(build_catalog(l), build_catalog(r))``: a label is
+    the base-26 form of the dense rank over a sensor's non-empty bins,
+    so two labels are equal iff the ranks are; an empty interior bin
+    consumes no letter, so it shifts no rank; and native pairing drops
+    the class="0" placeholders, so they pair with nothing. The surplus
+    bins of the sensor with more non-empty weeks pair with nothing.
+    Pure Python over at most ``grid.n_bins`` values per side.
+    """
+    return list(zip(sorted(set(left_bins)), sorted(set(right_bins))))
+
+
 def build_catalog(
     listing: DataFrame,
     date_expr: Column,
@@ -77,12 +111,7 @@ def build_catalog(
     are their bin's only row). Pass keep_week=True to retain the bin
     index and week-start date for downstream date-keyed joins.
     """
-    scenes = (
-        listing.select(F.col("data"))
-        .withColumn("date", date_expr)
-        .filter(grid.in_range(F.col("date")))
-        .withColumn("bin", grid.bin_of(F.col("date")))
-    )
+    scenes = binned_scenes(listing, date_expr, grid)
 
     # Tiny side: one row per non-empty bin, ranked in week order.
     bins = scenes.groupBy("bin").agg(F.count(F.lit(1)).alias("n"))

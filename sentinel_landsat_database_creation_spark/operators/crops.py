@@ -59,27 +59,33 @@ def candidate_centers(
     row-major order (column ``ord`` preserves it for the greedy walk).
 
     compat_bounds=True reproduces the reference's as-built upper limits
-    (count of centerline points, fct_data_extraction.py:62-64);
-    False uses the geometrically-correct raster dims.
+    (count of the mask row's centerline points,
+    fct_data_extraction.py:62-64); False uses the geometrically-correct
+    raster dims.
     """
     half = batch_size // 2
-    pts = mask.select(
-        "mask_id",
-        "height",
-        "width",
-        F.posexplode("pixels").alias("p", "v"),
-    ).filter(F.col("v") == 1)
+    keep = ["mask_id", "height", "width"] + (["n_pts"] if compat_bounds else [])
+    if compat_bounds:
+        # The centerline count is a per-mask-row array count, taken in
+        # its own projection so it runs once per mask row, not once per
+        # exploded pixel (Generate inlines the expressions above it).
+        mask = mask.select(
+            "mask_id",
+            "height",
+            "width",
+            "pixels",
+            F.size(F.filter("pixels", lambda v: v == 1)).alias("n_pts"),
+        )
+    pts = mask.select(*keep, F.posexplode("pixels").alias("p", "v")).filter(
+        F.col("v") == 1
+    )
     pts = pts.select(
-        "mask_id",
-        "height",
-        "width",
+        *keep,
         (F.col("p") / F.col("width")).cast("int").alias("r"),
         (F.col("p") % F.col("width")).cast("int").alias("c"),
         F.col("p").alias("ord"),
     )
     if compat_bounds:
-        n_pts = pts.groupBy("mask_id").agg(F.count(F.lit(1)).alias("n_pts"))
-        pts = pts.join(F.broadcast(n_pts), "mask_id")
         upper = F.col("n_pts") - 1 - half
         bounded = pts.filter(
             (F.col("r") > half)
@@ -103,11 +109,15 @@ def collected_centers(
     """``candidate_centers`` collected to the driver as {mask_id: [(ord,
     r, c), ...] in np.where order} — the input of the per-pair Arrow
     kernels. Bounded by the masks' centerlines BY DESIGN (~4k rows at a
-    256x256 dense mask), never by corpus size."""
+    256x256 dense mask), never by corpus size. The rows sort on the
+    driver: ``ord`` is the unique pixel index, so (mask_id, ord) is a
+    total order, and a Spark ``orderBy`` would cost a sampling job and
+    a range shuffle for a list this small."""
     out: dict = {}
     rows = candidate_centers(mask, batch_size, compat_bounds)
-    rows = rows.select("mask_id", "ord", "r", "c").orderBy("mask_id", "ord")
-    for m, o, r, c in rows.collect():
+    for m, o, r, c in sorted(
+        tuple(row) for row in rows.select("mask_id", "ord", "r", "c").collect()
+    ):
         out.setdefault(m, []).append((int(o), int(r), int(c)))
     return out
 

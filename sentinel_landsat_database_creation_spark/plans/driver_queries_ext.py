@@ -149,11 +149,6 @@ def _sql_h60(expr: str) -> str:
     return f"CAST(('0x' || substr(md5({expr}), 1, 15)) AS BIGINT)"
 
 
-def _sql_h120_hi(expr: str) -> str:
-    """hash120's second word (hex chars 16-30 of the same digest)."""
-    return f"CAST(('0x' || substr(md5({expr}), 16, 15)) AS BIGINT)"
-
-
 # distinct 2-gram shingle KEY list per document (60-bit md5 prefixes
 # of the '_'-joined windows; distinct AFTER hashing, like the Spark
 # side's explode -> hash60 -> distinct). width=120 (r10): the DuckDB

@@ -2,14 +2,19 @@
 lazy Spark plan graph (SURVEY.md §3 E1-E4), Parquet as the inter-stage
 format.
 
-    stage 1  build_catalog          per sensor          (E1)
-    stage 2  pair_catalogs          week-class join     (E2)
-    stage 3  decode + stack_bands   scene tensors       (E3)
-    stage 4  crop engine            aligned crop pairs  (E4)
+    stages 1-2  build_scene_pairs     week-class pairs    (E1+E2)
+    stage 3     decode + stack_bands  scene tensors       (E3)
+    stage 4     crop engine           aligned crop pairs  (E4)
+
+Stages 1-2 are a metadata problem: ``build_scene_pairs`` collects the
+non-empty (sensor, week bin) set — bounded by the week grid, at most
+2 * n_bins rows — pairs the bins on the driver and joins the scene
+names to that table; the labeled catalogs (``build_catalog``,
+``pair_catalogs``) remain the CSV-output path, not the pipeline's.
 
 At 100 TB each stage boundary is an ordinary shuffle (or a Parquet
 handoff if checkpointing is desired). Scene tensors partition by scene.
-Stage 4 is one per-pair Arrow kernel over the pair tensors: the only
+Stage 4 is one per-pair Arrow kernel over the pair tensors: its only
 driver collect is the mask's candidate-center list (bounded by one
 centerline), each pair row crosses into Python once, and crops come
 back as rows partitioned like their pairs — no Exchange ever carries a
@@ -25,10 +30,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.dates import GOLDEN_GRID, WeekGrid, hls_date, s2_date
-from ..operators.catalog import build_catalog
+from ..operators.catalog import binned_scenes, paired_bins
 from ..operators.crops import collected_centers, crop_pairs
-from ..operators.pairing import pair_catalogs
 from ..operators.stacking import stack_bands
+from ..session import local_df
 
 
 @dataclass(frozen=True)
@@ -51,21 +56,62 @@ def build_scene_pairs(
     hls_root: str = "L8",
     grid: WeekGrid = GOLDEN_GRID,
 ) -> DataFrame:
-    """Stages 1-2: catalogs for both sensors, paired by week class.
-    Returns exploded (pair_id, s2_scene, hls_scene) rows — the
-    ArrayType pair table flattened for downstream joining."""
-    s2_cat = build_catalog(
-        s2_listing, s2_date(F.col("data")), s2_root, grid, keep_week=True
+    """Stages 1-2: pair every S2 scene with every HLS scene of the same
+    week class. Returns (pair_id, s2_scene, hls_scene) rows in the
+    order of the exploded ``pair_catalogs`` table (S2 week, S2 name,
+    HLS name), ``pair_id = xxhash64(s2_path, hls_path)``.
+
+    No catalog is built. The one driver collect is the distinct
+    non-empty (sensor, bin) set over both listings — at most
+    ``2 * grid.n_bins`` rows, bounded by the week grid, never by the
+    data — and ``operators/catalog.py:paired_bins`` turns it into the
+    (s2_bin, hls_bin) table that equal class labels would pair: a
+    label is the dense rank over a sensor's non-empty bins, interior
+    empty bins consume no letter, and native pairing drops the
+    placeholders. That table attaches as one literal relation,
+    broadcast to the S2 scene projection; the HLS names (metadata, as
+    ``pair_catalogs``' broadcast right side was) join on their bin.
+    Each S2 name pairs once (``pair_catalogs`` keys its output by S2
+    path); HLS names keep their multiplicity. The final sort holds for
+    a direct consumer; under a join (``build_pair_tensors``) Spark's
+    EliminateSorts drops it, so the pipeline pays no range shuffle.
+
+    ``build_catalog`` and ``pair_catalogs`` stay for the CSV outputs
+    and their registry users: they emit labels and placeholder rows,
+    which this path never needs.
+    """
+    s2 = binned_scenes(s2_listing, s2_date(F.col("data")), grid)
+    hls = binned_scenes(hls_listing, hls_date(F.col("data")), grid)
+    # One task: the listings are metadata, and a single partition lets
+    # the distinct finish without an Exchange — one job.
+    nonempty = (
+        s2.select(F.lit(0).alias("sensor"), "bin")
+        .unionByName(hls.select(F.lit(1).alias("sensor"), "bin"))
+        .coalesce(1)
+        .distinct()
+        .collect()
     )
-    hls_cat = build_catalog(
-        hls_listing, hls_date(F.col("data")), hls_root, grid, keep_week=True
+    bins = local_df(
+        s2_listing.sparkSession,
+        paired_bins(
+            [b for s, b in nonempty if s == 0], [b for s, b in nonempty if s == 1]
+        ),
+        "s2_bin long, hls_bin long",
     )
-    pairs = pair_catalogs(s2_cat, hls_cat)
-    exploded = pairs.select(
-        F.col("data_1").alias("s2_path"),
-        F.explode("data_2").alias("hls_path"),
+    s2_side = s2.select(
+        F.col("bin").alias("s2_bin"),
+        F.col("data").alias("s2_data"),
+        F.concat_ws("/", F.lit(s2_root), "data").alias("s2_path"),
+    ).distinct()
+    hls_side = hls.select(
+        F.col("bin").alias("hls_bin"),
+        F.col("data").alias("hls_data"),
+        F.concat_ws("/", F.lit(hls_root), "data").alias("hls_path"),
     )
-    return exploded.select(
+    pairs = s2_side.join(F.broadcast(bins), "s2_bin").join(
+        F.broadcast(hls_side), "hls_bin"
+    )
+    return pairs.orderBy("s2_bin", "s2_data", "hls_data").select(
         F.xxhash64("s2_path", "hls_path").alias("pair_id"),
         F.element_at(F.split("s2_path", "/"), -1).alias("s2_scene"),
         F.element_at(F.split("hls_path", "/"), -1).alias("hls_scene"),

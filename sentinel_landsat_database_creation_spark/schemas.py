@@ -114,16 +114,3 @@ MEDIA_SCHEMA = StructType(
         StructField("duration_ms", LongType(), True),
     ]
 )
-
-TESTDATA_TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)

@@ -10,7 +10,6 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..schemas import TESTDATA_TABLES
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -56,7 +55,3 @@ def normalize_event_ts(df: DataFrame) -> DataFrame:
     elif ts_type == "timestamp_ntz":
         df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: table(spark, sf_dir, t) for t in TESTDATA_TABLES}

@@ -508,3 +508,87 @@ def test_greedy_scale_twin_matches_generated_oracle(spark):
     odf = duckdb.connect().execute(greedy_oracle_sql(8)).df()
     assert len(sdf) == 8
     pd.testing.assert_frame_equal(sdf.astype(odf.dtypes.to_dict()), odf)
+
+
+def _jobs_of(spark, call):
+    """(call's result, Spark jobs it launched), counted by job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job count probe")
+    try:
+        out = call()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_scene_pairs_collect_one_job_and_plan_no_catalog(spark):
+    """Stages 1-2 (build_scene_pairs) never build a catalog: the call
+    launches exactly one Spark job — the grid-bounded (sensor, bin)
+    collect — and the returned plan has no Window (dense_rank), Range
+    (placeholder spine) or Generate (explode) node left."""
+    from sentinel_landsat_database_creation_spark.plans.satellite import (
+        build_scene_pairs,
+    )
+    from sentinel_landsat_database_creation_spark.session import local_df
+
+    s2 = local_df(
+        spark,
+        [("20230315T104629_N0509_T32UNU",), ("20230329T104629_N0509_T32UNU",)],
+        "data string",
+    )
+    hls = local_df(
+        spark,
+        [("HLS.L30.T32UNU.2023074T104629.v2.0",), ("HLS.L30.T32UNU.2023089T1.v2.0",)],
+        "data string",
+    )
+    # 2023-03-29 and doy 089 (03-30) fall in different weeks, but each
+    # is its sensor's second non-empty week: both carry class "b"
+    pairs, n_jobs = _jobs_of(spark, lambda: build_scene_pairs(s2, hls))
+    assert n_jobs == 1
+    names = {name for name, _cols in _formatted_nodes(pairs)}
+    assert not names & {"Window", "Range", "Generate"}, names
+    assert [(r["s2_scene"], r["hls_scene"]) for r in pairs.collect()] == [
+        ("20230315T104629_N0509_T32UNU", "HLS.L30.T32UNU.2023074T104629.v2.0"),
+        ("20230329T104629_N0509_T32UNU", "HLS.L30.T32UNU.2023089T1.v2.0"),
+    ]
+
+
+def test_collected_centers_one_job_matches_candidate_centers(spark):
+    """collected_centers is candidate_centers' rows sorted by (mask_id,
+    ord) and grouped per mask, under both bound modes, in ONE Spark
+    job: the sort runs on the driver and the compat centerline count is
+    a per-mask-row array count, so neither adds an Exchange."""
+    import numpy as np
+
+    from sentinel_landsat_database_creation_spark.operators.crops import (
+        candidate_centers,
+        collected_centers,
+    )
+    from sentinel_landsat_database_creation_spark.session import local_df
+
+    rng = np.random.default_rng(7)
+    masks = local_df(
+        spark,
+        [
+            (m, 40, 40, (rng.random(1600) < p).astype(float).tolist())
+            for m, p in ((1, 0.05), (2, 0.3))
+        ],
+        "mask_id int, height int, width int, pixels array<double>",
+    )
+    for compat in (True, False):
+        got, n_jobs = _jobs_of(
+            spark, lambda: collected_centers(masks, 6, compat_bounds=compat)
+        )
+        assert n_jobs == 1, compat
+        want: dict = {}
+        for m, o, r, c in sorted(
+            tuple(x)
+            for x in candidate_centers(masks, 6, compat_bounds=compat)
+            .select("mask_id", "ord", "r", "c")
+            .collect()
+        ):
+            want.setdefault(m, []).append((o, r, c))
+        assert got == want and sorted(got) == [1, 2], compat

@@ -7,7 +7,7 @@ from __future__ import annotations
 
 import datetime as dt
 
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from sentinel_landsat_database_creation_spark.functions.dates import (
@@ -182,6 +182,82 @@ def test_catalog_empty_bin_runs(spark, occupancy, per_bin):
     )
     assert ph_bins == [b for b in range(lo + 1, hi) if b not in occupied]
     assert all(r["class"] == "0" for r in rows if r["data"] == "0")
+
+
+# ---------------------------------------------------------------------------
+# build_scene_pairs (rank-paired bins, no catalog) vs the catalog
+# composition it replaced: two build_catalog(keep_week=True) calls,
+# pair_catalogs, explode, the same pair_id. Scenes are drawn as (week
+# offset from the grid's first edge, day, name suffix): offsets past
+# either end land outside the grid, (n_bins, 0) is the last edge (kept,
+# in the last bin), repeated draws give several scenes per week and
+# repeated names, and the two sensors' non-empty week counts differ.
+
+_grid_scenes = st.lists(
+    st.tuples(
+        st.integers(-2, GOLDEN_GRID.n_bins + 1),
+        st.integers(0, 6),
+        st.integers(0, 2),
+    ),
+    max_size=14,
+)
+
+
+def _scene_day(week: int, day: int) -> dt.date:
+    return GOLDEN_GRID.first_edge + dt.timedelta(weeks=week, days=day)
+
+
+def _catalog_scene_pairs(s2, hls):
+    from sentinel_landsat_database_creation_spark.functions.dates import hls_date
+    from sentinel_landsat_database_creation_spark.operators.pairing import (
+        pair_catalogs,
+    )
+
+    pairs = pair_catalogs(
+        build_catalog(s2, s2_date(F.col("data")), "S2", GOLDEN_GRID, keep_week=True),
+        build_catalog(hls, hls_date(F.col("data")), "L8", GOLDEN_GRID, keep_week=True),
+    )
+    return pairs.select(
+        F.col("data_1").alias("s2_path"), F.explode("data_2").alias("hls_path")
+    ).select(
+        F.xxhash64("s2_path", "hls_path").alias("pair_id"),
+        F.element_at(F.split("s2_path", "/"), -1).alias("s2_scene"),
+        F.element_at(F.split("hls_path", "/"), -1).alias("hls_scene"),
+    )
+
+
+_LAST = GOLDEN_GRID.n_bins
+
+
+@settings(max_examples=6, deadline=None)
+@example([(0, 0, 0), (2, 3, 0), (2, 3, 0), (2, 3, 1), (5, 0, 0), (_LAST, 0, 0)],
+         [(-1, 6, 0), (1, 0, 0), (1, 0, 0), (_LAST, 0, 0), (_LAST, 1, 0)])
+@example([], [(3, 0, 0)])
+@given(_grid_scenes, _grid_scenes)
+def test_scene_pairs_match_catalog_composition(spark, s2_draw, hls_draw):
+    from sentinel_landsat_database_creation_spark.plans.satellite import (
+        build_scene_pairs,
+    )
+    from sentinel_landsat_database_creation_spark.session import local_df
+
+    s2 = local_df(
+        spark,
+        [(f"{_scene_day(w, d):%Y%m%d}T0000{k:02d}_x_T1",) for w, d, k in s2_draw],
+        "data string",
+    )
+    hls = local_df(
+        spark,
+        [
+            (f"HLS.L30.T1.{x.year}{x.timetuple().tm_yday:03d}T0000{k:02d}.v2.0",)
+            for x, k in ((_scene_day(w, d), k) for w, d, k in hls_draw)
+        ],
+        "data string",
+    )
+    got = build_scene_pairs(s2, hls)
+    want = _catalog_scene_pairs(s2, hls)
+    assert got.exceptAll(want).count() == 0
+    assert want.exceptAll(got).count() == 0
+    assert got.collect() == want.collect()
 
 
 # ---------------------------------------------------------------------------

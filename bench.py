@@ -358,6 +358,48 @@ def _record_baseline(
     _BASELINE_PATH.write_text(json.dumps(book, indent=1, sort_keys=True) + "\n")
 
 
+TOP_QUERIES_BUDGET = 1500  # bytes for the top_queries dict body
+
+
+def _top_queries(timings: dict, memo_timings: dict, sf) -> dict:
+    """The ``top_queries`` line: per-query visibility inside the
+    driver's 2000-char stdout tail (r13 VERDICT item 2: PERF per_query
+    had been empty since r03 because only the tail survives). The FULL
+    set cannot fit: the 100 query names alone are 1555 chars, and the
+    most aggressive complete encoding (integer deciseconds, no wrapper)
+    measures 2117 chars against the ~1865 available next to the summary
+    line. So it holds the most informative prefix that fits: entries
+    sorted by descending warm seconds, as many as fit a fixed byte
+    budget. The omitted entries are the sub-noise-floor crowd (the
+    regression gate itself ignores moves under 0.3 s absolute), and the
+    line says exactly what it holds (n_total/n_shown + the max omitted
+    value) so a partial dict can never be misread as the full run. The
+    complete per-query record remains in the first payload line and in
+    the committed BENCH_PREV.json."""
+    by_cost = sorted(
+        ((n, t) for n, t in timings.items() if n not in memo_timings),
+        key=lambda kv: -kv[1],
+    )
+    top: dict[str, float] = {}
+    used = 0
+    for n, t in by_cost:
+        cost = len(n) + len(f"{t:.2f}") + 6
+        if used + cost > TOP_QUERIES_BUDGET:
+            break
+        top[n] = round(t, 2)
+        used += cost
+    return {
+        "metric": "top_queries",
+        "n_total": len(timings) - len(memo_timings),
+        "n_shown": len(top),
+        "omitted_max_sec": (
+            round(by_cost[len(top)][1], 2) if len(top) < len(by_cost) else 0.0
+        ),
+        "top_queries": top,
+        "sf": float(sf),
+    }
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
@@ -544,48 +586,9 @@ def main() -> None:
     except Exception:  # noqa: BLE001 — labeling must never fail a run
         pass
     print(json.dumps(payload))
-    # Per-query visibility inside the driver's 2000-char stdout tail
-    # (r13 VERDICT item 2: PERF per_query has been empty since r03
-    # because only the tail survives). The FULL set cannot fit: the 100
-    # query names alone are 1555 chars, and the most aggressive
-    # complete encoding (integer deciseconds, no wrapper) measures
-    # 2117 chars against the ~1865 available next to the summary line.
-    # So emit the most informative prefix that fits: entries sorted by
-    # descending warm seconds, as many as fit a fixed byte budget. The
-    # omitted entries are the sub-noise-floor crowd (the regression
-    # gate itself ignores moves under 0.3 s absolute), and the line
-    # says exactly what it holds ("top_queries" + n_total/n_shown +
-    # the max omitted value) so a partial dict can never be misread as
-    # the full run. The complete per-query record remains in the first
-    # payload line and in the committed BENCH_PREV.json.
-    by_cost = sorted(
-        ((n, t) for n, t in timings.items() if n not in memo_timings),
-        key=lambda kv: -kv[1],
-    )
-    top: dict[str, float] = {}
-    budget = 1500  # bytes for the top_queries dict body
-    used = 0
-    for n, t in by_cost:
-        cost = len(n) + len(f"{t:.2f}") + 6
-        if used + cost > budget:
-            break
-        top[n] = round(t, 2)
-        used += cost
     print(
         json.dumps(
-            {
-                "metric": "top_queries",
-                "n_total": len(timings) - len(memo_timings),
-                "n_shown": len(top),
-                "omitted_max_sec": (
-                    round(by_cost[len(top)][1], 2)
-                    if len(top) < len(by_cost)
-                    else 0.0
-                ),
-                "top_queries": top,
-                "sf": float(sf),
-            },
-            separators=(",", ":"),
+            _top_queries(timings, memo_timings, sf), separators=(",", ":")
         )
     )
     # The driver captures only the tail of stdout; at 82+ queries the full

@@ -1772,68 +1772,18 @@ _BASE_REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | 
 # analyzed plan against a committed snapshot, so an accidental plan
 # change in a spilled query fails CI instead of relying on diff review.
 #
-# Round 13 prefix (mandatory rotation of the whole r12 tail): the 49
-# entries spilled in r12 were last driver-checked in r11 — the
-# staleness deadline — so ALL of them rotate back into the prefix,
-# leaving ONE free slot at the r12 registry size of 99. One in-prefix
-# merge this round funds a second addition (both parents inside the
-# r13 prefix at merge time — the two r12 merges are the template):
-# - span_dedup absorbs span_scrub (both halves of Lee et al.
-#   sub-document dedup — the REPORT half's per-doc coverage stats and
-#   the TRANSFORM half's maximal-range scrub with its kept_md5 text
-#   pin — run over ONE shared _span_occurrences memo with their
-#   per-doc rows joined, so every column of both retired shapes rides
-#   one hash; q_span_dedup docstring has the coverage argument).
-# The two slots fund, inside the r13 prefix per policy:
-# - ann_index_lifecycle (NEW, r12 VERDICT item 3): the persisted
-#   IVFADC index — codes+codebooks+coarse as parquet written once,
-#   appended to, deleted from (the lsh_index_write lifecycle applied
-#   to ANN), and PROBED from the files without retraining; per-cell
-#   content digests + the probe ranking under one hash;
-# - bpe_token_checks (NEW, r12 VERDICT item 4): a trained merge-table
-#   BPE (Sennrich et al. 2016) — merges trained on the capped word-
-#   frequency table, every distinct corpus word encoded via broadcast
-#   merge ranks, per-doc BPE token counts feeding the pack_sequences
-#   budget — against a recursive-CTE DuckDB mirror of both training
-#   and encoding.
-# Registry: 99 - 1 (absorbed) + 2 (new) = 100; prefix = 48 rotating
-# + ann_index_lifecycle + bpe_token_checks = 50; tail = the 50
-# r12-prefix entries below.
-#
-# (The r13 tail — the 50 r12-prefix entries — was r12-green and
-# untouched by r13's work; its history is in the r13 round artifacts.)
-#
-# r14 rotation (optimization round 2 of 2 — the mandatory swap the
-# r13 comment above committed to): the 50 entries spilled in r13 were
-# last driver-checked in r12 — the staleness deadline — so ALL of them
-# rotate into the r14 prefix; 50 rotating into a 100-entry registry
-# leaves ZERO free prefix slots and the round adds no entries (the
-# optimization brief forbids registry surgery: a query that disappears
-# or whose hash moves is a REGRESSION regardless of speed). The tail
-# below is therefore exactly the 50 r13-prefix entries — all r13-green
-# (CORRECTNESS_r13: rows+schema+hash, err null) — and untouched by
-# r14's work except behavior-preserving hardening (the
-# _no_data_batch refactor shared by the drain entries preserves each
-# drain's pinned flag direction; salted_agg gains a doc/guard with the
-# salt expression untouched). The r14 plan changes (crop_volume_greedy
-# and scene_tensors_volume/_compressed: HOF slicing -> one metadata-out
-# Arrow stage) are all PREFIX entries this round, per policy.
-# Streaming members of this tail (stream_weekly_counts,
-# stream_dedup_keys, stream_click_signup, stream_dedup_ttl,
-# stream_lsh_delta) are session-variant and enrolled in
-# ALLOWED_UNPINNED_TAIL with pinned batch twins; the in-repo replica
-# (tests/test_oracle_equivalence.py) still checks ALL entries.
-#
-# r15 rotation (the swap the r14 comment committed to): the 50 r14
-# tail entries were last driver-checked in r13, so ALL of them rotate
-# into the r15 prefix — zero free slots, no additions. The tail below
-# is exactly the 50 r14-prefix entries (driver-checked in r14, all
-# green) in registry order. The r15 plan change (crop_volume: stage 4
-# as one per-pair Arrow kernel) is a PREFIX entry, per policy; every
-# tail entry keeps its plan pin (the two session-sensitive stream
-# drains, stream_sessions and stream_sessions_native, stay in
+# r15 rotation (the current round): the 50 r14 tail entries were last
+# driver-checked in r13, so ALL of them rotate into the r15 prefix —
+# zero free slots, no additions. The tail below is exactly the 50
+# r14-prefix entries (driver-checked in r14, all green) in registry
+# order. The r15 plan change (crop_volume: stage 4 as one per-pair
+# Arrow kernel) is a PREFIX entry, per policy; every tail entry keeps
+# its plan pin (the two session-sensitive stream drains,
+# stream_sessions and stream_sessions_native, stay in
 # ALLOWED_UNPINNED_TAIL). crop_volume_greedy shares the NumPy gather
 # and quality helpers with the new kernel but its plan pin is unchanged.
+# The in-repo replica (tests/test_oracle_equivalence.py) still checks
+# ALL entries.
 #
 # r16 math: the 50 below are last driver-checked in r14, so they must
 # rotate back into the r16 prefix; the 50 r15-prefix entries become the

@@ -13,6 +13,9 @@ but every knob matters at cluster scale:
   DuckDB oracle.
 - maxPartitionBytes / shuffle.partitions are exposed so callers can size
   partitions to executor memory at the target scale factor.
+- Local masters start their Python workers from ``_daemon.py``, which
+  keeps Spark's zip-archive import finders static: without it every
+  Python task re-reads pyspark.zip and the spark-core jar (~0.2 s).
 """
 
 from __future__ import annotations
@@ -43,36 +46,46 @@ def get_spark(
         os.environ["PYTHONPATH"] = (
             f"{repo_root}{os.pathsep}{existing}" if existing else repo_root
         )
-    shuffle_partitions = shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
-    builder = (
-        SparkSession.builder.appName(app_name)
-        .master(master)
-        # Negative result, measured (keep the default 1g local-mode
-        # heap): raising spark.driver.memory to 16g made the blocked
-        # all-pairs cosine fold 7x SLOWER at sf0.1 (39s vs 5.6s A/B,
-        # same data) — the small heap keeps the hot arrays
-        # cache-resident; a big young gen spreads them out. GCLocker
-        # retry warnings under the 1g heap are benign here. On a real
-        # cluster size spark.executor.memory to the per-partition
-        # working set instead.
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.files.maxPartitionBytes", "128m")
-        .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-        .config("spark.ui.enabled", "false")
-        # testdata events.parquet carries TIMESTAMP(NANOS); surface it as
-        # long nanos instead of failing the scan (sources.testdata converts)
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.driver.extraJavaOptions", "-Duser.timezone=UTC")
-        .config("spark.executor.extraJavaOptions", "-Duser.timezone=UTC")
-    )
-    for k, v in (extra_conf or {}).items():
+    builder = SparkSession.builder.appName(app_name).master(master)
+    conf = session_conf(master, shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS)
+    for k, v in {**conf, **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def session_conf(master: str, shuffle_partitions: int) -> dict[str, str]:
+    """The session defaults ``get_spark`` applies before ``extra_conf``."""
+    # Negative result, measured (keep the default 1g local-mode heap):
+    # raising spark.driver.memory to 16g made the blocked all-pairs
+    # cosine fold 7x SLOWER at sf0.1 (39s vs 5.6s A/B, same data) — the
+    # small heap keeps the hot arrays cache-resident; a big young gen
+    # spreads them out. GCLocker retry warnings under the 1g heap are
+    # benign here. On a real cluster size spark.executor.memory to the
+    # per-partition working set instead.
+    conf = {
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.shuffle.partitions": str(shuffle_partitions),
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.files.maxPartitionBytes": "128m",
+        "spark.sql.autoBroadcastJoinThreshold": "64m",
+        "spark.ui.enabled": "false",
+        # testdata events.parquet carries TIMESTAMP(NANOS); surface it as
+        # long nanos instead of failing the scan (sources.testdata converts)
+        "spark.sql.legacy.parquet.nanosAsLong": "true",
+        "spark.driver.extraJavaOptions": "-Duser.timezone=UTC",
+        "spark.executor.extraJavaOptions": "-Duser.timezone=UTC",
+    }
+    # Local workers inherit the PYTHONPATH get_spark sets, so they can
+    # start from the engine's daemon (static zip import finders, see
+    # _daemon.py); a cluster's workers keep pyspark's own daemon.
+    if master == "local" or master.startswith("local["):
+        conf["spark.python.daemon.module"] = (
+            "sentinel_landsat_database_creation_spark._daemon"
+        )
+    return conf
 
 
 def context_dead(spark: SparkSession) -> bool:
@@ -159,17 +172,22 @@ def local_df(spark: SparkSession, rows, schema: str, slices: int = 1):
     list, schema)`` on literal frames (centroids, codebooks, lexicons,
     mixture plans, merge tables).
 
-    Why (measured, r13 optimization round): the list overload
-    parallelizes into defaultParallelism slices (32 here), and every
-    downstream evaluation pays one Python-worker round trip PER SLICE
-    (~0.17 s each when a single task drains them sequentially — a
-    16-row frame under ``coalesce(1).write`` measured 5.7 s; the same
-    frame in ONE slice, 0.19 s; broadcast-build consumption 0.59 s vs
-    0.40 s). Literal frames are broadcast/build-side by construction,
-    so one slice is right at every scale — the rows already sit on the
-    driver, and the first thing every consumer does is ship them to
-    executors whole. The analyzed plan is ``LogicalRDD`` through both
-    paths, so plan snapshots and driver hashes are unaffected.
+    Why: the list overload parallelizes into defaultParallelism slices
+    (32 here), and every downstream evaluation runs one Python-worker
+    task PER SLICE. Literal frames are broadcast/build-side by
+    construction, so one slice is right at every scale — the rows
+    already sit on the driver, and the first thing every consumer does
+    is ship them to executors whole. The analyzed plan is
+    ``LogicalRDD`` through both paths, so plan snapshots and driver
+    hashes are unaffected.
+
+    Cost (4 vCPU, local workers on ``_daemon.py``): one evaluation of a
+    16-row frame (``collect``) takes ~0.1 s, the fixed cost of a Spark
+    job with one Python task; an Arrow-built ``LocalRelation`` of the
+    same rows, ~5 ms. The same frame under ``coalesce(1).write`` takes
+    1.55 s in 32 slices against 0.16 s in one, ~45 ms a slice. The
+    r13 figure of ~0.17 s a slice (5.7 s for 32) was mostly each
+    task's zip import-cache rebuild, which ``_daemon.py`` removed.
     """
     return spark.createDataFrame(
         spark.sparkContext.parallelize(rows, slices), schema

@@ -236,3 +236,34 @@ def test_calibration_guard_names_the_measurement_point(monkeypatch):
     r_start = bench._calibration_contended(ref * 2, "start")
     r_end = bench._calibration_contended(ref * 2, "end")
     assert "at start" in r_start and "at end" in r_end
+
+
+def test_top_queries_line_shape():
+    """The ``top_queries`` line (r14 VERDICT item 3): a partial dict
+    that says what it holds. 120 long-named entries overflow the byte
+    budget, so the line must report what it left out, show the costliest
+    entries, keep memo lines out, and fit its body in the budget."""
+    timings = {
+        f"entry_{i:03d}_" + "x" * (i % 17): round(0.01 + 0.37 * i, 4)
+        for i in range(120)
+    }
+    memo = {"memo:trainer": 9.5, "setup:lexicon": 3.25}
+    timings.update(memo)
+    line = bench._top_queries(timings, memo, "0.1")
+    assert list(line) == [
+        "metric", "n_total", "n_shown", "omitted_max_sec", "top_queries", "sf"
+    ]
+    assert line["metric"] == "top_queries" and line["sf"] == 0.1
+    assert line["n_total"] == 120
+    top = line["top_queries"]
+    assert 0 < line["n_shown"] == len(top) < line["n_total"]
+    assert not set(top) & set(memo)
+    assert 0 < line["omitted_max_sec"] <= min(top.values())
+    assert list(top.values()) == sorted(top.values(), reverse=True)
+    body = json.dumps(top, separators=(",", ":"))
+    assert len(body.encode()) <= bench.TOP_QUERIES_BUDGET
+
+    small = bench._top_queries({"a": 1.234, "b": 0.5}, {}, "0.01")
+    assert small["n_shown"] == small["n_total"] == 2
+    assert small["omitted_max_sec"] == 0.0
+    assert small["top_queries"] == {"a": 1.23, "b": 0.5}

@@ -123,18 +123,3 @@ def hash120(col: Column | str) -> list[Column]:
         F.conv(F.substring(digest, 1, 15), 16, 10).cast("long"),
         F.conv(F.substring(digest, 16, 15), 16, 10).cast("long"),
     ]
-
-
-def minhash_signature(shingle_col: Column, n_hashes: int) -> Column:
-    """MinHash signature as an array of n lexicographic-min md5 hex
-    digests, one per salted hash family member. Salting the input string
-    stands in for independent hash functions; min over hex strings is a
-    valid min-wise scheme because md5 output is uniform."""
-    return F.array(
-        *[
-            F.array_min(
-                F.transform(shingle_col, lambda s: F.md5(F.concat(F.lit(f"{i}:"), s)))
-            )
-            for i in range(n_hashes)
-        ]
-    )

@@ -35,8 +35,8 @@ On-disk LAYOUT at ``path`` (all parquet dirs Spark reads):
 
 Plan shape. The quantizers are tiny and live on the driver: write lands
 ``coarse/`` and ``codebooks/`` from the trainer lists with pyarrow, and
-append/probe read them back with pyarrow (:func:`load_quantizers`, also
-the streaming probe's loader) — no Spark job touches them. Encoding is
+append/probe read them back with pyarrow (:func:`load_quantizers`) —
+no Spark job touches them. Encoding is
 ONE ``mapInArrow`` NumPy kernel shared by write and append (scan →
 MapInArrow → the cell repartition → sort → parquet): per Arrow batch it
 quantizes on the quantize_vec grid, assigns each vector its best coarse
@@ -366,8 +366,8 @@ def ann_index_probe(
 
     Plan shape: the query batch is COLLECTED once with ``toArrow`` —
     nq·d values, the small-batch bound the probed-cell literal already
-    assumes (a probe batch is small by definition; big batches go
-    through the streaming probe or in slices). On the driver the
+    assumes (a probe batch is small by definition; big batches go in
+    slices). On the driver the
     encode kernel's functions (:class:`_Quantizers`, over the
     pyarrow-read quantizers) pick each query's top-``nprobe`` cells
     (score desc, cell asc) and compute its m·k* ADC LUT; both enter
@@ -415,50 +415,4 @@ def ann_index_probe(
         adc.withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") <= k)
         .select(*(F.col(c).cast("long") for c in ("qid", "rnk", "cid", "adc")))
-    )
-
-
-def exact_rerank(
-    topk: DataFrame,
-    queries: DataFrame,
-    corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Exact-cosine rerank of a probe's (qid, rnk, cid, ...) rows —
-    the deployment's second stage: the index answers from codes alone
-    (ann_index_probe stores no raw vectors BY DESIGN), and the bounded
-    nq·k survivor set joins back to the corpus table for exact
-    scoring. Returns (qid, rnk, cid, cos) with rnk re-assigned by
-    (cos desc, cid asc) within each qid — the ivfpq_topk_trained
-    output contract, so a probe + rerank pipeline is column-compatible
-    with the session-scoped trained stack. Both vector attaches
-    broadcast the small side: queries into the survivor set, and the
-    JOINED survivor set into the corpus scan — the hint must wrap the
-    corpus join's immediate child (a hint on topk alone does NOT
-    propagate through the first join, so the corpus's raw vectors
-    would sort-merge shuffle; code-review finding, r13). The cosine
-    attach deliberately restates ivfpq_topk_trained's rerank tail
-    (similarity.py) — the shapes are pinned equal by
-    tests/test_ann_index.py:test_exact_rerank_matches_trained_stack,
-    which breaks loudly if either side's arithmetic drifts."""
-    from .similarity import dot_cast, norm_cast
-
-    qv = queries.select(
-        F.col(id_col).alias("qid"), F.col(vec_col).alias("qv")
-    ).withColumn("qn", norm_cast(F.col("qv")))
-    cv = corpus.select(
-        F.col(id_col).alias("cid"), F.col(vec_col).alias("cv")
-    ).withColumn("cn", norm_cast(F.col("cv")))
-    survivors = topk.select("qid", "cid").join(F.broadcast(qv), "qid")
-    scored = cv.join(F.broadcast(survivors), "cid").withColumn(
-        "cos",
-        dot_cast(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")),
-    )
-    w = Window.partitionBy("qid").orderBy(F.desc("cos"), F.asc("cid"))
-    return scored.select(
-        F.col("qid").cast("long"),
-        F.row_number().over(w).cast("long").alias("rnk"),
-        F.col("cid").cast("long"),
-        "cos",
     )

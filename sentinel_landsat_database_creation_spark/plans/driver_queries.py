@@ -130,66 +130,26 @@ def _weekly_by_type(spark, sf, etype: str, alias: str) -> DataFrame:
     )
 
 
-def q_pair_count_by_class(spark: SparkSession, sf: str) -> DataFrame:
-    clicks = _weekly_by_type(spark, sf, "click", "n_click")
-    views = _weekly_by_type(spark, sf, "view", "n_view")
-    return (
-        clicks.join(views, "wk")
-        .select(
-            _week_start_str(F.col("wk")).alias("week_start"),
-            "n_click",
-            "n_view",
-            (F.col("n_click") * F.col("n_view")).cast("long").alias("n_pairs"),
-        )
-        .orderBy("week_start")
-    )
-
-
 _SQL_WEEKLY_TYPED = f"""
   SELECT {_WK} AS wk, count(*) AS n FROM events WHERE event_type = '{{t}}' GROUP BY 1
 """
 
-SQL_PAIR_COUNT_BY_CLASS = f"""
-WITH c AS ({_SQL_WEEKLY_TYPED.format(t="click")}), v AS ({_SQL_WEEKLY_TYPED.format(t="view")})
-SELECT {_WEEK_START} AS week_start,
-       CAST(c.n AS BIGINT) AS n_click, CAST(v.n AS BIGINT) AS n_view,
-       CAST(c.n * v.n AS BIGINT) AS n_pairs
-FROM c JOIN v USING (wk) ORDER BY week_start
-"""
-
-
-def q_pair_count_compat(spark: SparkSession, sf: str) -> DataFrame:
-    """The reference's as-built overcount (op 24): it loops left *rows*,
-    so each shared class contributes cntL(c)^2 * cntS(c)
-    (main_function_beta.py:77-80)."""
-    clicks = _weekly_by_type(spark, sf, "click", "n_click")
-    views = _weekly_by_type(spark, sf, "view", "n_view")
-    return clicks.join(views, "wk").agg(
-        F.sum(F.col("n_click") * F.col("n_click") * F.col("n_view"))
-        .cast("long")
-        .alias("n_pairs_compat")
-    )
-
-
-SQL_PAIR_COUNT_COMPAT = f"""
-WITH c AS ({_SQL_WEEKLY_TYPED.format(t="click")}), v AS ({_SQL_WEEKLY_TYPED.format(t="view")})
-SELECT CAST(sum(c.n * c.n * v.n) AS BIGINT) AS n_pairs_compat
-FROM c JOIN v USING (wk)
-"""
-
 
 def q_pair_counts(spark: SparkSession, sf: str) -> DataFrame:
-    """r8 merge: pair_count_by_class + pair_count_compat under one
-    driver hash — the per-week pairing-count row now also carries the
-    as-built compat term.
+    """r8 merge: the former ``pair_count_by_class`` and
+    ``pair_count_compat`` registry entries under one driver hash — the
+    per-week pairing-count row now also carries the as-built compat
+    term.
 
     Coverage argument (policy: a merge is green only if BOTH parents'
-    semantics are exact): the first four columns are
-    q_pair_count_by_class's output verbatim (same weekly click/view
-    join, same week rendering, same corrected n_pairs product); the
-    fifth column is the PER-WEEK term ``n_click^2 * n_view`` of
-    q_pair_count_compat's as-built overcount (op 24,
-    main_function_beta.py:77-80) whose sum over weeks IS the parent's
+    semantics are exact): the first four columns are the
+    ``pair_count_by_class`` entry's output verbatim (same weekly
+    click/view join, same week rendering, same corrected n_pairs
+    product); the fifth column is the PER-WEEK term
+    ``n_click^2 * n_view`` of the ``pair_count_compat`` entry's
+    as-built overcount (op 24: the reference loops left *rows*, so
+    each shared class contributes cntL(c)^2 * cntS(c),
+    main_function_beta.py:77-80) whose sum over weeks IS that entry's
     scalar — pinning every additive term is strictly stronger than
     pinning the sum. One scan pair and one join compute what the
     parents computed in two. Both parents sat in the rotating r6-green
@@ -844,14 +804,6 @@ def q_dedup_docs_exact(spark: SparkSession, sf: str) -> DataFrame:
         )
         .orderBy("fp")
     )
-
-
-SQL_DEDUP_DOCS_EXACT = """
-SELECT md5(array_to_string(list_slice(string_split(text, ' '), 1, 10), '|')) AS fp,
-       CAST(min(doc_id) AS BIGINT) AS keep_doc_id,
-       CAST(count(*) AS BIGINT) AS n_dups
-FROM documents GROUP BY 1 ORDER BY fp
-"""
 
 
 # ---------------------------------------------------------------------------

@@ -1272,9 +1272,6 @@ def q_lsh_append_probe(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-SQL_LSH_APPEND_PROBE = SQL_DELTA_NEARDUP
-
-
 def q_lsh_delta_checks(spark: SparkSession, sf: str) -> DataFrame:
     """r8 merge: delta_neardup + lsh_append_probe under one driver
     hash — the two persisted-LSH probe paths joined per verified pair.
@@ -2433,9 +2430,6 @@ FROM ranked WHERE rnk <= {3} ORDER BY qid, rnk
 """
 
 
-SQL_IVF_TRAINED_TOPK = _sql_ivf_trained_topk(1)
-
-
 def q_ann_recall_trained(spark: SparkSession, sf: str) -> DataFrame:
     """recall@k of trained-centroid IVF (nprobe=1 and nprobe=2) vs the
     first-K stand-in, all against the brute-force baseline (round-3
@@ -2953,73 +2947,6 @@ ORDER BY kind, cell, qid, rnk
 
 
 SQL_ANN_INDEX_LIFECYCLE = _sql_ann_index_lifecycle()
-
-
-def _sql_ann_radius(
-    radius: int,
-    m: int = 4,
-    dsub: int = 16,
-    ksub: int = 16,
-    nprobe: int = 2,
-    n_coarse: int = 16,
-    qfilter: str = "vec_id < 5",
-) -> str:
-    """DuckDB mirror of streaming/ann_delta.py:ann_radius_stream over
-    a FULL-corpus ann_index_write index — staged in r13 for the r14
-    merge-funded entry (the CLAUDE.md r14 note): coarse k-means + PQ
-    k-means + corpus codes + per-query nprobe cell assignment + the
-    exact-BIGINT ADC sum, RADIUS-filtered instead of ranked (radius is
-    the append-safe streaming contract — no per-qid window, so this
-    oracle is strictly simpler than the lifecycle's). Shares the
-    verified arithmetic with _sql_ann_index_lifecycle via the same
-    fragment generators; tests/test_streaming_ann.py already executes
-    it against the streaming plan, so the r14 entry only adds the
-    registry row and its fixture wiring."""
-    score = (
-        "list_aggregate(list_transform(range(1, 65),"
-        " i -> q.qv[i] * c.s[i]), 'sum')::DOUBLE"
-        " / sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),"
-        " list_transform(c.s, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))),"
-        " (a, x) -> a + x))"
-    )
-    return f"""
-WITH {_sql_kmeans_ctes(n_coarse)},
-{_sql_pq_kmeans_ctes(m, dsub, ksub)},
-ranked_cells AS MATERIALIZED (
-  SELECT q.vec_id, c.cell,
-         row_number() OVER (PARTITION BY q.vec_id
-                            ORDER BY {score} DESC, c.cell) AS rn
-  FROM q CROSS JOIN cf c
-),
-cells AS (SELECT vec_id, cell FROM ranked_cells WHERE rn = 1),
-qcells AS (SELECT vec_id, cell FROM ranked_cells
-           WHERE rn <= {nprobe} AND ({qfilter})),
-tdist AS MATERIALIZED (
-  SELECT sv.vec_id, sv.sub, p.cent_id,
-         CAST(list_aggregate(list_transform(range(1, {dsub + 1}),
-                i -> (sv.sq[i] - p.cv[i]) * (sv.sq[i] - p.cv[i])),
-              'sum') AS BIGINT) AS dist
-  FROM sv JOIN pbf p USING (sub)
-),
-tcodes AS (
-  SELECT vec_id, sub, cent_id AS code FROM (
-    SELECT *, row_number() OVER (PARTITION BY vec_id, sub
-                                 ORDER BY dist, cent_id) AS rn
-    FROM tdist) WHERE rn = 1
-),
-adc AS (
-  SELECT qq.vec_id AS qid, c.vec_id AS cid,
-         CAST(sum(d.dist) AS BIGINT) AS adc
-  FROM tcodes c
-  JOIN cells cc ON cc.vec_id = c.vec_id
-  JOIN qcells qq ON qq.cell = cc.cell AND qq.vec_id != c.vec_id
-  JOIN tdist d ON d.vec_id = qq.vec_id AND d.sub = c.sub
-              AND d.cent_id = c.code
-  GROUP BY 1, 2
-)
-SELECT CAST(qid AS BIGINT) AS qid, CAST(cid AS BIGINT) AS cid, adc
-FROM adc WHERE adc <= {radius} ORDER BY qid, cid
-"""
 
 
 def q_ann_index_lifecycle(spark: SparkSession, sf: str) -> DataFrame:

@@ -204,68 +204,6 @@ def test_empty_probe_and_append_after_delete(spark, quantizers, tmp_path):
     assert got == want and got
 
 
-def test_exact_rerank_matches_trained_stack(spark, quantizers, tmp_path):
-    """probe + exact_rerank must equal ivfpq_topk_trained row for row
-    (same candidate set by construction — the parity test above — so
-    the rerank's cosine arithmetic and (cos desc, cid) re-ranking are
-    the only new math, and they must reproduce the trained stack's
-    output contract exactly)."""
-    from sentinel_landsat_database_creation_spark.operators.ann_index import (
-        exact_rerank,
-    )
-    from sentinel_landsat_database_creation_spark.operators.similarity import (
-        ivfpq_topk_trained,
-    )
-
-    e, coarse, cb = quantizers
-    p = str(tmp_path / "annidx")
-    ann_index_write(e, p, coarse, cb, m=4)
-    q = e.filter(F.col("vec_id") < 5)
-    topk = ann_index_probe(spark, q, p, k=3, nprobe=2)
-    got = [
-        tuple(r)
-        for r in exact_rerank(topk, q, e).orderBy("qid", "rnk").collect()
-    ]
-    want_df = ivfpq_topk_trained(e, q, coarse, cb, k=3, m=4, nprobe=2)
-    # the trained stack keeps ADC rank order; re-rank its rows by
-    # (cos desc, cid) to state the shared contract
-    import itertools
-
-    rows = sorted(
-        ((r["qid"], -r["cos"], r["cid"], r["cos"]) for r in want_df.collect())
-    )
-    want = []
-    for qid, grp in itertools.groupby(rows, key=lambda t: t[0]):
-        for i, (_q, _nc, cid, cos) in enumerate(grp, start=1):
-            want.append((qid, i, cid, cos))
-    assert got == want and got
-
-
-def test_exact_rerank_broadcasts_survivors(spark, quantizers, tmp_path):
-    """The corpus-vector attach must build from the broadcast survivor
-    set — a sort-merge join here would shuffle every corpus row's raw
-    embedding, the exact cost the two-stage design exists to avoid
-    (the hint must wrap the corpus join's immediate child; a hint on
-    topk alone does not survive the first join)."""
-    from sentinel_landsat_database_creation_spark.operators.ann_index import (
-        exact_rerank,
-    )
-
-    e, coarse, cb = quantizers
-    p = str(tmp_path / "annidx")
-    ann_index_write(e, p, coarse, cb, m=4)
-    q = e.filter(F.col("vec_id") < 5)
-    topk = ann_index_probe(spark, q, p, k=3, nprobe=2)
-    plan = (
-        exact_rerank(topk, q, e)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "SortMergeJoin" not in plan, plan
-    assert plan.count("BroadcastHashJoin") >= 2, plan
-
-
 def _spark_reference_codes(spark, vectors, coarse, cb, m):
     """{cid: (cell, {sub: code})} by the Spark expressions the encode
     kernel replaces (similarity.py): _assign_trained's struct-max cell,

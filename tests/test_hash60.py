@@ -98,7 +98,8 @@ def test_hash60_prefix_min_commutes():
     """The r8 exactness lemma: for fixed-width lowercase hex, numeric
     order of the 60-bit prefix agrees with lexicographic order of the
     digest, so min commutes with prefixing. Checked over many random
-    salted-digest sets, the exact shape minhash_signature reduces."""
+    salted-digest sets, the shape operators/dedup.py:minhash_signatures
+    reduces (a min over the 60-bit prefixes of salted md5 digests)."""
     rng = random.Random(7)
     for _ in range(200):
         digests = [

@@ -96,96 +96,3 @@ def test_row_local_buckets_match_batch(spark, docs):
 def test_bucket_array_rejects_band_overflow():
     with pytest.raises(ValueError):
         _bucket_array(16, 8)
-
-
-def test_ttl_variant_cross_batch_eviction(spark, tmp_path):
-    """The bounded-state TTL twin (lsh_delta_stream_ttl) executable
-    end-to-end (r10, r9 VERDICT item 6): four micro-batches prove the
-    full state lifecycle of dropDuplicatesWithinWatermark on the
-    candidate keys —
-      batch 1  pair first seen            -> emitted
-      batch 2  duplicate inside horizon   -> suppressed (state live)
-      batch 3  unrelated doc advances the watermark past the horizon
-      batch 4  second advancing doc (eviction is lazy: the batch-3
-               watermark evicts at batch-3 END, so the dedup check of
-               the NEXT batch is the first to see the state gone)
-      batch 5  same pair re-arrives       -> RE-emitted (state evicted)
-    and the emitted DISTINCT set still equals the unbounded batch
-    plan's result over the same arrivals (expiry costs duplicate rows,
-    never correctness)."""
-    import datetime as dt
-    import os
-    import uuid
-
-    from sentinel_landsat_database_creation_spark.streaming.lsh_delta import (
-        lsh_delta_stream,
-        lsh_delta_stream_ttl,
-    )
-
-    corpus = spark.createDataFrame(
-        [(100, "a b c d e f g"), (200, "p q r s t u v")],
-        "doc_id long, text string",
-    )
-    ex = _shingle_rows(corpus, 2)
-    index = banded_buckets(minhash_signatures(ex, 8), 8, 4).select(
-        "bucket", "doc_id"
-    )
-    corpus_sh = ex.groupBy("doc_id").agg(F.collect_list("s").alias("sh"))
-
-    t = dt.datetime(2024, 1, 1, 10, 0, 0)
-    batches = [
-        [(10, "a b c d e f g", t)],
-        [(10, "a b c d e f g", t + dt.timedelta(minutes=2))],
-        [(99, "p q r s t u v", t + dt.timedelta(hours=3))],
-        [(98, "unrelated filler words only", t + dt.timedelta(hours=3, minutes=10))],
-        [(10, "a b c d e f g", t + dt.timedelta(hours=3, minutes=15))],
-    ]
-    src = str(tmp_path / "stream_src")
-    seen: set[str] = set()
-    for i, rows in enumerate(batches):
-        spark.createDataFrame(
-            rows, "doc_id long, text string, ts timestamp"
-        ).coalesce(1).write.mode("append").parquet(src)
-        # pin file order: FileStreamSource picks files by mod time
-        for f in os.listdir(src):
-            p = os.path.join(src, f)
-            if f.endswith(".parquet") and p not in seen:
-                seen.add(p)
-                os.utime(p, (1_700_000_000 + 10 * i,) * 2)
-
-    stream = (
-        spark.readStream.schema("doc_id long, text string, ts timestamp")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    out = lsh_delta_stream_ttl(
-        stream, index, corpus_sh, ts_col="ts", delay="10 minutes"
-    )
-    name = f"ttl_evict_{uuid.uuid4().hex[:8]}"
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    emitted = [
-        (r["batch_doc"], r["corpus_doc"])
-        for r in spark.table(name).collect()
-    ]
-    assert sorted(emitted) == [(10, 100), (10, 100), (99, 200)], (
-        "expected (10,100) emitted twice (once per horizon: state "
-        "evicted between) and (99,200) once; got " + str(sorted(emitted))
-    )
-
-    arrivals = spark.createDataFrame(
-        [(d, txt) for rows in batches for d, txt, _ in rows],
-        "doc_id long, text string",
-    ).dropDuplicates(["doc_id"])
-    batch_pairs = {
-        (r["batch_doc"], r["corpus_doc"])
-        for r in lsh_delta_stream(arrivals, index, corpus_sh).collect()
-    }
-    assert set(emitted) == batch_pairs

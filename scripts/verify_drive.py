@@ -7,8 +7,10 @@ so the golden replay did not run (VERIFY: CONTRACT PASS, GOLDEN SKIPPED).
 """
 import os
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+# the checkout this script belongs to, wherever it is
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 import csv
 import duckdb
@@ -53,7 +55,6 @@ for name, parser in (("L_out", D.hls_date), ("S_out", D.s2_date)):
                 break
 
 # ---------- 2. Driver contract ----------
-sys.path.insert(0, "/root/repo")
 import importlib
 entry_mod = importlib.import_module("__spark_entry__")
 

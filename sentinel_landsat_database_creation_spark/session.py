@@ -16,6 +16,17 @@ but every knob matters at cluster scale:
 - Local masters start their Python workers from ``_daemon.py``, which
   keeps Spark's zip-archive import finders static: without it every
   Python task re-reads pyspark.zip and the spark-core jar (~0.2 s).
+- Generated classes must outlive a pass. Spark caches whole-stage
+  classes per (source, class loader), and local mode compiles each one
+  twice (driver and task loaders). A warm ``corpus_curation`` pass uses
+  about 123 classes (a first pass 193-206 with stage ids in class
+  names, 167 without; ``scene_ingest`` 51-55), more than Spark's
+  default cache of 100: at that size every warm pass recompiled
+  118-124 of them (1.3-1.6 s of Janino on 4 vCPU). The cache holds
+  1000. Class names carry no codegen stage id because AQE numbers
+  stages in the order it re-plans them: one timing-dependent join
+  choice would renumber, and so recompile, every later stage of its
+  query.
 """
 
 from __future__ import annotations
@@ -71,6 +82,9 @@ def session_conf(master: str, shuffle_partitions: int) -> dict[str, str]:
         "spark.sql.session.timeZone": "UTC",
         "spark.sql.files.maxPartitionBytes": "128m",
         "spark.sql.autoBroadcastJoinThreshold": "64m",
+        # a pass's distinct generated classes must fit (module docstring)
+        "spark.sql.codegen.cache.maxEntries": "1000",
+        "spark.sql.codegen.useIdInClassName": "false",
         "spark.ui.enabled": "false",
         # testdata events.parquet carries TIMESTAMP(NANOS); surface it as
         # long nanos instead of failing the scan (sources.testdata converts)

@@ -12,7 +12,8 @@ from pathlib import Path
 # the checkout this script belongs to, wherever it is
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
-import csv
+import tempfile
+
 import duckdb
 import pandas as pd
 
@@ -23,8 +24,10 @@ spark = get_spark(shuffle_partitions=8)
 # ---------- 1. Golden stage-1 replay ----------
 from pyspark.sql import functions as F
 
+from sentinel_landsat_database_creation_spark.compat.golden import write_catalog_csv
 from sentinel_landsat_database_creation_spark.operators.catalog import build_catalog
 from sentinel_landsat_database_creation_spark.functions import dates as D
+from sentinel_landsat_database_creation_spark.sources.csvio import read_catalog_csv
 
 GRID = D.WeekGrid.from_range("2023-01-01", "2024-01-15")
 
@@ -36,23 +39,33 @@ for name, parser in (("L_out", D.hls_date), ("S_out", D.s2_date)):
         skipped.append(name)
         print(f"GOLDEN {name}: SKIPPED (reference CSV absent)")
         continue
-    with open(gpath) as f:
-        rows = list(csv.DictReader(f))
-    golden = [(r["class"], r["path"], r["data"]) for r in rows]
-    scene_names = [r["data"] for r in rows if r["data"] != "0"]
-    root = next(r["path"] for r in rows)
-    df = spark.createDataFrame([(s,) for s in scene_names], "data string")
-    out = build_catalog(df, parser(F.col("data")), root, GRID)
-    got = [(r["class"], r["path"], r["data"]) for r in out.select("class", "path", "data").collect()]
-    if got == golden:
-        print(f"GOLDEN {name}: EXACT MATCH ({len(got)} rows)")
+    # the production reader checks the class,path,data header; the
+    # rebuilt catalog goes out through the production sink and must
+    # match the golden byte for byte (header and line endings included)
+    try:
+        golden = read_catalog_csv(spark, gpath)
+    except ValueError as e:
+        failures.append(name)
+        print(f"GOLDEN {name}: BAD CSV {e}")
+        continue
+    root = golden.first()["path"]
+    listing = golden.filter(F.col("data") != "0").select("data")
+    out = build_catalog(listing, parser(F.col("data")), root, GRID)
+    with tempfile.TemporaryDirectory() as tmp:
+        written = Path(tmp) / f"{name}.csv"
+        write_catalog_csv(out, str(written))
+        got = written.read_bytes().splitlines(keepends=True)
+    want = Path(gpath).read_bytes().splitlines(keepends=True)
+    if got == want:
+        print(f"GOLDEN {name}: EXACT MATCH ({len(got) - 1} rows, byte-identical)")
     else:
         failures.append(name)
-        print(f"GOLDEN {name}: MISMATCH got={len(got)} want={len(golden)}")
-        for i, (g, w) in enumerate(zip(got, golden)):
-            if g != w:
-                print("  first diff at", i, g, w)
-                break
+        print(f"GOLDEN {name}: MISMATCH got={len(got)} lines want={len(want)}")
+        diff = next((i for i, (g, w) in enumerate(zip(got, want)) if g != w), None)
+        if diff is None:
+            print(f"  first {min(len(got), len(want))} lines equal; line counts differ")
+        else:
+            print(f"  first diff at line {diff + 1}: got {got[diff]!r} want {want[diff]!r}")
 
 # ---------- 2. Driver contract ----------
 import importlib

@@ -16,7 +16,8 @@ Layout:
   plans/     - multi-stage pipelines wiring operators end-to-end
   streaming/ - Structured Streaming variants (tumbling weekly windows)
   compat/    - byte-exact reproduction of the reference's CSV outputs
-  multimodal/- opaque binary payload columns + decode stubs
+               (catalog and pair CSV sinks, stringified-list shim)
+  multimodal/- opaque binary payload columns: md5 feature/frame plumbing
 """
 
 __version__ = "0.1.0"

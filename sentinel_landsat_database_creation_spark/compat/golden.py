@@ -1,5 +1,5 @@
 """Compat sinks and shims: the reference's CSV formats, byte-for-byte
-(SURVEY.md §1.2, §2 ops 6/25/39).
+(SURVEY.md §1.2, §2 ops 6/25).
 
 - Catalog CSV: header ``class,path,data``, '\\n' endings, trailing
   newline — pandas ``to_csv(index=False)`` shape
@@ -8,7 +8,7 @@
   Python list** (``"['a', 'b']"``) that the reference re-parses with
   ``split("'")[1::2]`` (main_function_beta.py:167,
   fct_data_extraction.py:250-263). Internally the engine keeps a real
-  ArrayType; these shims render/parse only at the boundary.
+  ArrayType and renders the string only at the sink.
 
 Writers funnel through a single Spark task (catalogs are tiny by
 construction — one row per scene, not per pixel); everything upstream
@@ -37,12 +37,6 @@ def stringify_list(arr: Column) -> Column:
         ),
         F.lit("]"),
     )
-
-
-def parse_stringified_list(col: Column) -> Column:
-    """The reference's ``split("'")[1::2]`` recovery, as a native
-    expression: every '...'-quoted segment in order."""
-    return F.regexp_extract_all(col, F.lit("'([^']*)'"), 1)
 
 
 def _write_single_csv(df: DataFrame, out_path: str) -> None:

@@ -4,8 +4,7 @@ tokenizer-faithful token counter the curation family budgets with
 (r13, r12 VERDICT item 4). pack_sequences / chunk_split / vocab
 budgets counted whitespace-regex tokens; production packing budgets
 are BPE-tokenizer tokens, and this module closes that gap without a
-tokenizer library (the pngcodec/jpegcodec "prove the seam without the
-library" pattern).
+tokenizer library.
 
 Determinism design (cross-engine, DuckDB-oracle-checkable):
 
@@ -238,48 +237,3 @@ def bpe_token_counts(
         "n_words",
         F.col("n_bpe").cast("long").alias("n_bpe"),
     )
-
-
-def bpe_save_merges(
-    spark, merges: list[tuple[str, str]], path: str
-) -> None:
-    """Persist a trained merge table as one tiny parquet of
-    (rank, l, r) — the tokenizer artifact a pipeline trains once and
-    ships to every consumer (the ann_index_write philosophy at
-    merge-table size). Rank order IS the table; loading re-sorts on
-    it, so the round trip is exact (md5-pinned by tests)."""
-    from ..session import local_df
-
-    df = local_df(
-        spark,
-        [(i, l, r) for i, (l, r) in enumerate(merges)],
-        "rank long, l string, r string",
-    )
-    df.coalesce(1).write.mode("overwrite").parquet(path)
-
-
-def bpe_load_merges(spark, path: str) -> list[tuple[str, str]]:
-    """Load a bpe_save_merges table, rank order restored. Refuses a
-    table with rank gaps/duplicates or NULL symbols — a partially-
-    written or hand-damaged directory must not silently re-rank the
-    tokenizer (a NULL pair would load as a merge that can never
-    match, the silent variant of the same corruption; code-review
-    finding, r13)."""
-    raw = [
-        (r["rank"], r["l"], r["r"])
-        for r in spark.read.parquet(path).collect()
-    ]
-    if any(v is None for row in raw for v in row):
-        raise ValueError(
-            f"merge table at {path} holds NULL ranks or symbols — "
-            "not a bpe_save_merges artifact (or a corrupted write); "
-            "retrain or restore it"
-        )
-    rows = sorted((int(a), b, c) for a, b, c in raw)
-    if [i for i, _l, _r in rows] != list(range(len(rows))):
-        raise ValueError(
-            f"merge table at {path} has duplicate or missing ranks — "
-            "not a bpe_save_merges artifact (or a corrupted write); "
-            "retrain or restore it"
-        )
-    return [(l, r) for _i, l, r in rows]

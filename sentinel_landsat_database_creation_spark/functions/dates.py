@@ -48,12 +48,6 @@ def week_start_of_index(week_idx: Column) -> Column:
     return F.date_add(F.lit(_EPOCH), (week_idx * 7).cast("int"))
 
 
-def epoch_week_start(date: Column) -> Column:
-    """Floor a date to its Thursday-aligned week start (== Spark's
-    ``window(ts, '7 days')`` start, which uses the same epoch origin)."""
-    return week_start_of_index(epoch_week_index(date))
-
-
 @dataclass(frozen=True)
 class WeekGrid:
     """The reference's histogram bin grid, precomputed driver-side.

@@ -16,11 +16,6 @@ from pyspark.sql import functions as F
 STOPWORDS = ("the", "a", "data", "value", "row")
 
 
-def tokens(text: Column) -> Column:
-    """Whitespace tokenization; empty strings dropped."""
-    return F.filter(F.split(text, "\\s+"), lambda t: t != "")
-
-
 def normalize_text(text: Column) -> Column:
     """C4-style canonical form for dedup: lowercase, strip everything
     outside [a-z0-9 ], collapse whitespace runs, trim. Two documents
@@ -60,11 +55,6 @@ def shingles(toks: Column, n: int = 3) -> Column:
     return F.when(F.size(toks) >= n, out).otherwise(
         F.array_repeat(F.lit(""), 0)
     )
-
-
-def fingerprint(text: Column) -> Column:
-    """Whole-document fingerprint: md5 over the normalized token stream."""
-    return F.md5(F.array_join(tokens(F.lower(text)), " "))
 
 
 def hash60(col: Column | str) -> Column:

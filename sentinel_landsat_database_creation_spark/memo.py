@@ -157,25 +157,6 @@ def _persistent_ids(spark) -> set:
     return set(jmap.keySet().toArray())
 
 
-def _release_checkpoint(spark, ids: frozenset) -> None:
-    """Best-effort free of a memo entry's checkpoint blocks. Verified
-    mechanism (probe, round 4): unpersisting the JVM handle from
-    getPersistentRDDs removes the rdd_N_* blocks — a later scan of the
-    handle fails with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND. For exactly
-    that reason the CACHE never calls this on eviction (a caller may
-    still hold the evicted handle inside an unexecuted lazy plan, and a
-    truncated-lineage handle whose blocks are gone can never
-    recompute); it exists for explicit cleanup by owners who KNOW no
-    live plan references the blocks, and for tests."""
-    try:
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        for i in ids:
-            if jmap.containsKey(i):
-                jmap.get(i).unpersist(False)
-    except Exception:
-        pass
-
-
 def checkpoint_memo(
     src: DataFrame, tag: tuple, builder: Callable[[], DataFrame]
 ) -> DataFrame:

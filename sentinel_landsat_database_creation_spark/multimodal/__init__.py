@@ -1,1 +1,1 @@
-"""Opaque binary payload columns + decode stubs (north-star extension)."""
+"""Opaque binary payload columns behind mapInPandas (north-star extension)."""

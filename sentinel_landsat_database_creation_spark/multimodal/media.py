@@ -1,13 +1,13 @@
-"""Multimodal payload columns: image/audio/video as opaque binary with
-typed metadata (MEDIA_SCHEMA), processed behind mapInPandas.
+"""Multimodal payload columns: image/audio/video as opaque binary
+(``media_id``, ``kind``, ``payload``, ``mime``), processed behind
+mapInPandas.
 
-``decode_image`` guard-imports PIL: when present it decodes through the
-real mapInPandas path; when absent (this container) it raises
-NotImplementedError at plan time unless a ``decoder=`` callable is
-injected. ``fake_features``/``fake_thumbnails`` exercise the identical
-Spark plumbing (binary column in Arrow batches, schema, partitioning,
-batch shape) with deterministic md5-based bodies, and stay the oracle
-queries either way.
+No codec ships here: ``fake_features`` and ``frame_sample`` run the
+Spark plumbing a real decoder or demuxer would use (binary column in
+Arrow batches, schema, partitioning, batch shape) with deterministic
+md5-based bodies, which is what lets the media registry entries have
+exact oracles; ``media_stats`` is the native-expression metadata
+projection.
 """
 
 from __future__ import annotations
@@ -37,123 +37,16 @@ FEATURE_SCHEMA = StructType(
     ]
 )
 
-THUMB_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType(), False),
-        StructField("width", IntegerType(), False),
-        StructField("height", IntegerType(), False),
-        StructField("pixels", ArrayType(DoubleType(), False), False),
-    ]
-)
-
 
 def media_from_documents(docs: DataFrame) -> DataFrame:
     """Derive a media table from the documents fixture: the utf-8 text
-    bytes stand in for an encoded payload. Schema matches MEDIA_SCHEMA's
-    core columns."""
+    bytes stand in for an encoded payload."""
     return docs.select(
         F.col("doc_id").cast("long").alias("media_id"),
         F.lit("image").alias("kind"),
         F.encode(F.col("text"), "utf-8").alias("payload"),
         F.lit("application/octet-stream").alias("mime"),
     )
-
-
-def _pil_available() -> bool:
-    import importlib.util
-
-    return importlib.util.find_spec("PIL") is not None
-
-
-def _pil_decode_resize(payload: bytes, width: int, height: int) -> list:
-    """Default decoder: PIL grayscale decode + resize, [0,1] row-major.
-    Runs executor-side inside mapInPandas workers."""
-    import io
-
-    from PIL import Image  # noqa: PLC0415 — worker-side import by design
-
-    img = Image.open(io.BytesIO(payload)).convert("L").resize((width, height))
-    return [p / 255.0 for p in img.getdata()]
-
-
-def decode_image(
-    media: DataFrame,
-    width: int = 8,
-    height: int = 8,
-    decoder=None,
-) -> DataFrame:
-    """Real image decode + resize to a width×height grayscale thumbnail
-    (THUMB_SCHEMA, pixels row-major in [0,1]) through the same
-    mapInPandas path as ``fake_thumbnails`` — identical schema,
-    batching, and partition behavior, only the per-payload body
-    differs.
-
-    Codec availability is guarded at plan time ON THE DRIVER: the
-    default decoder needs PIL, which this container does not ship, so
-    ``importlib.util.find_spec`` raises NotImplementedError before any
-    job starts. (Driver-side scope only — on a cluster whose executor
-    images lack PIL while the driver has it, the failure still surfaces
-    executor-side at the worker import; heterogeneous-image deploys
-    should probe with a one-row mapInPandas canary first.) A custom
-    ``decoder(payload, width, height) -> list[float]`` callable is
-    serialized into the task closure instead — that is also how the
-    unit test exercises this exact path without PIL, and how libvips
-    or torchvision drop in on a real cluster. For a REAL codec with no
-    third-party dependency, ``multimodal.pngcodec.png_decode_resize``
-    decodes actual PNG payloads (pure struct+zlib, round-6 VERDICT
-    item 8: PIL is not installable in this container, so the real-
-    format proof of this seam runs through that decoder — see
-    tests/test_png_codec.py), and since r12
-    ``multimodal.jpegcodec.jpeg_decode_resize`` decodes baseline JFIF
-    — the format media corpora actually ship — with Huffman entropy
-    decode, 4:2:0/4:4:4 sampling and restart markers
-    (tests/test_jpeg_codec.py). Undecodable payloads
-    (truncated, wrong magic — the ValueError/OSError family PIL raises)
-    yield no row rather than failing the task, matching how a 100 TB
-    media scan must treat corrupt objects; programming errors in an
-    injected decoder (TypeError, wrong arity, AttributeError) propagate
-    and fail the job rather than masquerading as an all-corrupt
-    corpus."""
-    if decoder is None:
-        if not _pil_available():
-            raise NotImplementedError(
-                "image codecs are unavailable in this environment: PIL "
-                "not importable and no decoder= callable given; use "
-                "fake_thumbnails() for plumbing tests or pass a decoder"
-            )
-        decoder = _pil_decode_resize
-
-    def run(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            out = {"media_id": [], "width": [], "height": [], "pixels": []}
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                payload = bytes(payload) if payload is not None else b""
-                try:
-                    pixels = decoder(payload, width, height)
-                except (ValueError, OSError):
-                    continue  # corrupt payload: skip, don't fail the scan
-                out["media_id"].append(media_id)
-                out["width"].append(width)
-                out["height"].append(height)
-                out["pixels"].append(list(pixels))
-            # pixels must be an object-dtype series even when EVERY
-            # payload in the batch was corrupt: an empty plain
-            # pd.DataFrame defaults the column to float64, which the
-            # Arrow writer cannot convert to list<double> — an
-            # all-corrupt batch then fails the task instead of skipping
-            # (found by the PNG end-to-end test, round 6)
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(out["media_id"], dtype="int64"),
-                    "width": pd.Series(out["width"], dtype="int32"),
-                    "height": pd.Series(out["height"], dtype="int32"),
-                    "pixels": pd.Series(out["pixels"], dtype=object),
-                }
-            )
-
-    return media.select("media_id", "payload").mapInPandas(run, THUMB_SCHEMA)
 
 
 def fake_features(media: DataFrame, n_features: int = 4) -> DataFrame:
@@ -190,39 +83,6 @@ def fake_features(media: DataFrame, n_features: int = 4) -> DataFrame:
     return media.select("media_id", "kind", "payload").mapInPandas(
         run, FEATURE_SCHEMA
     )
-
-
-def fake_thumbnails(media: DataFrame, width: int = 8, height: int = 8) -> DataFrame:
-    """Resize plumbing through the real mapInPandas path: emits a
-    width×height "thumbnail" whose pixels are deterministic bytes of an
-    md5 keystream over the payload — the exact schema/batching a PIL
-    ``Image.resize`` drop-in would use. Pixel values are row-major,
-    [0, 1]."""
-
-    def run(batches):
-        import hashlib
-
-        import pandas as pd
-
-        n_px = width * height
-        for pdf in batches:
-            out = {"media_id": [], "width": [], "height": [], "pixels": []}
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                payload = bytes(payload) if payload is not None else b""
-                stream = b""
-                counter = 0
-                while len(stream) < n_px:
-                    stream += hashlib.md5(
-                        payload + counter.to_bytes(4, "big")
-                    ).digest()
-                    counter += 1
-                out["media_id"].append(media_id)
-                out["width"].append(width)
-                out["height"].append(height)
-                out["pixels"].append([b / 255.0 for b in stream[:n_px]])
-            yield pd.DataFrame(out)
-
-    return media.select("media_id", "payload").mapInPandas(run, THUMB_SCHEMA)
 
 
 FRAME_SCHEMA = StructType(

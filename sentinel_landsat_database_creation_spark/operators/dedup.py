@@ -1885,40 +1885,6 @@ _WINNOW_POS_MOD = 1 << 21  # fewer than 2^20 k-grams (1M tokens/doc)
 _WINNOW_POS_BITS = 21  # log2(_WINNOW_POS_MOD): h = key >> 21, exact
 
 
-def winnow_fingerprints(
-    docs: DataFrame, k: int = 4, w: int = 5
-) -> DataFrame:
-    """Robust-winnowing fingerprint selection, entirely row-local:
-    ``(doc_id, p, h)`` — position (1-based k-gram index) and 32-bit
-    hash of each selected k-gram.
-
-    Selection rule (the paper's): in every window of ``w`` consecutive
-    k-gram hashes keep the minimum, breaking ties by the RIGHTMOST
-    position; record each kept (position, hash) once. Implemented by
-    packing (h, p) into one int64 — ``h * 2^21 + (2^20 - p)`` — whose
-    plain ``array_min`` over each window IS min-hash-then-rightmost,
-    so the whole selection runs as native array HOFs inside the row:
-    no explode, no shuffle, no window function. Short docs (0 < n < w
-    k-grams) winnow their single truncated window; ``slice`` past the
-    array end truncates, which is exactly that semantics.
-
-    Only the selected fingerprints (density 2/(w+1)) ever leave the
-    row via explode — contrast span_dedup's full-position explode.
-    Packing bound: p < 2^20; h < 2^32 keeps the key < 2^53, exact in
-    int64 and in any engine's arithmetic. The p bound is ENFORCED —
-    a doc with >= 2^20 k-grams raises at evaluation instead of
-    silently corrupting keys (_winnow_select docstring).
-    """
-    sel = winnow_selected_materialized(docs, k, w)
-    return sel.select(
-        "doc_id", F.explode("fps").alias("key")
-    ).select(
-        "doc_id",
-        (F.lit(_WINNOW_POS_OFF) - F.col("key") % _WINNOW_POS_MOD).alias("p"),
-        F.shiftright("key", _WINNOW_POS_BITS).alias("h"),
-    )
-
-
 def winnow_selected_materialized(
     docs: DataFrame, k: int, w: int
 ) -> DataFrame:

@@ -54,27 +54,13 @@ def zorder_key(x: Column, y: Column) -> Column:
     return spread16(x).bitwiseOR(F.shiftleft(spread16(y), 1))
 
 
-def zorder_frame(
-    df: DataFrame, x: str, y: str, n_partitions: int = 32
-) -> DataFrame:
-    """Lay ``df`` out in Z-order on ``(x, y)``: range-partition by the
-    Morton key, then sort within partitions — the exact shape a
-    partitioned parquet writer needs for tight per-file min/max on both
-    dimensions. One range shuffle; the sort is partition-local.
-    """
-    keyed = df.withColumn("zkey", zorder_key(F.col(x), F.col(y)))
-    return keyed.repartitionByRange(n_partitions, "zkey").sortWithinPartitions(
-        "zkey"
-    )
-
-
 def zorder_partitioned_write(
     df: DataFrame, x: str, y: str, path: str, n_buckets: int = 64
 ) -> None:
     """Write ``df`` as a Z-ordered parquet layout with EXACTLY one file
     per non-empty Morton bucket (bucket = top ``log2(n_buckets)`` bits
-    of the 32-bit key — the deterministic cousin of ``zorder_frame``'s
-    sampled range bounds, so the written layout is bit-reproducible
+    of the 32-bit key — deterministic, unlike a sampled
+    ``repartitionByRange``, so the written layout is bit-reproducible
     across sessions and oracle-checkable).
 
     One-file-per-bucket holds by construction: ``repartition(n,
@@ -154,33 +140,4 @@ def written_file_stats(spark, path: str, x: str, y: str) -> DataFrame:
             "min_z",
             "max_z",
         )
-    )
-
-
-def zorder_buckets(
-    df: DataFrame, x: str, y: str, n_buckets: int = 64
-) -> DataFrame:
-    """Layout diagnostic: bucket rows by the top ``log2(n_buckets)`` bits
-    of their Morton key and report ``(z_bucket, n_rows, min_z, max_z)``.
-
-    This is the file-skipping story made measurable: each bucket is one
-    would-be file, and ``min_z/max_z`` are the statistics a reader would
-    prune on. The aggregation is a plain hash groupBy on a derived
-    integer — map-side partial aggregation, one vocabulary-bounded
-    shuffle (``n_buckets`` groups), no window, no sort of the data.
-    ``n_buckets`` must be a power of two ≤ 2^32.
-    """
-    if n_buckets & (n_buckets - 1):
-        raise ValueError("n_buckets must be a power of two")
-    shift = 32 - (n_buckets.bit_length() - 1)
-    z = zorder_key(F.col(x), F.col(y))
-    return (
-        df.select(F.shiftright(z, shift).alias("z_bucket"), z.alias("zkey"))
-        .groupBy("z_bucket")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_rows"),
-            F.min("zkey").cast("long").alias("min_z"),
-            F.max("zkey").cast("long").alias("max_z"),
-        )
-        .select(F.col("z_bucket").cast("long"), "n_rows", "min_z", "max_z")
     )

@@ -92,23 +92,3 @@ def pair_catalogs(
         .orderBy("l_bin", "l_data")
         .drop("l_bin", "l_data")
     )
-
-
-def pair_count(left: DataFrame, right: DataFrame, compat: bool = False) -> DataFrame:
-    """The printed "full images pairs available" scalar (op 24).
-
-    The reference loops over left *rows* (not classes), adding
-    cntL(c)*cntS(c) once per row — i.e. sum_c cntL(c)^2 * cntS(c), an
-    overcount that also includes the "0" class
-    (main_function_beta.py:77-80). compat=True reproduces that; native
-    mode computes the intended sum_c cntL(c)*cntS(c) over real classes.
-    """
-    lc = left.groupBy("class").agg(F.count(F.lit(1)).alias("n_l"))
-    rc = right.groupBy("class").agg(F.count(F.lit(1)).alias("n_r"))
-    both = lc.join(rc, "class")
-    if compat:
-        expr = F.sum(F.col("n_l") * F.col("n_l") * F.col("n_r"))
-    else:
-        both = both.filter(F.col("class") != "0")
-        expr = F.sum(F.col("n_l") * F.col("n_r"))
-    return both.agg(expr.cast("long").alias("n_pairs"))

@@ -8,8 +8,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..session import local_df
-
 # Public per-language function-word profiles (tiny, order matters only
 # for tie-breaking: first profile wins ties).
 LANG_PROFILES: dict[str, tuple[str, ...]] = {
@@ -48,55 +46,6 @@ def language_id(text: Column) -> Column:
     )
     best = F.array_max(pairs)
     return F.when(best["score"] > 0, best["lang"]).otherwise(F.lit("und"))
-
-
-def language_id_table(docs: DataFrame) -> DataFrame:
-    """Dictionary-join formulation of language_id: explode token
-    occurrences, broadcast-join the (token, lang) profile table,
-    pivot-count per language, argmax with the same (score, lang)
-    tie-break as the column expression. Identical output to
-    ``language_id`` per document.
-
-    Use this only when the profile is too large to embed in a per-row
-    expression (thousands of entries): for the small built-in profiles
-    the column expression is a shuffle-free narrow map and measures ~5x
-    faster — reach for the join shape when the dictionary itself needs
-    to be a table (custom lexicons, per-tenant profiles).
-
-    Returns (doc_id, lang_guess)."""
-    spark = docs.sparkSession
-    prof = local_df(
-        spark,
-        [(w, lang) for lang, words in LANG_PROFILES.items() for w in words],
-        "t string, lang string",
-    )
-    ex = docs.select(
-        "doc_id", F.explode(F.split(F.lower("text"), " ")).alias("t")
-    )
-    langs = list(LANG_PROFILES)
-    counts = (
-        ex.join(F.broadcast(prof), "t")
-        .groupBy("doc_id")
-        .pivot("lang", langs)
-        .count()
-    )
-    scored = docs.select("doc_id").join(counts, "doc_id", "left")
-    pairs = F.array(
-        *[
-            F.struct(
-                F.coalesce(F.col(lang), F.lit(0)).cast("int").alias("score"),
-                F.lit(lang).alias("lang"),
-            )
-            for lang in langs
-        ]
-    )
-    best = F.array_max(pairs)
-    return scored.select(
-        "doc_id",
-        F.when(best["score"] > 0, best["lang"]).otherwise(F.lit("und")).alias(
-            "lang_guess"
-        ),
-    )
 
 
 def chunk_documents(
@@ -175,26 +124,6 @@ def quality_stats(docs: DataFrame) -> DataFrame:
     )
 
 
-def _regex_token_cols() -> list[Column]:
-    """The BPE-ish pre-tokenizer split counts as named columns — the
-    single definition regex_token_counts and the r9 merged
-    token_fingerprint_stats both project."""
-    return [
-        F.regexp_count(F.col("text"), F.lit(r"[a-zA-Z0-9]+"))
-        .cast("long")
-        .alias("n_word_tokens"),
-        F.regexp_count(F.col("text"), F.lit(r"[^a-zA-Z0-9\s]"))
-        .cast("long")
-        .alias("n_symbol_tokens"),
-    ]
-
-
-def regex_token_counts(docs: DataFrame) -> DataFrame:
-    """BPE-ish regex tokenization counts: word tokens vs non-word
-    symbols — the standard pre-tokenizer split."""
-    return docs.select(F.col("doc_id").cast("long"), *_regex_token_cols())
-
-
 def rolling_fingerprint(text: Column) -> Column:
     """Order-sensitive polynomial rolling hash over tokens:
     fold(acc * 31 + token_hash) mod (2^31-1), token_hash from the first
@@ -209,13 +138,19 @@ def rolling_fingerprint(text: Column) -> Column:
 
 
 def token_fingerprint_stats(docs: DataFrame) -> DataFrame:
-    """r9 merged single-scan projection: regex_token_counts' column set
-    plus the rolling document fingerprint, one row-local select over
-    the documents table (no join, no shuffle — the merge must not cost
-    a plan shape either parent didn't have)."""
+    """r9 merged single-scan projection: the BPE-ish pre-tokenizer
+    split counts (word tokens vs non-word symbols) plus the rolling
+    document fingerprint, one row-local select over the documents table
+    (no join, no shuffle — the merge must not cost a plan shape either
+    parent didn't have)."""
     return docs.select(
         F.col("doc_id").cast("long"),
-        *_regex_token_cols(),
+        F.regexp_count(F.col("text"), F.lit(r"[a-zA-Z0-9]+"))
+        .cast("long")
+        .alias("n_word_tokens"),
+        F.regexp_count(F.col("text"), F.lit(r"[^a-zA-Z0-9\s]"))
+        .cast("long")
+        .alias("n_symbol_tokens"),
         rolling_fingerprint(F.col("text")).alias("fp"),
     )
 

@@ -705,10 +705,9 @@ FROM documents ORDER BY doc_id
 
 
 def q_lang_guess(spark: SparkSession, sf: str) -> DataFrame:
-    # per-row profile expression: shuffle-free narrow map (the
-    # dictionary-join variant language_id_table only wins when the
-    # profile table is too large to embed in the expression — measured
-    # 5x slower here)
+    # per-row profile expression: shuffle-free narrow map (a
+    # dictionary-join formulation only wins when the profile table is
+    # too large to embed in the expression — measured 5x slower here)
     docs = table(spark, sf, "documents")
     return docs.select(
         F.col("doc_id").cast("long"),

@@ -150,39 +150,6 @@ def build_pair_tensors(
     )
 
 
-def write_scene_tensors(
-    tensors: DataFrame, path: str, date_expr: F.Column
-) -> None:
-    """Stage-3 sink: scene tensors land as Parquet partitioned by the
-    epoch-aligned acquisition week (the reference's `2023/...` directory
-    layout, SURVEY.md §4, made first-class). Any week- or date-ranged
-    read then prunes partitions at planning time — at 100 TB a one-month
-    training window touches ~4/52ths of the data and the scan plan
-    shows it (PartitionFilters in explain)."""
-    from ..functions.dates import epoch_week_start
-
-    (
-        tensors.withColumn("week", epoch_week_start(date_expr))
-        .write.mode("overwrite")
-        .partitionBy("week")
-        .parquet(path)
-    )
-
-
-def read_scene_tensors(
-    spark, path: str, start: str | None = None, stop: str | None = None
-) -> DataFrame:
-    """Week-pruned scan of a write_scene_tensors dataset; [start, stop)
-    bounds are dates compared against the week partition column, so the
-    filter resolves to partition pruning, not data reading."""
-    df = spark.read.parquet(path)
-    if start is not None:
-        df = df.filter(F.col("week") >= F.lit(start))
-    if stop is not None:
-        df = df.filter(F.col("week") < F.lit(stop))
-    return df
-
-
 def build_crop_dataset(
     pair_tensors: DataFrame,
     mask: DataFrame,

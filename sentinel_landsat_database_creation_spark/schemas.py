@@ -9,7 +9,6 @@ from __future__ import annotations
 
 from pyspark.sql.types import (
     ArrayType,
-    BinaryType,
     DoubleType,
     FloatType,
     IntegerType,
@@ -28,17 +27,6 @@ CATALOG_SCHEMA = StructType(
     ]
 )
 
-# Raw scene listing: one row per scene directory basename.
-SCENE_LISTING_SCHEMA = StructType([StructField("data", StringType(), False)])
-
-# Stage-2 pair table (reference: data_pair/fct_data_extraction.py:260-263)
-# with data_2 as a real ArrayType instead of a stringified Python list.
-PAIR_SCHEMA = StructType(
-    [
-        StructField("data_1", StringType(), False),
-        StructField("data_2", ArrayType(StringType(), False), False),
-    ]
-)
 
 # Per-band raster rows: the decoded form of one GeoTIFF band
 # (reference: rasterio .read(1), data_pair/fct_data_extraction.py:21-26).
@@ -64,27 +52,6 @@ BAND_RASTER_SCALED_SCHEMA = StructType(
     ]
 )
 
-# Stage-3 stacked scene tensor: 4 bands as a struct of flat arrays plus
-# dims — the Spark shape of the reference's [1,4,H,W] torch tensors
-# (main_function_beta.py:151-158).
-SCENE_TENSOR_SCHEMA = StructType(
-    [
-        StructField("scene", StringType(), False),
-        StructField("height", IntegerType(), False),
-        StructField("width", IntegerType(), False),
-        StructField("bands", ArrayType(ArrayType(FloatType(), False), False), False),
-    ]
-)
-
-# Binary centerline mask (data_pair/fct_data_extraction.py:50,61).
-MASK_SCHEMA = StructType(
-    [
-        StructField("mask_id", StringType(), False),
-        StructField("height", IntegerType(), False),
-        StructField("width", IntegerType(), False),
-        StructField("pixels", ArrayType(IntegerType(), False), False),
-    ]
-)
 
 # Stage-4 crop pair rows — one accepted crop pair per row, replacing the
 # reference's in-memory list-of-tensors (main_code.py:60-66). This is the
@@ -98,19 +65,5 @@ CROP_PAIR_SCHEMA = StructType(
         StructField("lr_pixels", ArrayType(ArrayType(FloatType(), False), False), False),
         StructField("hr_size", IntegerType(), False),
         StructField("lr_size", IntegerType(), False),
-    ]
-)
-
-# Multimodal payload rows: opaque binary + typed metadata (north-star
-# extension; decode runs behind mapInPandas, see multimodal/).
-MEDIA_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType(), False),
-        StructField("kind", StringType(), False),  # image | audio | video
-        StructField("payload", BinaryType(), True),
-        StructField("mime", StringType(), True),
-        StructField("width", IntegerType(), True),
-        StructField("height", IntegerType(), True),
-        StructField("duration_ms", LongType(), True),
     ]
 )

@@ -103,11 +103,6 @@ def write_corpus(
     )
 
 
-def write_documents_jsonl(docs: DataFrame, path: str) -> None:
-    """JSONL export (interchange with non-Spark tooling)."""
-    docs.write.mode("overwrite").json(path)
-
-
 def compact_corpus(
     spark: SparkSession,
     src: str,

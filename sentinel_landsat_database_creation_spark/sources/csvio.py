@@ -53,18 +53,3 @@ def read_catalog_csv(spark: SparkSession, path: str) -> DataFrame:
                 f"got {line!r}"
             )
     return df
-
-
-def read_pair_csv(spark: SparkSession, path: str) -> DataFrame:
-    """Stage-3 input: pair CSV with stringified data_2, parsed back into
-    a real array column (op 39 shim)."""
-    from ..compat.golden import parse_stringified_list
-
-    raw = spark.read.option("header", True).csv(path)
-    if set(raw.columns) != {"data_1", "data_2"}:
-        raise ValueError(
-            f"pair csv {path} must have header ['data_1','data_2'], got {raw.columns}"
-        )
-    return raw.select(
-        "data_1", parse_stringified_list(F.col("data_2")).alias("data_2")
-    )

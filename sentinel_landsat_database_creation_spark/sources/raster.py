@@ -9,12 +9,11 @@ executable paths, chosen per worker at decode time:
   reference (``rasterio.open(...).read(1)``,
   data_pair/fct_data_extraction.py:21-26) — handles compressed / tiled /
   exotic files.
-- pure-Python fallback (always available): ``tiffcodec.decode_gray``
-  for uncompressed TIFFs, which is what this container's tests
-  round-trip end-to-end through the real mapInPandas plumbing.
-
-``decode_fake`` remains the deterministic stand-in for tests that need
-pixels without caring about bytes.
+- pure-Python fallback (always available): ``tiffcodec.decode_gray_np``
+  (``decode_gray_full`` with the GDAL scale/offset) — strip or tiled
+  layouts, uncompressed, Deflate or LZW, with the horizontal or
+  floating-point predictor; the tests round-trip through it end-to-end
+  via the real mapInPandas plumbing.
 """
 
 from __future__ import annotations
@@ -243,26 +242,3 @@ def encode_rasters(
     return cols.mapInPandas(
         run, "scene string, band string, path string, n_bytes long"
     )
-
-
-def decode_fake(band_files: DataFrame, height: int, width: int) -> DataFrame:
-    """Deterministic decode stand-in: pixels derived from md5(scene/band)
-    via the same mapInPandas plumbing (schema, Arrow batches, partition
-    shape) the real decoder uses."""
-
-    def run(batches):
-        import hashlib
-
-        def one(key):
-            seed_bytes = hashlib.md5(key.encode()).digest()
-            seed = int.from_bytes(seed_bytes[:4], "big")
-            n = height * width
-            px = [((seed + 2654435761 * i) % 1000) / 1000.0 + 0.001 for i in range(n)]
-            return height, width, px
-
-        return _decode_batches(batches, one, "key")
-
-    cols = band_files.select(
-        "scene", "band", F.concat_ws("/", "scene", "band").alias("key")
-    )
-    return cols.mapInPandas(run, BAND_RASTER_SCHEMA)

@@ -12,8 +12,9 @@ source/sink (SURVEY.md §2 ops 4/8) executable without native GDAL:
   for a tiled organization, ``compression="deflate"|"lzw"``, and
   ``predictor=3`` (the TIFF TechNote-3 floating-point predictor GDAL
   emits for float COGs).
-- ``decode_gray`` reads band 1 of a TIFF (float32/float64/uint8/uint16/
-  int16/uint32/int32, II or MM byte order) as float32 pixels — the
+- ``decode_gray_np`` reads band 1 of a TIFF (float32/float64/uint8/
+  uint16/int16/uint32/int32, II or MM byte order) as a float32 NumPy
+  array (``decode_gray_full`` adds the GDAL scale/offset) — the
   fallback for the reference's ``rasterio.open(...).read(1)``
   (data_pair/fct_data_extraction.py:21-26) when rasterio is absent.
   Round 6 (round-5 VERDICT item 4): it now also reads the layouts real
@@ -457,19 +458,13 @@ def encode_gray(
 
 
 def decode_gray_np(buf: bytes):
-    """decode_gray returning (height, width, float32 ndarray-or-list):
-    the Arrow-friendly form the Spark decode boundary uses directly —
-    pandas columns of ndarray cells serialize to Arrow list<float>
-    ~2-3x faster than columns of Python-list cells. Falls back to the
-    list form when numpy is absent."""
-    return _decode_gray_impl(buf, as_list=False)
-
-
-def decode_gray(buf: bytes) -> tuple[int, int, list[float]]:
     """Decode band 1 of a TIFF (strips or tiles; none/Deflate/LZW;
-    predictor none/horizontal/floating-point) to
-    (height, width, float pixels row-major)."""
-    return _decode_gray_impl(buf, as_list=True)
+    predictor none/horizontal/floating-point) to (height, width,
+    float32 ndarray row-major): the Arrow-friendly form the Spark
+    decode boundary uses directly — pandas columns of ndarray cells
+    serialize to Arrow list<float> ~2-3x faster than columns of
+    Python-list cells."""
+    return _decode_gray_impl(buf)
 
 
 def decode_gray_full(buf: bytes):
@@ -481,7 +476,7 @@ def decode_gray_full(buf: bytes):
     which does NOT auto-apply calibration; the engine applies
     reflectance = DN*scale + offset as a native Spark expression
     downstream so the physical-units math runs JVM-side."""
-    return _decode_gray_impl(buf, as_list=False, want_meta=True)
+    return _decode_gray_impl(buf, want_meta=True)
 
 
 _GDAL_ITEM_RE = None
@@ -508,7 +503,7 @@ def _parse_gdal_scale_offset(xml: str) -> tuple[float, float]:
     return scale, offset
 
 
-def _decode_gray_impl(buf: bytes, as_list: bool, want_meta: bool = False):
+def _decode_gray_impl(buf: bytes, want_meta: bool = False):
     if len(buf) < 8:
         raise ValueError("not a TIFF: truncated header")
     bom = buf[:2]
@@ -569,42 +564,23 @@ def _decode_gray_impl(buf: bytes, as_list: bool, want_meta: bool = False):
     bpp = bits // 8
     tiled = _T_TILE_OFFSETS in tags
 
+    import numpy as np
+
+    dt = np.dtype(fmt).newbyteorder(e)
+
     # fast path kept for the uncompressed strip layout every op-8 sink
     # file uses: one frombuffer over the concatenated strips
     if comp == _C_NONE and pred == 1 and not tiled:
         offsets = tags[_T_STRIP_OFFSETS]
         counts = tags[_T_STRIP_BYTE_COUNTS]
         raw = b"".join(buf[o : o + c] for o, c in zip(offsets, counts))
-        n = height * width * samples
-        try:  # numpy fast path (~10x): C-speed buffer view
-            import numpy as np
-
-            dt = np.dtype(fmt).newbyteorder(e)
-            values = np.frombuffer(raw, dtype=dt, count=n)
-            if samples > 1:  # band 1 of pixel-interleaved data, like .read(1)
-                values = values[::samples]
-            arr = values.astype("float32")
-            px = arr.tolist() if as_list else arr
-            return (
-                (height, width, px, scale, offset)
-                if want_meta
-                else (height, width, px)
-            )
-        except ImportError:  # pragma: no cover - numpy is a pyspark dep
-            values = struct.unpack(f"{e}{n}{fmt}", raw[: n * struct.calcsize(fmt)])
-            if samples > 1:
-                values = values[::samples]
-            px = [float(v) for v in values]
-            return (
-                (height, width, px, scale, offset)
-                if want_meta
-                else (height, width, px)
-            )
+        values = np.frombuffer(raw, dtype=dt, count=height * width * samples)
+        if samples > 1:  # band 1 of pixel-interleaved data, like .read(1)
+            values = values[::samples]
+        px = values.astype("float32")
+        return (height, width, px, scale, offset) if want_meta else (height, width, px)
 
     # general path: per-segment decompress + predictor-undo + assemble
-    import numpy as np
-
-    dt = np.dtype(fmt).newbyteorder(e)
 
     def undo_predictor(seg: bytes, rows: int, w: int):
         if pred == 1:
@@ -648,6 +624,5 @@ def _decode_gray_impl(buf: bytes, as_list: bool, want_meta: bool = False):
             s = undo_predictor(seg, rows, width)[:, :, 0].astype("float32")
             out[y0 : y0 + rows] = s
             y0 += rows
-    flat = out.ravel()
-    px = flat.tolist() if as_list else flat
+    px = out.ravel()
     return (height, width, px, scale, offset) if want_meta else (height, width, px)

@@ -177,53 +177,3 @@ def test_unicode_words_match_oracle(spark):
         ).fetchall()
     }
     assert counts == want and len(counts) == 4
-
-
-def test_merge_table_roundtrip(spark, tmp_path):
-    """Save/load of the trained merge table is exact (same md5), and a
-    rank-corrupted table refuses to load instead of silently
-    re-ranking the tokenizer."""
-    import pytest
-
-    from sentinel_landsat_database_creation_spark.functions.bpe import (
-        bpe_load_merges,
-        bpe_save_merges,
-    )
-
-    merges = bpe_train(
-        [("low", 5), ("lower", 2), ("newest", 6), ("widest", 3)],
-        n_merges=5,
-        end_token="</w>",
-    )
-    p = str(tmp_path / "merges")
-    bpe_save_merges(spark, merges, p)
-    back = bpe_load_merges(spark, p)
-    assert back == merges
-    assert bpe_merges_md5(back) == bpe_merges_md5(merges)
-
-    bad = spark.createDataFrame(
-        [(0, "a", "b"), (2, "c", "d")], "rank long, l string, r string"
-    )
-    p2 = str(tmp_path / "bad")
-    bad.write.parquet(p2)
-    with pytest.raises(ValueError, match="ranks"):
-        bpe_load_merges(spark, p2)
-
-
-def test_merge_table_null_symbols_refused(spark, tmp_path):
-    """NULL l/r symbols are the silent variant of rank corruption — a
-    NULL pair loads as a merge that can never match; the loader must
-    refuse, and a mixed NULL/duplicate table must raise ValueError,
-    not TypeError from a None-vs-str sort."""
-    import pytest
-
-    from sentinel_landsat_database_creation_spark.functions.bpe import (
-        bpe_load_merges,
-    )
-
-    p = str(tmp_path / "nulls")
-    spark.createDataFrame(
-        [(0, None, "a"), (0, "b", "c")], "rank long, l string, r string"
-    ).write.parquet(p)
-    with pytest.raises(ValueError, match="NULL"):
-        bpe_load_merges(spark, p)

@@ -11,7 +11,6 @@ from sentinel_landsat_database_creation_spark.sources.corpus import (
     corrupt_split,
     read_documents_jsonl,
     write_corpus,
-    write_documents_jsonl,
 )
 from sentinel_landsat_database_creation_spark.sources.testdata import table
 
@@ -25,7 +24,7 @@ def _docs(spark):
 def test_jsonl_round_trip_exact(spark, tmp_path):
     docs = _docs(spark)
     p = str(tmp_path / "docs_jsonl")
-    write_documents_jsonl(docs, p)
+    docs.write.mode("overwrite").json(p)
     back, bad = corrupt_split(read_documents_jsonl(spark, p))
     assert bad.count() == 0
     assert back.schema == docs.schema

@@ -8,7 +8,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from sentinel_landsat_database_creation_spark.multimodal.media import (
-    decode_image,
     fake_features,
     media_from_documents,
 )
@@ -41,26 +40,6 @@ def test_minhash_recall_of_strong_neardups(spark):
     assert strong, "fixture corpus must contain strong near-dups"
     recall = len(strong & cands) / len(strong)
     assert recall >= 0.9, (recall, strong - cands)
-
-
-def test_language_id_table_matches_column_expression(spark):
-    """The dictionary-join formulation must agree with the per-row
-    expression on every document (same counts, same tie-break)."""
-    from sentinel_landsat_database_creation_spark.operators.textops import (
-        language_id_table,
-    )
-
-    docs = table(spark, SF, "documents").limit(300)
-    expr = {
-        r["doc_id"]: r["g"]
-        for r in docs.select(
-            "doc_id", language_id(F.col("text")).alias("g")
-        ).collect()
-    }
-    tab = {
-        r["doc_id"]: r["lang_guess"] for r in language_id_table(docs).collect()
-    }
-    assert expr == tab
 
 
 def test_ivf_topk_ranked_and_consistent_with_bruteforce(spark):
@@ -147,69 +126,6 @@ def test_media_fake_features_plumbing(spark):
     # determinism across runs/partitionings
     again = {r["media_id"]: r["features"] for r in fake_features(media.repartition(7), 4).collect()}
     assert {r["media_id"]: r["features"] for r in rows} == again
-
-
-def test_decode_image_raises_only_without_codec(spark, monkeypatch):
-    """decode_image is NotImplementedError ONLY when PIL is truly
-    absent AND no decoder is injected; the guard fires at plan time,
-    driver-side."""
-    import sentinel_landsat_database_creation_spark.multimodal.media as media_mod
-
-    docs = table(spark, SF, "documents").limit(1)
-    monkeypatch.setattr(media_mod, "_pil_available", lambda: False)
-    with pytest.raises(NotImplementedError):
-        decode_image(media_from_documents(docs))
-
-
-def test_decode_image_runs_with_injected_decoder(spark):
-    """The real decode path (guarded-import mapInPandas) end-to-end
-    with a deterministic decoder closure standing in for PIL — the
-    exact injection a libvips/torchvision swap-in uses. Covers schema,
-    [0,1] pixel range, corrupt-payload skip, and partitioning
-    invariance."""
-    docs = table(spark, SF, "documents").limit(12)
-    media = media_from_documents(docs)
-
-    def toy_decoder(payload, width, height):
-        if len(payload) % 5 == 0:  # deterministic "corrupt" subset
-            raise ValueError("bad magic")
-        n = width * height
-        return [((payload[i % len(payload)] if payload else 0) ^ i) % 256 / 255.0 for i in range(n)]
-
-    out = decode_image(media, width=5, height=3, decoder=toy_decoder)
-    kept = out.collect()
-    assert 0 < len(kept) <= 12
-    for r in kept:
-        assert (r["width"], r["height"]) == (5, 3)
-        assert len(r["pixels"]) == 15
-        assert all(0.0 <= p <= 1.0 for p in r["pixels"])
-    # decode decisions are per-payload: repartitioning changes nothing
-    again = {
-        r["media_id"]: r["pixels"]
-        for r in decode_image(
-            media.repartition(7), width=5, height=3, decoder=toy_decoder
-        ).collect()
-    }
-    assert {r["media_id"]: r["pixels"] for r in kept} == again
-
-
-def test_decode_image_uses_pil_when_available(spark, monkeypatch):
-    """With the availability probe forced true, the default PIL path
-    must plan cleanly (no NotImplementedError, correct schema). Only
-    plan-time behavior is asserted — executing it here would hit the
-    worker-side `from PIL import Image`, which this container cannot
-    satisfy."""
-    import sentinel_landsat_database_creation_spark.multimodal.media as media_mod
-
-    docs = table(spark, SF, "documents").limit(1)
-    monkeypatch.setattr(media_mod, "_pil_available", lambda: True)
-    df = decode_image(media_from_documents(docs))  # must not raise
-    assert [f.name for f in df.schema.fields] == [
-        "media_id",
-        "width",
-        "height",
-        "pixels",
-    ]
 
 
 def test_chunk_documents_short_and_exact_docs(spark):
@@ -312,9 +228,9 @@ def test_textops_survive_edge_documents(spark):
         chunk_documents,
         language_id,
         quality_stats,
-        regex_token_counts,
         repetition_stats,
         rolling_fingerprint,
+        token_fingerprint_stats,
     )
     from pyspark.sql import functions as F2
 
@@ -323,7 +239,7 @@ def test_textops_survive_edge_documents(spark):
         "doc_id long, text string",
     )
     assert quality_stats(docs).count() == 4
-    assert regex_token_counts(docs).count() == 4
+    assert token_fingerprint_stats(docs).count() == 4
     assert repetition_stats(docs, n=3).count() == 4
     assert docs.select(language_id(F2.col("text"))).count() == 4
     assert docs.select(rolling_fingerprint(F2.col("text"))).count() == 4
@@ -844,14 +760,14 @@ def test_bigram_surprisal_hand_computed(spark):
     assert 4 not in out  # no bigrams -> no row
 
 
-def test_zorder_key_interleaves_bits(spark):
+def test_zorder_key_interleaves_bits(spark, tmp_path):
     """Pinned Morton values plus the defining property: bit i of x lands
     at position 2i, bit i of y at 2i+1."""
     from pyspark.sql import functions as F
 
     from sentinel_landsat_database_creation_spark.operators.layout import (
-        zorder_buckets,
         zorder_key,
+        zorder_partitioned_write,
     )
 
     def morton(x, y):
@@ -869,35 +785,8 @@ def test_zorder_key_interleaves_bits(spark):
 
     import pytest
 
-    with pytest.raises(ValueError):
-        zorder_buckets(df, "x", "y", n_buckets=48)
-
-
-def test_zorder_frame_partition_ranges_disjoint(spark):
-    """repartitionByRange + sortWithinPartitions yields non-overlapping,
-    internally sorted zkey ranges — the per-file min/max tightness the
-    layout exists for."""
-    from pyspark.sql import functions as F
-
-    from sentinel_landsat_database_creation_spark.operators.layout import (
-        zorder_frame,
-    )
-
-    df = spark.createDataFrame(
-        [(i % 251, (i * 7) % 241) for i in range(2000)], ["x", "y"]
-    )
-    out = zorder_frame(df, "x", "y", n_partitions=8).select(
-        F.spark_partition_id().alias("pid"), "zkey"
-    )
-    rows = out.collect()  # collect preserves partition-then-row order
-    by_pid: dict[int, list[int]] = {}
-    for r in rows:
-        by_pid.setdefault(r["pid"], []).append(r["zkey"])
-    for keys in by_pid.values():
-        assert keys == sorted(keys)
-    spans = sorted((min(k), max(k)) for k in by_pid.values())
-    for (_, hi), (lo, _) in zip(spans, spans[1:]):
-        assert hi <= lo
+    with pytest.raises(ValueError, match="power of two"):
+        zorder_partitioned_write(df, "x", "y", str(tmp_path / "z"), n_buckets=48)
 
 
 def test_zorder_written_layout_tighter_than_unsorted(spark, tmp_path):
@@ -1442,9 +1331,11 @@ def test_winnow_fingerprints_match_paper_reference(spark):
     """The packed-key HOF selection must equal a from-the-paper
     reference implementation on texts engineered for ties and
     boundary cases (repeated k-grams force equal hashes inside one
-    window, exercising the rightmost rule)."""
+    window, exercising the rightmost rule). Each selected packed key
+    h * 2^21 + (2^20 - p) unpacks to (p, h) = (2^20 - key % 2^21,
+    key >> 21)."""
     from sentinel_landsat_database_creation_spark.operators.dedup import (
-        winnow_fingerprints,
+        winnow_selected_materialized,
     )
 
     texts = [
@@ -1459,8 +1350,9 @@ def test_winnow_fingerprints_match_paper_reference(spark):
         [(i, t) for i, t in enumerate(texts)], ["doc_id", "text"]
     )
     got = {
-        (r["doc_id"], r["p"], r["h"])
-        for r in winnow_fingerprints(df, k=4, w=5).collect()
+        (r["doc_id"], (1 << 20) - key % (1 << 21), key >> 21)
+        for r in winnow_selected_materialized(df, k=4, w=5).collect()
+        for key in r["fps"] or ()
     }
     want = {
         (i, p, h)

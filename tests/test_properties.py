@@ -408,7 +408,7 @@ def test_time_range_join_matches_bruteforce(spark, lrows, rrows, tol):
     st.data(),
 )
 def test_tiffcodec_roundtrip_property(h, w, data):
-    """encode_gray -> decode_gray is the identity on any float32-exact
+    """encode_gray -> decode_gray_np is the identity on any float32-exact
     grid, including NaN/±inf payloads (nodata semantics travel through
     the quality predicates) — no Spark needed, the codec is plain
     Python."""
@@ -416,7 +416,7 @@ def test_tiffcodec_roundtrip_property(h, w, data):
     import struct as _struct
 
     from sentinel_landsat_database_creation_spark.sources.tiffcodec import (
-        decode_gray,
+        decode_gray_np,
         encode_gray,
     )
 
@@ -432,7 +432,8 @@ def test_tiffcodec_roundtrip_property(h, w, data):
     )
     # snap to float32 so equality is exact
     vals = [_struct.unpack("<f", _struct.pack("<f", v))[0] for v in vals]
-    hh, ww, out = decode_gray(encode_gray(h, w, vals))
+    hh, ww, px = decode_gray_np(encode_gray(h, w, vals))
+    out = px.tolist()
     assert (hh, ww) == (h, w)
     assert len(out) == len(vals)
     for a, b in zip(out, vals):

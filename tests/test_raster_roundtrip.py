@@ -19,14 +19,14 @@ def test_codec_roundtrip_float32_with_geotags():
         4, 5, px, origin=(500010.0, 4600020.0), pixel_size=(30.0, 30.0)
     )
     assert buf[:4] == b"II\x2a\x00"
-    h, w, out = tiffcodec.decode_gray(buf)
+    h, w, out = tiffcodec.decode_gray_np(buf)
     assert (h, w) == (4, 5)
-    assert out == px  # float32-exact values stay exact
+    assert out.tolist() == px  # float32-exact values stay exact
 
 
 def test_codec_rejects_unsupported_codec_and_garbage():
     with pytest.raises(ValueError, match="byte-order"):
-        tiffcodec.decode_gray(b"PK\x03\x04junkjunk")
+        tiffcodec.decode_gray_np(b"PK\x03\x04junkjunk")
     buf = bytearray(tiffcodec.encode_gray(1, 2, [1.0, 2.0]))
     # flip the Compression tag (259) value to 7 (JPEG — a codec the
     # fallback will never carry; Deflate/LZW decode natively since r6)
@@ -36,7 +36,7 @@ def test_codec_rejects_unsupported_codec_and_garbage():
         if struct.unpack_from("<H", buf, off)[0] == 259:
             struct.pack_into("<I", buf, off + 8, 7)
     with pytest.raises(ValueError, match="unsupported TIFF compression"):
-        tiffcodec.decode_gray(bytes(buf))
+        tiffcodec.decode_gray_np(bytes(buf))
 
 
 def test_codec_reads_foreign_layout_bigendian_uint16():
@@ -68,8 +68,8 @@ def test_codec_reads_foreign_layout_bigendian_uint16():
     out.append(struct.pack(">2I", data_off, data_off + 6))  # strip offsets
     out.append(struct.pack(">2I", 6, 6))  # strip byte counts
     out.extend(strips)
-    got = tiffcodec.decode_gray(b"".join(out))
-    assert got == (h, w, [float(v) for v in vals])
+    hh, ww, px = tiffcodec.decode_gray_np(b"".join(out))
+    assert (hh, ww, px.tolist()) == (h, w, [float(v) for v in vals])
 
 
 def test_encode_decode_through_spark_plumbing(spark, tmp_path):

@@ -1,22 +1,27 @@
-"""The registry-reachability rule as a check: every top-level def or
-assignment in the registry modules (plans/driver_queries.py,
-plans/driver_queries_ext.py, plans/stream_twins.py) and in streaming/
-must be reachable from ``REGISTRY``, ``TWIN_BUILDERS`` or a reference
-in code outside that scope — the rest of the package, bench.py,
-__spark_entry__.py, scripts/ or perfbench/. Tests do not count: a
-capability only its own tests call is parked code, and a registry
-merge that leaves its parents' ``q_*``/``SQL_*`` behind is a leftover.
+"""The reachability rule as a check, over the whole package: every
+top-level def or assignment in every module under
+sentinel_landsat_database_creation_spark/ must be reachable from
+``REGISTRY``, ``TWIN_BUILDERS`` or a reference in the package's
+non-test callers — bench.py, __spark_entry__.py, scripts/ and
+perfbench/. Tests do not count: a capability only its own tests call
+is parked code, a wrapper only tests call belongs in the test, and a
+registry merge that leaves its parents' ``q_*``/``SQL_*`` behind is a
+leftover. There is no allowlist.
 
 References are AST ``Name`` ids, ``Attribute`` attrs and import-alias
 names (f-string interpolations are ``Name`` nodes too), followed
 transitively through the bodies of live defs only. A name mentioned in
-a docstring or a comment is dead. Names resolve by spelling across the
-scope, which can only keep a name alive, never kill a live one.
-Pure Python: parses the sources, no Spark session."""
+a docstring or a comment is dead. Module dunders (``__version__``,
+``__all__``) are live: Python and packaging tools read them by
+protocol, not through a reference. Names resolve by spelling across
+the scope, which can only keep a name alive, never kill a live one.
+Pure Python: parses the sources, no Spark session. Run it (with
+tests/test_memo_lint.py, ~1 s) before committing any deletion."""
 
 from __future__ import annotations
 
 import ast
+import os
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parents[1]
@@ -25,13 +30,7 @@ ROOTS = ("REGISTRY", "TWIN_BUILDERS")
 
 
 def scope_modules(package: Path) -> list[Path]:
-    plans = package / "plans"
-    return [
-        plans / "driver_queries.py",
-        plans / "driver_queries_ext.py",
-        plans / "stream_twins.py",
-        *sorted((package / "streaming").glob("*.py")),
-    ]
+    return sorted(package.rglob("*.py"))
 
 
 def outside_modules(repo: Path, package: Path, scope: list[Path]) -> list[Path]:
@@ -52,6 +51,10 @@ def references(node: ast.AST) -> set[str]:
         elif isinstance(n, ast.alias):
             out.update(n.name.split("."))
     return out
+
+
+def _is_dunder(name: str) -> bool:
+    return len(name) > 4 and name.startswith("__") and name.endswith("__")
 
 
 def _bound_names(targets: list[ast.expr]) -> list[str] | None:
@@ -93,6 +96,8 @@ def dead_names(
             for name in names:
                 defs.setdefault(name, []).append(stmt)
                 where.append((path.name, stmt.lineno, name))
+                if _is_dunder(name):  # read by protocol, not by name
+                    live.add(name)
     todo = [n for n in live if n in defs]
     while todo:
         for stmt in defs[todo.pop()]:
@@ -105,12 +110,19 @@ def dead_names(
 
 def test_registry_modules_have_no_unreachable_names():
     scope = scope_modules(PACKAGE)
-    assert len(scope) > 5, scope
+    every_module = {
+        Path(d, f)
+        for d, _, files in os.walk(PACKAGE)
+        for f in files
+        if f.endswith(".py")
+    }
+    assert set(scope) == every_module, sorted(every_module - set(scope))
     dead = dead_names(scope, outside_modules(REPO, PACKAGE, scope))
     assert not dead, (
         "unreachable from REGISTRY, TWIN_BUILDERS and every non-test "
-        "caller — delete them (a merge removes its parents' q_*/SQL_*; "
-        "no capability lands ahead of the entry that funds it): "
+        "caller — delete them, or move a test-only helper into tests/ "
+        "(a merge removes its parents' q_*/SQL_*; no capability lands "
+        "ahead of the caller that funds it): "
         + ", ".join(f"{f}:{line} {n}" for f, line, n in dead)
     )
 
@@ -119,6 +131,9 @@ def test_scanner_on_synthetic_modules(tmp_path):
     reg = tmp_path / "reg.py"
     reg.write_text(
         "from .helpers import imported_only\n"
+        "__version__ = '1.0'\n"
+        "__all__ = ['q_old']\n"
+        "_private__ = 0\n"
         "_W = 'wk'\n"
         "SQL_A = f'SELECT {_W} FROM t'\n"
         "SQL_OLD = 'SELECT 1'\n"
@@ -156,6 +171,7 @@ def test_scanner_on_synthetic_modules(tmp_path):
     )
     dead = dead_names([reg], [caller])
     assert [n for _, _, n in dead] == [
+        "_private__",
         "SQL_OLD",
         "ALIAS",
         "a",
@@ -163,4 +179,4 @@ def test_scanner_on_synthetic_modules(tmp_path):
         "_only_dead_calls_me",
         "by_comment",
     ]
-    assert dead[0] == ("reg.py", 4, "SQL_OLD")
+    assert dead[1] == ("reg.py", 7, "SQL_OLD")

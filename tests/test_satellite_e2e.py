@@ -7,7 +7,7 @@ would run it, at fixture scale."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
+from fake_decode import decode_fake
 
 from sentinel_landsat_database_creation_spark.operators.stacking import (
     filter_band_files,
@@ -18,10 +18,7 @@ from sentinel_landsat_database_creation_spark.plans.satellite import (
     build_pair_tensors,
     build_scene_pairs,
 )
-from sentinel_landsat_database_creation_spark.sources.raster import (
-    decode_fake,
-    scene_file_listing,
-)
+from sentinel_landsat_database_creation_spark.sources.raster import scene_file_listing
 
 S2_BANDS = ("B2", "B3", "B4", "B8")
 HLS_BANDS = ("B02", "B03", "B04", "B05")
@@ -105,42 +102,3 @@ def test_satellite_pipeline_end_to_end(spark, tmp_path):
         assert len(r["hr_pixels"]) == 4 and all(len(b) == 36 for b in r["hr_pixels"])
         assert len(r["lr_pixels"]) == 4 and all(len(b) == 4 for b in r["lr_pixels"])
         assert r["hr_size"] == 6 and r["lr_size"] == 2
-
-
-def test_partitioned_tensor_sink_prunes_weeks(spark, tmp_path):
-    """Stage-3 Parquet sink partitioned by acquisition week: a
-    date-ranged read must resolve to partition pruning (PartitionFilters
-    in the scan), not a data filter."""
-    import io
-    from contextlib import redirect_stdout
-
-    from sentinel_landsat_database_creation_spark.functions.dates import s2_date
-    from sentinel_landsat_database_creation_spark.plans.satellite import (
-        read_scene_tensors,
-        write_scene_tensors,
-    )
-
-    scenes = spark.createDataFrame(
-        [
-            ("20230315T104629_A", 1.0),
-            ("20230316T104629_B", 2.0),
-            ("20230410T104629_C", 3.0),
-        ],
-        "scene string, payload double",
-    )
-    out = str(tmp_path / "tensors")
-    write_scene_tensors(scenes, out, s2_date(F.col("scene")))
-
-    pruned = read_scene_tensors(spark, out, start="2023-03-01", stop="2023-04-01")
-    rows = pruned.collect()
-    assert {r["scene"] for r in rows} == {
-        "20230315T104629_A", "20230316T104629_B"
-    }
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        pruned.explain("formatted")
-    plan = buf.getvalue()
-    assert "PartitionFilters" in plan
-    # the week bounds must appear in PartitionFilters, not PushedFilters
-    pf_line = next(l for l in plan.splitlines() if "PartitionFilters" in l)
-    assert "week" in pf_line

@@ -136,7 +136,6 @@ def test_memo_checkpoint_rebuilds_after_block_loss(spark, events):
     the persistent-RDD registry probe and rebuilds instead of failing."""
     from sentinel_landsat_database_creation_spark.memo import (
         _CHECKPOINTS,
-        _release_checkpoint,
         checkpoint_memo,
     )
 
@@ -158,7 +157,11 @@ def test_memo_checkpoint_rebuilds_after_block_loss(spark, events):
     key = next(k for k in _CHECKPOINTS if k[-1] == "memo-guard-test")
     _, ck_ids = _CHECKPOINTS[key]
     assert ck_ids, "creation must capture the checkpoint RDD ids"
-    _release_checkpoint(spark, ck_ids)
+    # unpersisting the JVM handle removes the rdd_N_* blocks
+    jmap = spark.sparkContext._jsc.getPersistentRDDs()
+    for i in ck_ids:
+        if jmap.containsKey(i):
+            jmap.get(i).unpersist(False)
 
     rebuilt = checkpoint_memo(src, ("memo-guard-test",), builder)
     assert builds == [1, 1], "stale entry must trigger a rebuild"

@@ -1,5 +1,5 @@
-"""Tests for the stateful sessionization operator, the multimodal
-resize/frame-sample plumbing, and the op-9 gdal script generator.
+"""Tests for the stateful sessionization operator and the multimodal
+frame-sample plumbing.
 
 The batch sessionizer's values are pinned by the DuckDB oracle
 (test_oracle_equivalence: user_sessions); here we pin the HARD part —
@@ -12,14 +12,9 @@ from __future__ import annotations
 
 import datetime as dt
 
-import pytest
 from pyspark.sql import functions as F
 
-from sentinel_landsat_database_creation_spark.compat.gdal_script import (
-    crop_script_lines,
-)
 from sentinel_landsat_database_creation_spark.multimodal.media import (
-    fake_thumbnails,
     frame_sample,
     media_from_documents,
 )
@@ -105,24 +100,6 @@ def test_batch_sessions_respect_gap(spark):
     assert row["mono"] is True
 
 
-def test_fake_thumbnails_shape_and_determinism(spark):
-    media = media_from_documents(table(spark, SF, "documents").limit(40))
-    t1 = fake_thumbnails(media, width=6, height=4)
-    rows = t1.collect()
-    assert len(rows) == 40
-    for r in rows[:5]:
-        assert r["width"] == 6 and r["height"] == 4
-        assert len(r["pixels"]) == 24
-        assert all(0.0 <= p <= 1.0 for p in r["pixels"])
-    # partitioning must not affect content (deterministic keystream)
-    t2 = {
-        r["media_id"]: r["pixels"]
-        for r in fake_thumbnails(media.repartition(7), width=6, height=4).collect()
-    }
-    for r in rows:
-        assert t2[r["media_id"]] == r["pixels"]
-
-
 def test_frame_sample_offsets(spark):
     media = media_from_documents(table(spark, SF, "documents").limit(25))
     frames = frame_sample(media, n_frames=4, frame_bytes=16)
@@ -140,34 +117,6 @@ def test_frame_sample_offsets(spark):
         assert 1 <= r["n"] <= 4
         assert r["max_idx"] == r["n"] - 1
         assert r["min_off"] == 0
-
-
-def test_crop_script_lines_sensor_rules(spark):
-    listing = spark.createDataFrame(
-        [
-            ("sceneA", "B02.tif"),
-            ("sceneA", "B02.tif.aux.xml"),
-            ("sceneA", "meta.txt"),
-            ("sceneB", "B08.jp2"),
-        ],
-        "scene string, file string",
-    )
-    l8 = crop_script_lines(listing, "/cut.gpkg", "/src", "/dst", "landsat")
-    rows = l8.collect()
-    # landsat keeps only .tif-and-not-xml
-    assert [r["file"] for r in rows] == ["B02.tif"]
-    assert rows[0]["line"] == (
-        "gdalwarp -cutline /cut.gpkg -crop_to_cutline "
-        "/src/sceneA/B02.tif /dst/sceneA/B02.tif"
-    )
-    s2 = crop_script_lines(listing, "/cut.gpkg", "/src", "/dst", "s2")
-    got = {(r["scene"], r["file"]) for r in s2.collect()}
-    # s2 keeps everything non-xml and appends .tif to the OUTPUT name
-    assert got == {("sceneA", "B02.tif"), ("sceneA", "meta.txt"), ("sceneB", "B08.jp2")}
-    line = {r["file"]: r["line"] for r in s2.collect()}["meta.txt"]
-    assert line.endswith("/src/sceneA/meta.txt /dst/sceneA/meta.txt.tif")
-    with pytest.raises(ValueError):
-        crop_script_lines(listing, "/cut.gpkg", "/src", "/dst", "modis")
 
 
 def test_native_session_window_matches_batch_sealed_sessions(spark, tmp_path):

@@ -7,6 +7,7 @@ from __future__ import annotations
 import hashlib
 
 import pytest
+from fake_decode import decode_fake
 
 from sentinel_landsat_database_creation_spark.operators.stacking import (
     LANDSAT_BANDS,
@@ -14,7 +15,6 @@ from sentinel_landsat_database_creation_spark.operators.stacking import (
     filter_band_files,
     stack_bands,
 )
-from sentinel_landsat_database_creation_spark.sources.raster import decode_fake
 
 SCENES = [
     "HLS.L30.T46RCT.2023001T042927.v2.0",

@@ -192,9 +192,9 @@ def test_foreign_bigendian_deflate_multistrip():
         zlib.compress(struct.pack(">3H", *vals[3:])),
     ]
     buf = _hand_tiff_be(h, w, strips, rows_per_strip=1, compression=8)
-    hh, ww, out = tc.decode_gray(buf)
+    hh, ww, out = tc.decode_gray_np(buf)
     assert (hh, ww) == (h, w)
-    assert out == [float(v) for v in vals]
+    assert out.tolist() == [float(v) for v in vals]
 
 
 def test_foreign_lzw_predictor2_uint16():
@@ -209,9 +209,9 @@ def test_foreign_lzw_predictor2_uint16():
     diff[:, 1:] = a[:, 1:] - a[:, :-1]  # uint16 wrap, per spec
     seg = tc._lzw_encode(diff.tobytes())
     buf = _hand_tiff_le_u16(h, w, [seg], rows_per_strip=h, compression=5, predictor=2)
-    hh, ww, out = tc.decode_gray(buf)
+    hh, ww, out = tc.decode_gray_np(buf)
     assert (hh, ww) == (h, w)
-    assert out == [float(v) for v in a.ravel()]
+    assert out.tolist() == [float(v) for v in a.ravel()]
 
 
 def test_foreign_tiled_deflate_predictor3_float32():
@@ -245,7 +245,7 @@ def test_unsupported_compression_still_rejected():
         if struct.unpack_from("<H", buf, off)[0] == 259:
             struct.pack_into("<I", buf, off + 8, 7)  # JPEG
     with pytest.raises(ValueError, match="unsupported TIFF compression"):
-        tc.decode_gray(bytes(buf))
+        tc.decode_gray_np(bytes(buf))
 
 
 # ---------------------------------------------------------------------------

@@ -4,8 +4,9 @@ The session-scoped IVFADC stack (operators/similarity.py:
 ivfpq_topk_trained) recomputes cell assignments and PQ codes from the
 trainer memo every session. A production corpus with a standing
 10^9-vector index persists them once and probes/maintains the files
-incrementally — the ``lsh_index_write`` lifecycle (operators/dedup.py:
-1375-1593) applied to ANN. This module is that surface:
+incrementally — the LSH index lifecycle of operators/dedup.py
+(``lsh_index_write``, ``lsh_index_append``, ``lsh_index_compact``,
+``lsh_index_delete``) applied to ANN. This module is that surface:
 
 - :func:`ann_index_write`   — train-once encode of a corpus to disk
 - :func:`ann_index_append`  — encode an ingest batch with the

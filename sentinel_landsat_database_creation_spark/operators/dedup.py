@@ -1828,37 +1828,21 @@ def embedding_cosine_pairs(
     they compute N times, not N².
 
     The float->double cast happens ONCE per fanned-out row, map-side of
-    the block shuffle, not per pair: the join's Exchange materializes
-    the pre-cast double array, so the per-pair fold multiplies already-
-    double elements (measured ~8-10% faster at sf0.1 than casting inside
-    the zip_with lambda; add order unchanged, so scores stay
-    bit-identical to the oracle). This does NOT hit dot_cast's
-    CollapseProject trap — that trap is aliasing a cast array reused
-    within ONE projection stage; here a shuffle boundary sits between
-    the cast and every per-pair use. Round-3 note on BENCH_r02's
+    the block shuffle, not per pair (similarity._double_rows /
+    _dot_double hold the measurement and why dot_cast's CollapseProject
+    trap does not apply across a shuffle). Round-3 note on BENCH_r02's
     5.2->8.9 s regression: A/B showed it was session warmth, not plan —
     n_blocks=64 beats 8/16/32 warm AND cold, releasing leaked
     localCheckpoint blocks changes nothing, and the same plan re-run
     warm lands at ~4-5 s."""
-    from .similarity import blocked_self_pairs
+    from .similarity import _dot_double, _double_rows, blocked_self_pairs
 
-    def dot_d(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
-    v = embeddings.select(
-        "vec_id",
-        F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("v"),
-    ).withColumn("nv", F.sqrt(dot_d(F.col("v"), F.col("v"))))
-    pairs = blocked_self_pairs(v, "vec_id")
+    pairs = blocked_self_pairs(_double_rows(embeddings, "vec_id"), "vec_id")
     # cos is symmetric: score the unoriented pair, orient only the ids.
     return (
         pairs.withColumn(
             "cos",
-            dot_d(F.col("a_v"), F.col("b_v"))
+            _dot_double(F.col("a_v"), F.col("b_v"))
             / (F.col("a_nv") * F.col("b_nv")),
         )
         .filter(F.col("cos") >= threshold)

@@ -1,10 +1,50 @@
-"""Similarity search over embedding columns (north-star extension).
+"""Similarity search over embedding columns: cosine top-k (exact,
+bucket-pruned, IVF, PQ and IVFADC), the k-means trainers behind the
+quantized paths, recall@k, and cluster-scoped semantic dedup.
 
-Brute-force cosine top-k is the correctness baseline; sign-bit LSH
-bucketing is the scale path (prune candidates by shared bucket before
-scoring). The dot product is a sequential double fold with native
-higher-order functions — bit-identical to the DuckDB oracle (verified),
-so even the float scores hash-match.
+Every top-k operator is built from stages written once in this module:
+
+- side frames and score: ``_normed`` (id, vector, norm) and ``_qc_cos``,
+  the float cosine every operator emits;
+- ranking: ``_top_k`` (per-qid row_number, ties to the lowest cid,
+  two-phase in the physical plan) and ``_ranked_out`` (the
+  ``(qid, rnk, cid, cos)`` long-cast output);
+- cell search: ``assign_cells`` (first-K float cosine) or
+  ``_assign_trained`` (trained sum-vector centroids), then
+  ``_cell_topk`` (exact cosine within the probed cells);
+- product quantization (Jégou et al., TPAMI 2011): ``pq_subvectors``,
+  ``_pq_codes`` (encode), ``_pq_lut`` (per-query exact-BIGINT lookup
+  table), ``_flat_adc`` / ``_ivf_adc`` (LUT sums over the whole code
+  table / over the probed cells only), ``_adc_rerank`` (ADC ranking
+  plus the exact-cosine presentation), ``_residuals`` (residual rows);
+- training: ``_quantized_seeds`` + ``_lloyd_sums`` (coarse Lloyd step),
+  ``_lloyd_pq`` (per-subspace Lloyd, seeding and driver ceiling).
+
+Operators by stage:
+
+==================== ================== =============== ===============
+operator             candidates         score           quantizers
+==================== ================== =============== ===============
+brute_force_topk     all pairs          cosine          none (exact)
+bucketed_topk        sign-LSH bucket    cosine          none
+ivf_topk             probed cells       cosine          first-K
+ivf_topk_trained     probed cells       cosine          train_centroids
+pq_topk              all codes          ADC + rerank    first-k*
+ivfpq_topk           probed cells       ADC + rerank    first-K, k*
+ivfpq_topk_trained   probed cells       ADC + rerank    trained, trained
+ivfpq_topk_residual  probed cells' LUT  ADC + rerank    trained, resid.
+==================== ================== =============== ===============
+
+The first-K / first-k* operators are deterministic stand-ins for
+trained quantizers: the whole plan is reproducible, so each is checked
+against its DuckDB oracle. The trained ones take the output of
+``train_centroids`` (or ``train_centroids_distributed``),
+``train_pq_codebooks`` and ``train_pq_codebooks_residual``, whose
+integer-exact Lloyd recurrences the oracle reproduces too.
+brute_force_topk is the exact baseline ``topk_recall`` measures the
+others against. Float cosines are a sequential double fold
+(``dot_cast``), bit-identical to DuckDB's; every PQ and k-means
+distance is an exact BIGINT on the ``quantize_vec`` grid.
 """
 
 from __future__ import annotations
@@ -48,11 +88,88 @@ def norm_cast(a: Column) -> Column:
     return F.sqrt(dot_cast(a, a))
 
 
-def embedding_dim(embeddings: DataFrame, vec_col: str = "embedding") -> int:
-    """Plan-time dimension probe (one 1-row job). Vector dims are fixed
-    per corpus, so this is metadata, not data-dependent work."""
-    row = embeddings.select(F.size(vec_col).alias("d")).first()
-    return int(row["d"])
+def _dot_double(a: Column, b: Column) -> Column:
+    """Dot product over arrays ALREADY cast to double: dot_cast's fold
+    and add order (so scores stay bit-identical to the oracle) without
+    the per-element cast. Only for frames built by _double_rows, where
+    the cast array materializes once per row map-side of a shuffle:
+    the Exchange sits between the cast and every per-pair use, so
+    CollapseProject cannot re-inline it (dot_cast's trap is an aliased
+    cast array reused within ONE projection stage). Measured ~8-10%
+    faster at sf0.1 than casting inside the zip_with lambda."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: x * y),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+
+
+def _double_rows(vectors: DataFrame, id_col: str) -> DataFrame:
+    """(id_col, v, nv): the embedding cast to double once, and its norm
+    by _dot_double — the map side of a pair join scored with
+    _dot_double (semantic_dedup, dedup.embedding_cosine_pairs)."""
+    v = F.transform(F.col("embedding"), lambda x: x.cast("double"))
+    return vectors.select(F.col(id_col), v.alias("v")).withColumn(
+        "nv", F.sqrt(_dot_double(F.col("v"), F.col("v")))
+    )
+
+
+def _normed(
+    vectors: DataFrame,
+    id_col: str,
+    vec_col: str,
+    side: str,
+    attach: DataFrame | None = None,
+) -> DataFrame:
+    """One side of a cosine join: (<side>id, <side>v, ..., <side>n) with
+    side "q" (queries) or "c" (candidates). ``attach`` — keyed on
+    <side>id, e.g. a cell or bucket assignment — joins in before the
+    norm is taken."""
+    out = vectors.select(
+        F.col(id_col).alias(f"{side}id"), F.col(vec_col).alias(f"{side}v")
+    )
+    if attach is not None:
+        out = out.join(attach, f"{side}id")
+    return out.withColumn(f"{side}n", norm_cast(F.col(f"{side}v")))
+
+
+def _qc_cos() -> Column:
+    """Float cosine of a joined query x candidate row of _normed sides."""
+    return dot_cast(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn"))
+
+
+def _top_k(scored: DataFrame, k: int, score: Column) -> DataFrame:
+    """The k best rows per qid by ``score`` (a sort order:
+    ``desc("cos")`` or ``asc("adc")``), ties to the lowest cid, with
+    their 1-based ``rnk``. (score, cid) is a total order per qid, which
+    the deterministic oracle and the rank-limit pushdown both need.
+
+    The ranking is physically TWO-PHASE despite the single declared
+    window (r10, adjudicating the r9 `weak`): Catalyst's rank-limit
+    pushdown plants WindowGroupLimit(Partial) BELOW the qid exchange —
+    each map partition forwards only its k best rows per qid, so a
+    reducer's per-qid input is bounded by k × upstream partitions,
+    never the nq·N candidate stream. Measured on the ADC plans; an
+    explicit two-phase rewrite (spark_partition_id pre-window) was
+    built, measured to add one whole extra exchange for the same bound,
+    and reverted. tests/test_extensions.py:test_pq_ranking_is_two_phase
+    pins the Partial limit's presence so a windowGroupLimitThreshold
+    config regression fails CI instead of silently restoring the
+    funnel."""
+    w = Window.partitionBy("qid").orderBy(score, F.asc("cid"))
+    return scored.withColumn("rnk", F.row_number().over(w)).filter(
+        F.col("rnk") <= k
+    )
+
+
+def _ranked_out(ranked: DataFrame) -> DataFrame:
+    """The family's output: (qid, rnk, cid) as longs, then cos."""
+    return ranked.select(
+        F.col("qid").cast("long"),
+        F.col("rnk").cast("long"),
+        F.col("cid").cast("long"),
+        F.col("cos"),
+    )
 
 
 def blocked_self_pairs(
@@ -151,34 +268,14 @@ def brute_force_topk(
     until the final per-query top-k (partial top-k per partition via
     rank window after a repartition on qid)."""
     n_parts = embeddings.sparkSession.sparkContext.defaultParallelism
-    q = queries.select(
-        F.col(id_col).alias("qid"), F.col(vec_col).alias("qv")
-    ).withColumn("qn", norm_cast(F.col("qv")))
-    c = (
-        embeddings.select(F.col(id_col).alias("cid"), F.col(vec_col).alias("cv"))
-        .withColumn("cn", norm_cast(F.col("cv")))
-        .repartition(n_parts)
-    )
+    q = _normed(queries, id_col, vec_col, "q")
+    c = _normed(embeddings, id_col, vec_col, "c").repartition(n_parts)
     scored = (
         c.join(F.broadcast(q), F.col("qid") != F.col("cid"))
-        .withColumn(
-            "cos",
-            dot_cast(F.col("qv"), F.col("cv"))
-            / (F.col("qn") * F.col("cn")),
-        )
+        .withColumn("cos", _qc_cos())
         .select("qid", "cid", "cos")
     )
-    w = Window.partitionBy("qid").orderBy(F.desc("cos"), F.asc("cid"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select(
-            F.col("qid").cast("long"),
-            F.col("rnk").cast("long"),
-            F.col("cid").cast("long"),
-            F.col("cos"),
-        )
-    )
+    return _ranked_out(_top_k(scored, k, F.desc("cos")))
 
 
 def sign_lsh_buckets(
@@ -270,35 +367,33 @@ def ivf_topk(
     )
     cells_c = assign_cells(embeddings, centroids, id_col)
     cells_q = assign_cells(queries, centroids, id_col, nprobe=nprobe)
-    c = (
-        embeddings.select(F.col(id_col).alias("cid"), F.col("embedding").alias("cv"))
-        .join(cells_c.select(F.col(id_col).alias("cid"), "cell"), "cid")
-        .withColumn("cn", norm_cast(F.col("cv")))
-    )
-    q = (
-        queries.select(F.col(id_col).alias("qid"), F.col("embedding").alias("qv"))
-        .join(cells_q.select(F.col(id_col).alias("qid"), "cell"), "qid")
-        .withColumn("qn", norm_cast(F.col("qv")))
-    )
+    return _cell_topk(embeddings, queries, cells_c, cells_q, k, id_col)
+
+
+def _cell_topk(
+    embeddings: DataFrame,
+    queries: DataFrame,
+    cells_c: DataFrame,
+    cells_q: DataFrame,
+    k: int,
+    id_col: str,
+) -> DataFrame:
+    """Exact float-cosine top-k within each query's probed cells, given
+    (id_col, cell) assignments of corpus and queries — the IVF search
+    after assignment (ivf_topk, ivf_topk_trained). The broadcast query
+    side joins on cell, so a query scores only its cells' inverted
+    lists; a candidate sits in one cell, so probes never duplicate
+    pairs."""
+    c_cells = cells_c.select(F.col(id_col).alias("cid"), "cell")
+    q_cells = cells_q.select(F.col(id_col).alias("qid"), "cell")
+    c = _normed(embeddings, id_col, "embedding", "c", c_cells)
+    q = _normed(queries, id_col, "embedding", "q", q_cells)
     scored = (
         c.join(F.broadcast(q), "cell")
         .filter(F.col("qid") != F.col("cid"))
-        .withColumn(
-            "cos",
-            dot_cast(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")),
-        )
+        .withColumn("cos", _qc_cos())
     )
-    w = Window.partitionBy("qid").orderBy(F.desc("cos"), F.asc("cid"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select(
-            F.col("qid").cast("long"),
-            F.col("rnk").cast("long"),
-            F.col("cid").cast("long"),
-            F.col("cos"),
-        )
-    )
+    return _ranked_out(_top_k(scored, k, F.desc("cos")))
 
 
 QUANT_SCALE = 65536  # 2^16: power of two, so x*SCALE is one exact shift
@@ -376,14 +471,11 @@ def train_centroids(
     scans."""
 
     def build():
-        q = embeddings.select(
-            F.col(id_col), quantize_vec(F.col(vec_col)).alias("qv")
+        q, seeds = _quantized_seeds(embeddings, n_centroids, id_col, vec_col)
+        cents = sorted(
+            (int(r["cell"]), [int(x) for x in r["s"]], int(r["n"]))
+            for r in seeds.collect()
         )
-        cents = [
-            (int(r[id_col]), [int(x) for x in r["qv"]], 1)
-            for r in q.filter(F.col(id_col) < n_centroids).collect()
-        ]
-        cents.sort(key=lambda t: t[0])
         d = len(cents[0][1])
         if n_centroids * d > TRAIN_KD_CEILING:
             raise ValueError(
@@ -423,6 +515,23 @@ def train_centroids(
     )
 
 
+def _quantized_seeds(
+    embeddings: DataFrame, n_centroids: int, id_col: str, vec_col: str
+) -> tuple[DataFrame, DataFrame]:
+    """(q, seeds) for both coarse trainers: the corpus on the
+    quantize_vec grid as (id_col, qv), and its first K vectors
+    (id < n_centroids) as the (cell, s, n=1) seed state."""
+    q = embeddings.select(
+        F.col(id_col), quantize_vec(F.col(vec_col)).alias("qv")
+    )
+    seeds = q.filter(F.col(id_col) < n_centroids).select(
+        F.col(id_col).alias("cell"),
+        F.col("qv").alias("s"),
+        F.lit(1).cast("long").alias("n"),
+    )
+    return q, seeds
+
+
 def _lloyd_sums(q: DataFrame, cdf: DataFrame, id_col: str) -> DataFrame:
     """One coarse Lloyd step of both centroid trainers: assign each
     quantized vector (id_col, qv) to its best (cell, s, sn) centroid
@@ -433,10 +542,10 @@ def _lloyd_sums(q: DataFrame, cdf: DataFrame, id_col: str) -> DataFrame:
     scored = q.join(F.broadcast(cdf)).withColumn(
         "score", dot_cast(F.col("qv"), F.col("s")) / F.col("sn")
     )
-    # qv rides the argmax struct as payload (the _residual_cells
-    # trick, applied here in the r13 optimization round): (score,
-    # -cell) is already a total order per vector — cell is unique — so
-    # qv never participates in a comparison, and the old
+    # qv rides the argmax struct as payload (the _assign_trained
+    # payload trick, applied here in the r13 optimization round):
+    # (score, -cell) is already a total order per vector — cell is
+    # unique — so qv never participates in a comparison, and the old
     # assigned.join(q, id_col) back-attach (one extra exchange plus a
     # SECOND evaluation of the q subtree per iteration) goes away.
     # Same integers summed, bit-identical centroids.
@@ -493,18 +602,8 @@ def train_centroids_distributed(
     Returns the final state DataFrame; sort by cell and collect to get
     train_centroids' exact list, or pass it directly to
     ivf_topk_trained (which accepts either form)."""
-    q = embeddings.select(
-        F.col(id_col), quantize_vec(F.col(vec_col)).alias("qv")
-    )
-    state = (
-        q.filter(F.col(id_col) < n_centroids)
-        .select(
-            F.col(id_col).alias("cell"),
-            F.col("qv").alias("s"),
-            F.lit(1).cast("long").alias("n"),
-        )
-        .localCheckpoint(eager=True)
-    )
+    q, seeds = _quantized_seeds(embeddings, n_centroids, id_col, vec_col)
+    state = seeds.localCheckpoint(eager=True)
     for _ in range(n_iters):
         cdf = _trained_centroid_frame(q.sparkSession, state)
         sums = _lloyd_sums(q, cdf, id_col)
@@ -551,13 +650,17 @@ def _trained_centroid_frame(
 
 
 def _assign_trained(
-    vectors: DataFrame, cdf: DataFrame, id_col: str, probes: int
+    vectors: DataFrame, cdf: DataFrame, id_col: str, probes: int, *payload: str
 ) -> DataFrame:
-    """Cell assignment against TRAINED sum-vector centroids, the
-    training score dot(qv, S_c)/sqrt(dot(S_c, S_c)) — index-time and
-    train-time geometry agree. probes=1 folds with a struct-max
-    (map-side partial agg, safe for the full corpus); probes>1 ranks
-    with a bounded per-id window (query side only)."""
+    """(id_col, cell, *payload): cell assignment against TRAINED
+    sum-vector centroids, the training score
+    dot(qv, S_c)/sqrt(dot(S_c, S_c)) — index-time and train-time
+    geometry agree. probes=1 folds with a struct-max (map-side partial
+    agg, safe for the full corpus); probes>1 ranks with a bounded
+    per-id window (query side only). ``payload`` columns of the scored
+    rows (e.g. the quantized ``qv``) ride the fold, so a caller needing
+    them skips a second corpus scan; (score, -cell) is already a total
+    order per id, so a payload never takes part in a comparison."""
     v = vectors.select(
         F.col(id_col), quantize_vec(F.col("embedding")).alias("qv")
     )
@@ -566,17 +669,27 @@ def _assign_trained(
         dot_cast(F.col("qv"), F.col("s")) / F.col("sn"),
     )
     if probes == 1:
-        best = F.max(F.struct(F.col("score"), (-F.col("cell")).alias("nc")))
+        best = F.max(
+            F.struct(
+                F.col("score"),
+                (-F.col("cell")).alias("nc"),
+                *[F.col(p) for p in payload],
+            )
+        )
         return (
             scored.groupBy(id_col)
             .agg(best.alias("b"))
-            .select(F.col(id_col), (-F.col("b.nc")).alias("cell"))
+            .select(
+                F.col(id_col),
+                (-F.col("b.nc")).alias("cell"),
+                *[F.col(f"b.{p}").alias(p) for p in payload],
+            )
         )
     w = Window.partitionBy(id_col).orderBy(F.desc("score"), F.asc("cell"))
     return (
         scored.withColumn("_pr", F.row_number().over(w))
         .filter(F.col("_pr") <= probes)
-        .select(F.col(id_col), "cell")
+        .select(F.col(id_col), "cell", *payload)
     )
 
 
@@ -589,11 +702,9 @@ def ivf_topk_trained(
     id_col: str = "vec_id",
 ) -> DataFrame:
     """IVF top-k against TRAINED centroid sum-vectors (train_centroids):
-    same inverted-list plan shape as ivf_topk, but cells come from the
-    k-means centroids instead of the first-K stand-in. Assignment uses
-    the training score dot(qv, S_c)/sqrt(dot(S_c, S_c)) so index-time
-    and train-time geometry agree; within-cell scoring is the plain
-    float cosine, identical to ivf_topk.
+    ivf_topk's search (_cell_topk) with cells from the k-means
+    centroids instead of the first-K stand-in, assigned by
+    _assign_trained so index-time and train-time geometry agree.
 
     ``centroids`` is either train_centroids' collected list (becomes a
     literal local relation — the registry/oracle form) or
@@ -602,37 +713,7 @@ def ivf_topk_trained(
     cdf = _trained_centroid_frame(embeddings.sparkSession, centroids)
     cells_c = _assign_trained(embeddings, cdf, id_col, 1)
     cells_q = _assign_trained(queries, cdf, id_col, nprobe)
-    c = (
-        embeddings.select(F.col(id_col).alias("cid"), F.col("embedding").alias("cv"))
-        .join(
-            cells_c.select(F.col(id_col).alias("cid"), "cell"), "cid"
-        )
-        .withColumn("cn", norm_cast(F.col("cv")))
-    )
-    q = (
-        queries.select(F.col(id_col).alias("qid"), F.col("embedding").alias("qv"))
-        .join(cells_q.select(F.col(id_col).alias("qid"), "cell"), "qid")
-        .withColumn("qn", norm_cast(F.col("qv")))
-    )
-    scored = (
-        c.join(F.broadcast(q), "cell")
-        .filter(F.col("qid") != F.col("cid"))
-        .withColumn(
-            "cos",
-            dot_cast(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")),
-        )
-    )
-    w = Window.partitionBy("qid").orderBy(F.desc("cos"), F.asc("cid"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select(
-            F.col("qid").cast("long"),
-            F.col("rnk").cast("long"),
-            F.col("cid").cast("long"),
-            F.col("cos"),
-        )
-    )
+    return _cell_topk(embeddings, queries, cells_c, cells_q, k, id_col)
 
 
 def _l2_quant(a: Column, b: Column) -> Column:
@@ -660,11 +741,185 @@ def pq_subvectors(
     on the exact 2^16 integer grid (quantize_vec), split into ``m``
     contiguous ``dsub``-dim subspaces via one posexplode (m narrow rows
     per vector, no shuffle)."""
-    qv = quantize_vec(F.col(vec_col))
-    subs = F.array(*[F.slice(qv, s * dsub + 1, dsub) for s in range(m)])
-    return vectors.select(
-        F.col(id_col).alias(out_id), F.posexplode(subs).alias("sub", "sq")
+    return _sub_rows(vectors, quantize_vec(F.col(vec_col)), m, dsub, id_col, out_id)
+
+
+def _sub_rows(
+    rows: DataFrame,
+    vec: Column,
+    m: int,
+    dsub: int,
+    id_col: str,
+    out_id: str,
+    *keys: str,
+) -> DataFrame:
+    """(out_id, *keys, sub, sq): the integer array ``vec`` of each row
+    split into m contiguous dsub-dim subspaces by one posexplode —
+    pq_subvectors' shape, and _residuals' with the cell kept as a key."""
+    subs = F.array(*[F.slice(vec, s * dsub + 1, dsub) for s in range(m)])
+    return rows.select(
+        F.col(id_col).alias(out_id), *keys, F.posexplode(subs).alias("sub", "sq")
     )
+
+
+def _pq_dsub(embeddings: DataFrame, m: int, vec_col: str) -> int:
+    """The PQ subspace width d / m, from a plan-time dimension probe
+    (one 1-row job; dims are fixed per corpus, so this is metadata).
+    Refuses an empty corpus — there is no dimension to split — and a
+    dimension that m does not divide."""
+    row = embeddings.select(F.size(vec_col).alias("d")).first()
+    if row is None:
+        raise ValueError(
+            "embeddings is empty: PQ reads the vector dimension from the "
+            "corpus, so it needs at least one row"
+        )
+    d = int(row["d"])
+    if d % m != 0:
+        raise ValueError(f"embedding dim {d} not divisible by m={m}")
+    return d // m
+
+
+# schema of a PQ codebook frame: m·k* rows of dsub-long grid centroids
+_CODEBOOK = "sub int, cent_id long, cv array<long>"
+
+
+def _firstk_codebook(
+    embeddings: DataFrame,
+    m: int,
+    dsub: int,
+    n_sub_centroids: int,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """The deterministic stand-in sub-codebook (pq_topk, ivfpq_topk):
+    the subvectors of the first k* corpus vectors, as (sub, cent_id, cv)."""
+    return pq_subvectors(
+        embeddings.filter(F.col(id_col) < n_sub_centroids),
+        m,
+        dsub,
+        id_col,
+        vec_col,
+        out_id="cent_id",
+    ).withColumnRenamed("sq", "cv")
+
+
+def _pq_codes(sub_rows: DataFrame, codebook: DataFrame, *keys: str) -> DataFrame:
+    """PQ encode: (cid, *keys, sub, code) from (cid, *keys, sub, sq)
+    rows — the argmin sub-centroid per (vector, subspace) by exact
+    squared L2, ties to the lowest cent_id. One narrow N·m·k* scoring
+    join against the broadcast codebook, folded by a struct-min
+    (partial map-side aggregation, no window — safe for the full
+    corpus)."""
+    dist = sub_rows.join(F.broadcast(codebook), "sub").withColumn(
+        "dist", _l2_quant(F.col("sq"), F.col("cv"))
+    )
+    best = F.min(F.struct(F.col("dist"), F.col("cent_id")))
+    return (
+        dist.groupBy("cid", *keys, "sub")
+        .agg(best.alias("b"))
+        .select("cid", *keys, "sub", F.col("b.cent_id").alias("code"))
+    )
+
+
+def _pq_lut(sub_rows: DataFrame, codebook: DataFrame, *keys: str) -> DataFrame:
+    """Per-query LUT (qid, *keys, sub, code, d) from (qid, *keys, sub,
+    sq) rows: the exact BIGINT squared L2 from each query subvector to
+    EVERY sub-centroid (nq·m·k* rows, broadcast-sized)."""
+    return sub_rows.join(F.broadcast(codebook), "sub").select(
+        "qid",
+        *keys,
+        "sub",
+        F.col("cent_id").alias("code"),
+        _l2_quant(F.col("sq"), F.col("cv")).alias("d"),
+    )
+
+
+def _flat_adc(codes: DataFrame, lut: DataFrame, *keys: str) -> DataFrame:
+    """(qid, cid, adc): each candidate's approximate distance, the SUM
+    of its m LUT entries keyed by (*keys, sub, code) — m integer adds
+    per candidate over the code table, no float arrays move. Every
+    code row meets the broadcast LUT (pq_topk; with keys=("cell",) the
+    LUT's probed cells prune, ivfpq_topk_residual)."""
+    return (
+        codes.join(F.broadcast(lut), [*keys, "sub", "code"])
+        .filter(F.col("qid") != F.col("cid"))
+        .groupBy("qid", "cid")
+        .agg(F.sum("d").alias("adc"))
+    )
+
+
+def _adc_rerank(
+    adc: DataFrame,
+    embeddings: DataFrame,
+    queries: DataFrame,
+    k: int,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """Rank (qid, cid, adc) ascending, ties to the lowest cid, and
+    present the ≤ nq·k survivors with their EXACT float cosine — the
+    only point where raw vectors rejoin an ADC plan (the rerank
+    presentation, the same dot_cast arithmetic as every ANN path)."""
+    q = _normed(queries, id_col, vec_col, "q")
+    c = _normed(embeddings, id_col, vec_col, "c")
+    return _ranked_out(
+        _top_k(adc, k, F.asc("adc"))
+        .join(F.broadcast(q), "qid")
+        .join(c, "cid")
+        .withColumn("cos", _qc_cos())
+    )
+
+
+def _ivf_adc(
+    embeddings: DataFrame,
+    queries: DataFrame,
+    assign,
+    codebook: DataFrame,
+    k: int,
+    m: int,
+    dsub: int,
+    nprobe: int,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """IVFADC over raw-vector codes (ivfpq_topk, ivfpq_topk_trained):
+    encode, attach each code row's cell, prune to the queries' probed
+    cells, sum the LUT, rerank. ``assign(vectors, probes)`` is the
+    coarse quantizer, returning (id_col, cell) rows; only it and
+    ``codebook`` differ between the stand-in and trained operators —
+    training moves the quantizer contents, never the plan."""
+
+    def cells(vectors: DataFrame, probes: int, out: str) -> DataFrame:
+        v = vectors.select(F.col(id_col), F.col(vec_col).alias("embedding"))
+        return assign(v, probes).select(F.col(id_col).alias(out), "cell")
+
+    codes = _pq_codes(
+        pq_subvectors(embeddings, m, dsub, id_col, vec_col, out_id="cid"),
+        codebook,
+    )
+    lut = _pq_lut(
+        pq_subvectors(queries, m, dsub, id_col, vec_col, out_id="qid"),
+        codebook,
+    )
+    # IVF pruning: attach each code row's cell (equi-join on cid — the
+    # one corpus-sized shuffle, of m-byte code rows, not vectors), then
+    # keep only rows in a probed cell via the broadcast probe set.
+    # shuffle_hash on the cell side: both inputs grow with the corpus
+    # (cells_c may not broadcast at 10^9 vectors) and a sort-merge join
+    # would SORT the N·m code table just to test cid equality — hash
+    # the narrow (cid, cell) side per partition instead, the same pin
+    # as the dedup family's candidate/array attaches.
+    cand_codes = (
+        codes.join(cells(embeddings, 1, "cid").hint("shuffle_hash"), "cid")
+        .join(F.broadcast(cells(queries, nprobe, "qid")), "cell")
+        .filter(F.col("qid") != F.col("cid"))
+    )
+    adc = (
+        cand_codes.join(F.broadcast(lut), ["qid", "sub", "code"])
+        .groupBy("qid", "cid")
+        .agg(F.sum("d").alias("adc"))
+    )
+    return _adc_rerank(adc, embeddings, queries, k, id_col, vec_col)
 
 
 def pq_topk(
@@ -701,96 +956,25 @@ def pq_topk(
     cosine of the k returned pairs (the rerank presentation), computed
     with the same dot_cast arithmetic the other ANN paths hash against.
 
-    Plan shape: encode = one narrow N·m·k* scoring join against the
-    broadcast codebook folded by a map-side struct-min (assign_cells'
-    full-corpus discipline — no window over the corpus); ADC = the
-    (N·m)-row code table joined to the broadcast LUT and summed; only
-    the ≤ nq·k ranked rows ever rejoin the raw vectors."""
-    d = embedding_dim(embeddings, vec_col)
-    if d % m != 0:
-        raise ValueError(f"embedding dim {d} not divisible by m={m}")
-    dsub = d // m
-
-    codebook = pq_subvectors(
-        embeddings.filter(F.col(id_col) < n_sub_centroids),
-        m,
-        dsub,
-        id_col,
-        vec_col,
-        out_id="cent_id",
-    ).withColumnRenamed("sq", "cv")
-
-    # encode the corpus: argmin sub-centroid per (vector, subspace) via
-    # struct-min — partial map-side aggregation, safe for the full corpus
-    sub_c = pq_subvectors(embeddings, m, dsub, id_col, vec_col, out_id="cid")
-    dist_c = sub_c.join(F.broadcast(codebook), "sub").withColumn(
-        "dist", _l2_quant(F.col("sq"), F.col("cv"))
+    Plan shape: encode (_pq_codes) = one narrow N·m·k* scoring join
+    against the broadcast codebook folded by a map-side struct-min;
+    ADC (_flat_adc) = the (N·m)-row code table joined to the broadcast
+    LUT (_pq_lut) and summed; only the ≤ nq·k ranked rows ever rejoin
+    the raw vectors (_adc_rerank)."""
+    dsub = _pq_dsub(embeddings, m, vec_col)
+    codebook = _firstk_codebook(
+        embeddings, m, dsub, n_sub_centroids, id_col, vec_col
     )
-    best = F.min(F.struct(F.col("dist"), F.col("cent_id")))
-    codes = (
-        dist_c.groupBy("cid", "sub")
-        .agg(best.alias("b"))
-        .select("cid", "sub", F.col("b.cent_id").alias("code"))
+    codes = _pq_codes(
+        pq_subvectors(embeddings, m, dsub, id_col, vec_col, out_id="cid"),
+        codebook,
     )
-
-    # per-query LUT: exact distance to EVERY sub-centroid (nq·m·k* rows)
-    lut = (
-        pq_subvectors(queries, m, dsub, id_col, vec_col, out_id="qid")
-        .join(F.broadcast(codebook), "sub")
-        .select(
-            "qid",
-            "sub",
-            F.col("cent_id").alias("code"),
-            _l2_quant(F.col("sq"), F.col("cv")).alias("d"),
-        )
+    lut = _pq_lut(
+        pq_subvectors(queries, m, dsub, id_col, vec_col, out_id="qid"),
+        codebook,
     )
-
-    adc = (
-        codes.join(F.broadcast(lut), ["sub", "code"])
-        .filter(F.col("qid") != F.col("cid"))
-        .groupBy("qid", "cid")
-        .agg(F.sum("d").alias("adc"))
-    )
-    # The per-qid ranking is physically TWO-PHASE despite the single
-    # declared window (r10, adjudicating the r9 `weak`): Catalyst's
-    # rank-limit pushdown plants WindowGroupLimit(Partial) BELOW the
-    # qid exchange — each map partition forwards only its k best
-    # (adc, cid) rows per qid, so a reducer's per-qid input is bounded
-    # by k × upstream partitions, never the nq·N candidate stream.
-    # Measured on this exact plan; an explicit two-phase rewrite
-    # (spark_partition_id pre-window) was built, measured to add one
-    # whole extra exchange for the same bound, and reverted.
-    # tests/test_extensions.py:test_pq_ranking_is_two_phase pins the
-    # Partial limit's presence so a windowGroupLimitThreshold config
-    # regression fails CI instead of silently restoring the funnel.
-    # (adc, cid) is a total order per qid — required for the pushdown
-    # (row_number) and the deterministic oracle alike.
-    w = Window.partitionBy("qid").orderBy(F.asc("adc"), F.asc("cid"))
-    ranked = (
-        adc.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-    )
-
-    # exact-cosine rerank presentation on the ≤ nq·k surviving rows
-    qv = queries.select(
-        F.col(id_col).alias("qid"), F.col(vec_col).alias("qv")
-    ).withColumn("qn", norm_cast(F.col("qv")))
-    cv = embeddings.select(
-        F.col(id_col).alias("cid"), F.col(vec_col).alias("cv")
-    ).withColumn("cn", norm_cast(F.col("cv")))
-    return (
-        ranked.join(F.broadcast(qv), "qid")
-        .join(cv, "cid")
-        .withColumn(
-            "cos",
-            dot_cast(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")),
-        )
-        .select(
-            F.col("qid").cast("long"),
-            F.col("rnk").cast("long"),
-            F.col("cid").cast("long"),
-            F.col("cos"),
-        )
+    return _adc_rerank(
+        _flat_adc(codes, lut), embeddings, queries, k, id_col, vec_col
     )
 
 
@@ -820,7 +1004,7 @@ def ivfpq_topk(
       first-K centroids — broadcast K rows, struct-max fold for the
       corpus (no window over N), bounded per-query window for the
       nprobe probe side. Same cells as ivf_topk, bit-for-bit.
-    - PQ encode: identical to pq_topk — one narrow N·m·k* scoring join
+    - PQ encode: pq_topk's _pq_codes — one narrow N·m·k* scoring join
       against the broadcast sub-codebook, argmin by map-side struct-min.
       At 100 TB the (cid, sub, code) table is the ONLY corpus-sized
       thing this operator scans per query batch, and it's ~m bytes/row.
@@ -834,7 +1018,7 @@ def ivfpq_topk(
     - ranking: candidates are already cell-pruned (nprobe·N/K), and the
       declared per-qid window physically plans as two-phase via
       Catalyst's WindowGroupLimit(Partial) below the exchange (see the
-      measured note in pq_topk — pinned by the test there), so no
+      measured note on _top_k — pinned by a test), so no
       reducer ever holds more than k × upstream partitions rows per
       query; rerank = exact float cosine on the survivors, the same
       dot_cast arithmetic every ANN path hashes against.
@@ -855,100 +1039,21 @@ def ivfpq_topk(
     per-batch corpus work is one encode amortized over the whole
     batch; pinned structurally by tests/test_extensions.py:
     test_ivfpq_batch_queries_share_one_corpus_pass."""
-    d = embedding_dim(embeddings, vec_col)
-    if d % m != 0:
-        raise ValueError(f"embedding dim {d} not divisible by m={m}")
-    dsub = d // m
-
+    dsub = _pq_dsub(embeddings, m, vec_col)
     centroids = embeddings.filter(F.col(id_col) < n_centroids).select(
         F.col(id_col).alias("cent_id"), F.col(vec_col).alias("embedding")
     )
-    cells_c = assign_cells(
-        embeddings.select(F.col(id_col), F.col(vec_col).alias("embedding")),
-        centroids,
-        id_col,
-    ).select(F.col(id_col).alias("cid"), "cell")
-    cells_q = assign_cells(
-        queries.select(F.col(id_col), F.col(vec_col).alias("embedding")),
-        centroids,
-        id_col,
-        nprobe=nprobe,
-    ).select(F.col(id_col).alias("qid"), "cell")
-
-    codebook = pq_subvectors(
-        embeddings.filter(F.col(id_col) < n_sub_centroids),
+    return _ivf_adc(
+        embeddings,
+        queries,
+        lambda v, probes: assign_cells(v, centroids, id_col, nprobe=probes),
+        _firstk_codebook(embeddings, m, dsub, n_sub_centroids, id_col, vec_col),
+        k,
         m,
         dsub,
+        nprobe,
         id_col,
         vec_col,
-        out_id="cent_id",
-    ).withColumnRenamed("sq", "cv")
-
-    sub_c = pq_subvectors(embeddings, m, dsub, id_col, vec_col, out_id="cid")
-    dist_c = sub_c.join(F.broadcast(codebook), "sub").withColumn(
-        "dist", _l2_quant(F.col("sq"), F.col("cv"))
-    )
-    best = F.min(F.struct(F.col("dist"), F.col("cent_id")))
-    codes = (
-        dist_c.groupBy("cid", "sub")
-        .agg(best.alias("b"))
-        .select("cid", "sub", F.col("b.cent_id").alias("code"))
-    )
-
-    lut = (
-        pq_subvectors(queries, m, dsub, id_col, vec_col, out_id="qid")
-        .join(F.broadcast(codebook), "sub")
-        .select(
-            "qid",
-            "sub",
-            F.col("cent_id").alias("code"),
-            _l2_quant(F.col("sq"), F.col("cv")).alias("d"),
-        )
-    )
-
-    # IVF pruning: attach each code row's cell (equi-join on cid — the
-    # one corpus-sized shuffle, of m-byte code rows, not vectors), then
-    # keep only rows in a probed cell via the broadcast probe set.
-    # shuffle_hash on the cell side: both inputs grow with the corpus
-    # (cells_c may not broadcast at 10^9 vectors) and a sort-merge join
-    # would SORT the N·m code table just to test cid equality — hash
-    # the narrow (cid, cell) side per partition instead, the same pin
-    # as the dedup family's candidate/array attaches.
-    cand_codes = (
-        codes.join(cells_c.hint("shuffle_hash"), "cid")
-        .join(F.broadcast(cells_q), "cell")
-        .filter(F.col("qid") != F.col("cid"))
-    )
-    adc = (
-        cand_codes.join(F.broadcast(lut), ["qid", "sub", "code"])
-        .groupBy("qid", "cid")
-        .agg(F.sum("d").alias("adc"))
-    )
-    w = Window.partitionBy("qid").orderBy(F.asc("adc"), F.asc("cid"))
-    ranked = (
-        adc.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-    )
-
-    qv = queries.select(
-        F.col(id_col).alias("qid"), F.col(vec_col).alias("qv")
-    ).withColumn("qn", norm_cast(F.col("qv")))
-    cv = embeddings.select(
-        F.col(id_col).alias("cid"), F.col(vec_col).alias("cv")
-    ).withColumn("cn", norm_cast(F.col("cv")))
-    return (
-        ranked.join(F.broadcast(qv), "qid")
-        .join(cv, "cid")
-        .withColumn(
-            "cos",
-            dot_cast(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")),
-        )
-        .select(
-            F.col("qid").cast("long"),
-            F.col("rnk").cast("long"),
-            F.col("cid").cast("long"),
-            F.col("cos"),
-        )
     )
 
 
@@ -960,31 +1065,45 @@ def _round_half_away(quot: float) -> int:
 
 
 def _lloyd_pq(
-    spark,
-    subs: DataFrame,
-    dsub: int,
-    n_iters: int,
-    cb: list[tuple[int, int, list[int]]],
+    subs: DataFrame, m: int, dsub: int, n_sub_centroids: int, n_iters: int
 ) -> list[tuple[int, int, list[int]]]:
     """The per-subspace Lloyd recurrence shared by train_pq_codebooks
     (raw quantized subvectors) and train_pq_codebooks_residual
-    (residual subvectors): exact-BIGINT squared-L2 assignment against
-    the broadcast codebook, ties to lowest cent_id, new element =
-    round-half-away(sum/n) back onto the quantize_vec grid, empty
-    cells keep their previous centroid. ``subs`` must be
+    (residual subvectors): seeds are the subvectors of the first k*
+    vectors (vid < n_sub_centroids), then exact-BIGINT squared-L2
+    assignment against the broadcast codebook, ties to lowest cent_id,
+    new element = round-half-away(sum/n) back onto the quantize_vec
+    grid, empty cells keep their previous centroid. ``subs`` must be
     (vid, sub, sq array<long>); determinism notes live on
-    train_pq_codebooks."""
-    for _ in range(n_iters):
-        cdf = local_df(
-            spark, cb, "sub int, cent_id long, cv array<long>"
+    train_pq_codebooks.
+
+    The driver collects m·k*·dsub codebook values per iteration, so the
+    recurrence refuses to start (before the seed collect) above
+    TRAIN_KD_CEILING, the coarse trainer's bound."""
+    n_values = m * n_sub_centroids * dsub
+    if n_values > TRAIN_KD_CEILING:
+        raise ValueError(
+            f"PQ training collects m*n_sub_centroids*dsub = {m}*"
+            f"{n_sub_centroids}*{dsub} = {n_values} codebook values per "
+            f"iteration, over the {TRAIN_KD_CEILING} driver ceiling — a "
+            "PQ codebook this size is off the published IVFADC design "
+            "space (k*≤256, dsub≤64 at any real deployment); shrink the "
+            "codebook"
         )
+    spark = subs.sparkSession
+    cb = sorted(
+        (int(r["sub"]), int(r["vid"]), [int(x) for x in r["sq"]])
+        for r in subs.filter(F.col("vid") < n_sub_centroids).collect()
+    )
+    for _ in range(n_iters):
+        cdf = local_df(spark, cb, _CODEBOOK)
         dist = subs.join(F.broadcast(cdf), "sub").withColumn(
             "dist", _l2_quant(F.col("sq"), F.col("cv"))
         )
-        # sq rides the argmin struct as payload (the _residual_cells
-        # trick; r13 optimization round): (dist, cent_id) is a total
-        # order within a (vid, sub) group — cent_id is unique — so sq
-        # never participates in a comparison, and the old
+        # sq rides the argmin struct as payload (the _assign_trained
+        # payload trick; r13 optimization round): (dist, cent_id) is a
+        # total order within a (vid, sub) group — cent_id is unique —
+        # so sq never participates in a comparison, and the old
         # codes.join(subs, ...) back-attach goes away. That join cost
         # one extra exchange AND a second evaluation of the ``subs``
         # subtree per iteration — for the residual trainer that
@@ -1067,25 +1186,9 @@ def train_pq_codebooks(
     ivfpq_topk_trained."""
 
     def build():
-        d = embedding_dim(embeddings, vec_col)
-        if d % m != 0:
-            raise ValueError(f"embedding dim {d} not divisible by m={m}")
-        dsub = d // m
-        if m * n_sub_centroids * dsub > TRAIN_KD_CEILING:
-            raise ValueError(
-                f"train_pq_codebooks collects m*n_sub_centroids*dsub = {m}*"
-                f"{n_sub_centroids}*{dsub} codebook values per iteration, "
-                f"over the {TRAIN_KD_CEILING} driver ceiling — a PQ "
-                "codebook this size is off the published IVFADC design "
-                "space (k*≤256, dsub≤64 at any real deployment); shrink "
-                "the codebook"
-            )
+        dsub = _pq_dsub(embeddings, m, vec_col)
         subs = pq_subvectors(embeddings, m, dsub, id_col, vec_col, out_id="vid")
-        seed = sorted(
-            (int(r["sub"]), int(r["vid"]), [int(x) for x in r["sq"]])
-            for r in subs.filter(F.col("vid") < n_sub_centroids).collect()
-        )
-        return _lloyd_pq(embeddings.sparkSession, subs, dsub, n_iters, seed)
+        return _lloyd_pq(subs, m, dsub, n_sub_centroids, n_iters)
 
     return value_memo(
         embeddings,
@@ -1108,104 +1211,30 @@ def ivfpq_topk_trained(
     """ivfpq_topk with BOTH quantizers trained — the deployable IVFADC
     configuration (r10 VERDICT item 3): ``coarse`` from
     train_centroids(_distributed) exactly as ivf_topk_trained consumes
-    it, ``codebooks`` from train_pq_codebooks. Plan shape is
-    byte-for-byte the stand-in composition's (one corpus-sized shuffle
-    of m-byte code rows, broadcast probed-cell pruning BEFORE any ADC
-    scoring, exact-BIGINT LUT arithmetic, WindowGroupLimit two-phase
-    ranking, raw vectors only at the ≤ nq·k rerank) — only the two
-    broadcast literals change, which is precisely the deployment
-    story: training moves the codebook contents, never the plan.
+    it, ``codebooks`` from train_pq_codebooks. The plan is ivfpq_topk's
+    (the shared _ivf_adc stage); only the two broadcast literals change,
+    which is precisely the deployment story: training moves the
+    quantizer contents, never the plan.
 
     Trained codebook elements live on the same quantize_vec grid as
     the data (train_pq_codebooks rounds each mean back onto it), so
     every ADC distance stays an exact int64 and the DuckDB oracle
     reproduces the whole stack — coarse k-means CTEs + per-subspace
     k-means CTEs + the IVFADC probe — bit-identically."""
-    d = embedding_dim(embeddings, vec_col)
-    if d % m != 0:
-        raise ValueError(f"embedding dim {d} not divisible by m={m}")
-    dsub = d // m
-
-    cdf = _trained_centroid_frame(embeddings.sparkSession, coarse)
-    cells_c = _assign_trained(
-        embeddings.select(F.col(id_col), F.col(vec_col).alias("embedding")),
-        cdf,
-        id_col,
-        1,
-    ).select(F.col(id_col).alias("cid"), "cell")
-    cells_q = _assign_trained(
-        queries.select(F.col(id_col), F.col(vec_col).alias("embedding")),
-        cdf,
-        id_col,
+    dsub = _pq_dsub(embeddings, m, vec_col)
+    spark = embeddings.sparkSession
+    cdf = _trained_centroid_frame(spark, coarse)
+    return _ivf_adc(
+        embeddings,
+        queries,
+        lambda v, probes: _assign_trained(v, cdf, id_col, probes),
+        local_df(spark, codebooks, _CODEBOOK),
+        k,
+        m,
+        dsub,
         nprobe,
-    ).select(F.col(id_col).alias("qid"), "cell")
-
-    codebook = local_df(
-        embeddings.sparkSession,
-        codebooks,
-        "sub int, cent_id long, cv array<long>",
-    )
-
-    sub_c = pq_subvectors(embeddings, m, dsub, id_col, vec_col, out_id="cid")
-    dist_c = sub_c.join(F.broadcast(codebook), "sub").withColumn(
-        "dist", _l2_quant(F.col("sq"), F.col("cv"))
-    )
-    best = F.min(F.struct(F.col("dist"), F.col("cent_id")))
-    codes = (
-        dist_c.groupBy("cid", "sub")
-        .agg(best.alias("b"))
-        .select("cid", "sub", F.col("b.cent_id").alias("code"))
-    )
-
-    lut = (
-        pq_subvectors(queries, m, dsub, id_col, vec_col, out_id="qid")
-        .join(F.broadcast(codebook), "sub")
-        .select(
-            "qid",
-            "sub",
-            F.col("cent_id").alias("code"),
-            _l2_quant(F.col("sq"), F.col("cv")).alias("d"),
-        )
-    )
-
-    # same shuffle_hash pin as ivfpq_topk: both cell-attach inputs grow
-    # with the corpus, and the narrow (cid, cell) side hashes per
-    # partition instead of sorting the N·m code table
-    cand_codes = (
-        codes.join(cells_c.hint("shuffle_hash"), "cid")
-        .join(F.broadcast(cells_q), "cell")
-        .filter(F.col("qid") != F.col("cid"))
-    )
-    adc = (
-        cand_codes.join(F.broadcast(lut), ["qid", "sub", "code"])
-        .groupBy("qid", "cid")
-        .agg(F.sum("d").alias("adc"))
-    )
-    w = Window.partitionBy("qid").orderBy(F.asc("adc"), F.asc("cid"))
-    ranked = (
-        adc.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-    )
-
-    qv = queries.select(
-        F.col(id_col).alias("qid"), F.col(vec_col).alias("qv")
-    ).withColumn("qn", norm_cast(F.col("qv")))
-    cv = embeddings.select(
-        F.col(id_col).alias("cid"), F.col(vec_col).alias("cv")
-    ).withColumn("cn", norm_cast(F.col("cv")))
-    return (
-        ranked.join(F.broadcast(qv), "qid")
-        .join(cv, "cid")
-        .withColumn(
-            "cos",
-            dot_cast(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")),
-        )
-        .select(
-            F.col("qid").cast("long"),
-            F.col("rnk").cast("long"),
-            F.col("cid").cast("long"),
-            F.col("cos"),
-        )
+        id_col,
+        vec_col,
     )
 
 
@@ -1235,68 +1264,43 @@ def coarse_grid_centroids(
     ]
 
 
-def _residual_cells(
-    vectors: DataFrame,
-    cdf: DataFrame,
-    gdf: DataFrame,
+def _residuals(
+    coarse: list[tuple[int, list[int], int]],
+    m: int,
+    dsub: int,
     id_col: str,
-    probes: int,
-) -> DataFrame:
-    """(id, cell, rq) — the quantized RESIDUAL of each vector to each of
-    its ``probes`` nearest trained cells: assignment is _assign_trained's
-    trained-cosine rule verbatim (score = dot(qv, S_c)/||S_c||, ties to
-    lowest cell), but qv rides the fold as struct payload so the residual
-    subtraction doesn't need a second corpus scan. rq[i] = qv[i] - gv[i]
-    — both on the quantize_vec grid, so every element is an exact int64.
-    ``gdf`` is the broadcastable (cell, gv) frame from
-    coarse_grid_centroids. The payload struct is safe: (score, -cell) is
-    already a total order per id, so qv never participates in a
-    comparison."""
-    v = vectors.select(
-        F.col(id_col), quantize_vec(F.col("embedding")).alias("qv")
+    vec_col: str,
+    *sides: tuple[DataFrame, int, str],
+) -> list[DataFrame]:
+    """Residual PQ rows (out_id, cell, sub, sq), one frame per
+    (vectors, probes, out_id) side: each vector's quantized RESIDUAL to
+    each of its ``probes`` nearest trained cells, split into m
+    subspaces. Assignment is _assign_trained's rule with qv riding the
+    fold as payload, so the subtraction needs no second corpus scan;
+    rq[i] = qv[i] - gv[i], both on the quantize_vec grid
+    (coarse_grid_centroids), so every element is an exact int64. The
+    cell stays a key: residual codes are only comparable within a
+    coarse cell. All sides share one pair of broadcast centroid frames."""
+    spark = sides[0][0].sparkSession
+    cdf = _trained_centroid_frame(spark, coarse)
+    gdf = local_df(
+        spark, coarse_grid_centroids(coarse), "cell long, gv array<long>"
     )
-    scored = v.join(F.broadcast(cdf)).withColumn(
-        "score", dot_cast(F.col("qv"), F.col("s")) / F.col("sn")
-    )
-    if probes == 1:
-        best = F.max(
-            F.struct(F.col("score"), (-F.col("cell")).alias("nc"), F.col("qv"))
-        )
-        assigned = (
-            scored.groupBy(id_col)
-            .agg(best.alias("b"))
+    out = []
+    for vectors, probes, out_id in sides:
+        v = vectors.select(F.col(id_col), F.col(vec_col).alias("embedding"))
+        res = (
+            _assign_trained(v, cdf, id_col, probes, "qv")
+            .join(F.broadcast(gdf), "cell")
             .select(
                 F.col(id_col),
-                (-F.col("b.nc")).alias("cell"),
-                F.col("b.qv").alias("qv"),
+                "cell",
+                F.zip_with(F.col("qv"), F.col("gv"), lambda x, y: x - y)
+                .alias("rq"),
             )
         )
-    else:
-        w = Window.partitionBy(id_col).orderBy(F.desc("score"), F.asc("cell"))
-        assigned = (
-            scored.withColumn("_pr", F.row_number().over(w))
-            .filter(F.col("_pr") <= probes)
-            .select(F.col(id_col), "cell", "qv")
-        )
-    return assigned.join(F.broadcast(gdf), "cell").select(
-        F.col(id_col),
-        "cell",
-        F.zip_with(F.col("qv"), F.col("gv"), lambda x, y: x - y).alias("rq"),
-    )
-
-
-def _residual_sub_rows(
-    res: DataFrame, m: int, dsub: int, id_col: str, out_id: str
-) -> DataFrame:
-    """(out_id, cell, sub, sq) — residual rows split into m contiguous
-    dsub-dim subspaces, pq_subvectors' posexplode shape with the cell
-    carried (residual codes are only comparable within a coarse cell)."""
-    subs = F.array(*[F.slice(F.col("rq"), s * dsub + 1, dsub) for s in range(m)])
-    return res.select(
-        F.col(id_col).alias(out_id),
-        "cell",
-        F.posexplode(subs).alias("sub", "sq"),
-    )
+        out.append(_sub_rows(res, F.col("rq"), m, dsub, id_col, out_id, "cell"))
+    return out
 
 
 def train_pq_codebooks_residual(
@@ -1324,8 +1328,8 @@ def train_pq_codebooks_residual(
     recurrence — exact squared-L2 assignment, ties to lowest cent_id,
     round-half-away means, empty cells keep previous — runs on the same
     integer arithmetic the DuckDB oracle reproduces bit-identically.
-    Seeds are the first-k* vectors' residual subvectors, mirroring
-    train_pq_codebooks' seed rule.
+    Seeds are the first-k* vectors' residual subvectors (_lloyd_pq's
+    seed rule, shared with train_pq_codebooks).
 
     Scale: identical to train_pq_codebooks — one narrow corpus scan per
     iteration against the broadcast codebook plus one K·d-bounded
@@ -1336,37 +1340,11 @@ def train_pq_codebooks_residual(
     must be itemized — rotations reorder who pays first)."""
 
     def build():
-        spark = embeddings.sparkSession
-        d = embedding_dim(embeddings, vec_col)
-        if d % m != 0:
-            raise ValueError(f"embedding dim {d} not divisible by m={m}")
-        dsub = d // m
-        if m * n_sub_centroids * dsub > TRAIN_KD_CEILING:
-            raise ValueError(
-                f"train_pq_codebooks_residual collects m*n_sub_centroids*dsub"
-                f" = {m}*{n_sub_centroids}*{dsub} codebook values per "
-                f"iteration, over the {TRAIN_KD_CEILING} driver ceiling; "
-                "shrink the codebook (see train_pq_codebooks' guard)"
-            )
-        cdf = _trained_centroid_frame(spark, coarse)
-        gdf = local_df(
-            spark, coarse_grid_centroids(coarse), "cell long, gv array<long>"
+        dsub = _pq_dsub(embeddings, m, vec_col)
+        (subs,) = _residuals(coarse, m, dsub, id_col, vec_col, (embeddings, 1, "vid"))
+        return _lloyd_pq(
+            subs.select("vid", "sub", "sq"), m, dsub, n_sub_centroids, n_iters
         )
-        res = _residual_cells(
-            embeddings.select(F.col(id_col), F.col(vec_col).alias("embedding")),
-            cdf,
-            gdf,
-            id_col,
-            1,
-        )
-        subs = _residual_sub_rows(res, m, dsub, id_col, "vid").select(
-            "vid", "sub", "sq"
-        )
-        seed = sorted(
-            (int(r["sub"]), int(r["vid"]), [int(x) for x in r["sq"]])
-            for r in subs.filter(F.col("vid") < n_sub_centroids).collect()
-        )
-        return _lloyd_pq(spark, subs, dsub, n_iters, seed)
 
     coarse_sig = tuple((int(c), tuple(int(x) for x in s), int(n)) for c, s, n in coarse)
     return value_memo(
@@ -1413,97 +1391,23 @@ def ivfpq_topk_residual(
     - the query LUT is (qid, cell, sub, code, d) — nq·nprobe·m·k* rows,
       still trivially broadcast; joining on cell IS the IVF prune (LUT
       rows exist only for probed cells).
-    - everything downstream (exact-BIGINT ADC sums, (adc, cid) ties,
-      WindowGroupLimit two-phase ranking, raw vectors only at the
-      ≤ nq·k rerank) is byte-for-byte the family discipline.
+    - everything downstream is the shared _flat_adc and _adc_rerank
+      stages (exact-BIGINT sums, (adc, cid) ties, two-phase ranking,
+      raw vectors only at the ≤ nq·k rerank).
 
     Exactness end to end: residuals are int64 differences on the
     quantize_vec grid (coarse_grid_centroids), codebook elements are
     grid-rounded means, so every ADC distance is an exact BIGINT and
     the DuckDB oracle reproduces coarse k-means + residual PQ k-means +
     probe bit-identically."""
-    d = embedding_dim(embeddings, vec_col)
-    if d % m != 0:
-        raise ValueError(f"embedding dim {d} not divisible by m={m}")
-    dsub = d // m
-    spark = embeddings.sparkSession
-
-    cdf = _trained_centroid_frame(spark, coarse)
-    gdf = local_df(
-        spark, coarse_grid_centroids(coarse), "cell long, gv array<long>"
-    )
-    res_c = _residual_cells(
-        embeddings.select(F.col(id_col), F.col(vec_col).alias("embedding")),
-        cdf,
-        gdf,
-        id_col,
-        1,
-    )
-    res_q = _residual_cells(
-        queries.select(F.col(id_col), F.col(vec_col).alias("embedding")),
-        cdf,
-        gdf,
-        id_col,
-        nprobe,
-    )
-
-    codebook = local_df(
-        spark, codebooks, "sub int, cent_id long, cv array<long>"
-    )
-    sub_c = _residual_sub_rows(res_c, m, dsub, id_col, "cid")
-    dist_c = sub_c.join(F.broadcast(codebook), "sub").withColumn(
-        "dist", _l2_quant(F.col("sq"), F.col("cv"))
-    )
-    best = F.min(F.struct(F.col("dist"), F.col("cent_id")))
-    codes = (
-        dist_c.groupBy("cid", "cell", "sub")
-        .agg(best.alias("b"))
-        .select("cid", "cell", "sub", F.col("b.cent_id").alias("code"))
-    )
-
-    lut = (
-        _residual_sub_rows(res_q, m, dsub, id_col, "qid")
-        .join(F.broadcast(codebook), "sub")
-        .select(
-            "qid",
-            "cell",
-            "sub",
-            F.col("cent_id").alias("code"),
-            _l2_quant(F.col("sq"), F.col("cv")).alias("d"),
-        )
-    )
-
-    adc = (
-        codes.join(F.broadcast(lut), ["cell", "sub", "code"])
-        .filter(F.col("qid") != F.col("cid"))
-        .groupBy("qid", "cid")
-        .agg(F.sum("d").alias("adc"))
-    )
-    w = Window.partitionBy("qid").orderBy(F.asc("adc"), F.asc("cid"))
-    ranked = (
-        adc.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-    )
-
-    qv = queries.select(
-        F.col(id_col).alias("qid"), F.col(vec_col).alias("qv")
-    ).withColumn("qn", norm_cast(F.col("qv")))
-    cv = embeddings.select(
-        F.col(id_col).alias("cid"), F.col(vec_col).alias("cv")
-    ).withColumn("cn", norm_cast(F.col("cv")))
-    return (
-        ranked.join(F.broadcast(qv), "qid")
-        .join(cv, "cid")
-        .withColumn(
-            "cos",
-            dot_cast(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")),
-        )
-        .select(
-            F.col("qid").cast("long"),
-            F.col("rnk").cast("long"),
-            F.col("cid").cast("long"),
-            F.col("cos"),
-        )
+    dsub = _pq_dsub(embeddings, m, vec_col)
+    sides = ((embeddings, 1, "cid"), (queries, nprobe, "qid"))
+    sub_c, sub_q = _residuals(coarse, m, dsub, id_col, vec_col, *sides)
+    codebook = local_df(embeddings.sparkSession, codebooks, _CODEBOOK)
+    codes = _pq_codes(sub_c, codebook, "cell")
+    lut = _pq_lut(sub_q, codebook, "cell")
+    return _adc_rerank(
+        _flat_adc(codes, lut, "cell"), embeddings, queries, k, id_col, vec_col
     )
 
 
@@ -1562,38 +1466,14 @@ def bucketed_topk(
     n_parts = embeddings.sparkSession.sparkContext.defaultParallelism
     qb = sign_lsh_buckets(queries, n_bits).withColumnRenamed("vec_id", "qid")
     cb = sign_lsh_buckets(embeddings, n_bits).withColumnRenamed("vec_id", "cid")
-    q = (
-        queries.select(F.col("vec_id").alias("qid"), F.col("embedding").alias("qv"))
-        .join(qb, "qid")
-        .withColumn("qn", norm_cast(F.col("qv")))
-    )
-    c = (
-        embeddings.select(F.col("vec_id").alias("cid"), F.col("embedding").alias("cv"))
-        .join(cb, "cid")
-        .withColumn("cn", norm_cast(F.col("cv")))
-        .repartition(n_parts)
-    )
+    q = _normed(queries, "vec_id", "embedding", "q", qb)
+    c = _normed(embeddings, "vec_id", "embedding", "c", cb).repartition(n_parts)
     scored = (
         c.join(F.broadcast(q), "bucket")
         .filter(F.col("qid") != F.col("cid"))
-        .withColumn(
-            "cos",
-            dot_cast(F.col("qv"), F.col("cv"))
-            / (F.col("qn") * F.col("cn")),
-        )
+        .withColumn("cos", _qc_cos())
     )
-    w = Window.partitionBy("qid").orderBy(F.desc("cos"), F.asc("cid"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select(
-            F.col("qid").cast("long"),
-            F.col("rnk").cast("long"),
-            F.col("cid").cast("long"),
-            F.col("cos"),
-        )
-    )
-
+    return _ranked_out(_top_k(scored, k, F.desc("cos")))
 
 def semantic_dedup(
     embeddings: DataFrame,
@@ -1628,10 +1508,9 @@ def semantic_dedup(
       INPUT bytes and would serialize the quadratic output onto 1-2
       tasks; see blocked_self_pairs' measured story).
     - per-pair cost: the float->double cast materializes ONCE map-side
-      of the cell shuffle (the Exchange sits between the cast and every
-      per-pair use, so CollapseProject cannot re-inline it — the same
-      measured discipline as dedup.embedding_cosine_pairs), and the
-      fold is dot_cast-compact so the generated code stays JIT-hot.
+      of the cell shuffle (_double_rows / _dot_double, shared with
+      dedup.embedding_cosine_pairs), and the fold is dot_cast-compact
+      so the generated code stays JIT-hot.
     - verdict: dropped ids (distinct b-side of qualifying pairs) come
       back to the assignment via one equi-join on id.
     - the assigned+cast frame feeds THREE consumers (both pair sides
@@ -1660,52 +1539,34 @@ def semantic_dedup(
     entry and any k-means output satisfy it by construction)."""
     from .skew import full_width
 
-    def dot_d(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
     # the zero-norm filter runs BEFORE assignment so degenerate vectors
     # never reach the N×K scoring or the pair space (norm_cast is the
     # same sqrt-of-fold the assignment itself uses)
     embeddings = embeddings.filter(norm_cast(F.col("embedding")) > 0)
     cells = assign_cells(embeddings, centroids, id_col=id_col)
     v = (
-        embeddings.select(
-            F.col(id_col),
-            F.transform(F.col("embedding"), lambda x: x.cast("double")).alias(
-                "v"
-            ),
-        )
-        .withColumn("nv", F.sqrt(dot_d(F.col("v"), F.col("v"))))
+        _double_rows(embeddings, id_col)
         .join(cells, id_col)
         .localCheckpoint(eager=True)
     )
-    a = full_width(
-        v.select(
+
+    def side(p: str) -> DataFrame:
+        return full_width(
+            v.select(
+                "cell",
+                F.col(id_col).alias(f"{p}_id"),
+                F.col("v").alias(f"{p}_v"),
+                F.col("nv").alias(f"{p}_nv"),
+            ),
             "cell",
-            F.col(id_col).alias("a_id"),
-            F.col("v").alias("a_v"),
-            F.col("nv").alias("a_nv"),
-        ),
-        "cell",
-    )
-    b = full_width(
-        v.select(
-            "cell",
-            F.col(id_col).alias("b_id"),
-            F.col("v").alias("b_v"),
-            F.col("nv").alias("b_nv"),
-        ),
-        "cell",
-    ).hint("shuffle_hash")
+        )
+
     dropped = (
-        a.join(b, "cell")
+        side("a")
+        .join(side("b").hint("shuffle_hash"), "cell")
         .filter(F.col("a_id") < F.col("b_id"))
         .filter(
-            dot_d(F.col("a_v"), F.col("b_v"))
+            _dot_double(F.col("a_v"), F.col("b_v"))
             / (F.col("a_nv") * F.col("b_nv"))
             >= F.lit(threshold)
         )

@@ -961,6 +961,79 @@ def test_train_centroids_kd_ceiling_guard(spark, monkeypatch):
     assert st.count() == 2
 
 
+def test_train_pq_codebooks_ceiling_guard(spark, monkeypatch):
+    """The PQ trainers' driver bound, shared by both through _lloyd_pq:
+    m·k*·dsub codebook values over TRAIN_KD_CEILING raise before the
+    seed collect; exactly at the ceiling both train."""
+    from sentinel_landsat_database_creation_spark.operators import (
+        similarity as sim,
+    )
+
+    vecs = [(i, [float(i), 1.0, float(i % 2), 2.0]) for i in range(4)]
+    e = spark.createDataFrame(vecs, "vec_id long, embedding array<float>")
+    coarse = sim.train_centroids(e, n_centroids=2, n_iters=1)
+    trainers = {
+        "raw": lambda: sim.train_pq_codebooks(
+            e, m=2, n_sub_centroids=2, n_iters=1
+        ),
+        "residual": lambda: sim.train_pq_codebooks_residual(
+            e, coarse, m=2, n_sub_centroids=2, n_iters=1
+        ),
+    }
+    for name, train in trainers.items():
+        monkeypatch.setattr(sim, "TRAIN_KD_CEILING", 7)  # 2*2*2 = 8 > 7
+        with pytest.raises(ValueError, match="driver ceiling"):
+            train()
+        monkeypatch.setattr(sim, "TRAIN_KD_CEILING", 8)  # at the ceiling
+        assert len(train()) == 4, name  # m·k* = 2·2 centroids
+
+
+_PQ_OPS = {
+    "pq_topk": lambda sim, e, co, cb: sim.pq_topk(e, e, m=4),
+    "ivfpq_topk": lambda sim, e, co, cb: sim.ivfpq_topk(e, e, m=4),
+    "ivfpq_topk_trained": lambda sim, e, co, cb: sim.ivfpq_topk_trained(
+        e, e, co, cb, m=4
+    ),
+    "ivfpq_topk_residual": lambda sim, e, co, cb: sim.ivfpq_topk_residual(
+        e, e, co, cb, m=4
+    ),
+    "train_pq_codebooks": lambda sim, e, co, cb: sim.train_pq_codebooks(
+        e, m=4
+    ),
+    "train_pq_codebooks_residual": (
+        lambda sim, e, co, cb: sim.train_pq_codebooks_residual(e, co, m=4)
+    ),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_PQ_OPS))
+def test_pq_family_refuses_indivisible_dim(spark, op):
+    """Every PQ operator and trainer splits d into m equal subspaces, so
+    a 6-d corpus with m=4 is refused by name before any plan is built."""
+    from sentinel_landsat_database_creation_spark.operators import (
+        similarity as sim,
+    )
+
+    vecs = [(i, [float(i + j) for j in range(6)]) for i in range(4)]
+    e = spark.createDataFrame(vecs, "vec_id long, embedding array<float>")
+    coarse = [(0, [0] * 6, 1)]
+    books = [(s, 0, [0]) for s in range(4)]
+    with pytest.raises(ValueError, match="dim 6 not divisible by m=4"):
+        _PQ_OPS[op](sim, e, coarse, books)
+
+
+def test_pq_topk_empty_corpus_is_named(spark):
+    """An empty corpus has no dimension to split into subspaces: the
+    probe names the empty input instead of failing on a missing row."""
+    from sentinel_landsat_database_creation_spark.operators.similarity import (
+        pq_topk,
+    )
+
+    e = spark.createDataFrame([], "vec_id long, embedding array<float>")
+    with pytest.raises(ValueError, match="embeddings is empty"):
+        pq_topk(e, e)
+
+
 def test_train_centroids_distributed_matches_driver_path(spark):
     """The distributed state recurrence is value-identical to the
     collected-literal path on every fixture shape the driver path is
